@@ -46,7 +46,6 @@ def main() -> None:
     from forex_feature_generator_spark import synth
     from forex_feature_generator_spark.engine import bars as ebars
     from forex_feature_generator_spark.engine import normalize as enorm
-    from forex_feature_generator_spark.engine import pipeline as epipe
     from forex_feature_generator_spark.engine import windows as WIN
     from forex_feature_generator_spark.engine.session import get_spark
     import __spark_entry__ as em
@@ -91,31 +90,25 @@ def main() -> None:
         "ASOF JOIN.",
         explain_str(asof)))
 
-    # 4. feature pipeline end-to-end plan (label fusion — no broadcast)
-    out = epipe.run_pipeline(spark, ticks, cache_ticks=False)
-    plan4 = explain_str(out, max_lines=80)
-    assert "BroadcastExchange" not in plan4, "label side must not be broadcast"
-    sections.append((
-        "Feature pipeline (labels fused into the feature cogroup)",
-        "FlatMapCoGroupsInPandas for the label kernel feeds a NARROW "
-        "bars ⋈ labels sort-merge join (both sides one-row-per-bar), then the "
-        "feature cogroup passes the label through — no BroadcastExchange "
-        "anywhere (the label side is unbounded at 100 TB) and the 150-column "
-        "output is never shuffled.",
-        plan4))
-
-    # 4b. halo-chunked pipeline: bucketed replication joins
+    # 4. the feature builder: labels fused into the feature cogroup, halo
+    # replication through bucketed equi-joins (chunk_bars=500 so the
+    # 2000-tick sources span several chunks)
     from forex_feature_generator_spark.engine import skew as eskew
-    outc = eskew.run_pipeline_salted(spark, ticks, chunk_bars=500)
-    plan4b = explain_str(outc, max_lines=90)
-    assert "CartesianProduct" not in plan4b
+    out = eskew.run_pipeline_salted(spark, ticks, chunk_bars=500)
+    plan4 = explain_str(out, max_lines=90)
+    assert "CartesianProduct" not in plan4
     sections.append((
-        "Halo-chunked pipeline (bucketed range-replication)",
-        "Every replication join is an equi-join on (source, bucket) against "
-        "the exploded chunk-bounds ranges — O(1) candidate ranges per row "
-        "regardless of chunks-per-source, bounds stay distributed (no "
-        "toPandas), and the only broadcast is the tiny exploded bounds table.",
-        plan4b))
+        "Feature builder (labels fused, bucketed range-replication)",
+        "FlatMapCoGroupsInPandas for the label kernel feeds a NARROW "
+        "bars ⋈ labels join (both sides one-row-per-bar), then the feature "
+        "cogroup passes the label through — the label side is never "
+        "broadcast (it is unbounded at 100 TB) and the 150-column output is "
+        "never shuffled. Every replication join is an equi-join on (source, "
+        "bucket) against the exploded chunk-bounds ranges — O(1) candidate "
+        "ranges per row regardless of chunks-per-source, bounds stay "
+        "distributed (no toPandas), and the only broadcast is the tiny "
+        "exploded bounds table.",
+        plan4))
 
     # 4c. embedding near-dup: LSH bucket self-join, no cartesian product
     from forex_feature_generator_spark.ops import similarity as SIM
@@ -155,25 +148,6 @@ def main() -> None:
         "codegen'd CASE chain — zero exchanges, zero Python, scan pruned to "
         "(doc_id, text).",
         plan6))
-
-    # 7. bucketed bar ordering — no per-source sort over bars: windows run
-    # on (source, bucket) for the bar-sized side; only the one-row-per-bucket
-    # summary uses a per-source window
-    tiny = spark.createDataFrame(
-        synth.gen_ticks(n_sources=2, ticks_per_source=2000, hot_sources=0))
-    bb = ebars.finish_bars(
-        ebars.aggregate_bars_partial(ebars.with_seq(tiny), 1,
-                                     bucketed_order=True),
-        bucketed_order=True)
-    plan7 = explain_str(bb, max_lines=70)
-    sections.append((
-        "Bucketed bar ordering (bucketed_bar_order=True)",
-        "completion lead / bar_index / boundary lag over (source, day-bucket)"
-        " windows — every bar-sized sort task bounded by 1440 rows; the only "
-        "partitionBy(source) windows run on the one-row-per-bucket summary "
-        "(|bars|/1440). The per-source-window default remains for bench "
-        "scale (see engine/skew.py).",
-        plan7))
 
     # 8. token-budget curation — global ordered cumsum with ONE corpus
     # shuffle (range partition); no global single-partition window

@@ -1,12 +1,15 @@
 """Tumbling-window OHLC bar aggregation — Spark-first re-expression of
 BarAggregator.cs:34-141 (see oracle/bars.py for the sequential semantics).
 
-Plan shape (one shuffle on `source` for the tick-direction window, then a
-partial-aggregated groupBy on (source, bar_ts) whose shuffle moves only bars):
+Plan shape (the only tick-sized exchange is one partial-aggregated groupBy
+on (source, bar_ts); every window after it runs over bars):
 
-  ticks --window lag(bid) over (source, seq)--> tick direction
-        --groupBy(source, bar_ts): min_by/max_by/agg--> bars
+  ticks --groupBy(source, bar_ts): min_by/max_by/agg + in-bar tick pairs-->
+        partial bars (tick direction inside each bar)
+        --window lag(close) over (source, bar_ts)--> direction across bars
         --window lead over (source, bar_ts)--> completion tick + last-bar drop
+  M5 partial bars derive from the M1 partial bars (bars_from_lower), so the
+  tick stream is aggregated once for both timeframes.
 
 Reference semantics preserved:
   * bar_ts = integer floor of tick ts to the timeframe
@@ -25,92 +28,6 @@ from pyspark.sql import functions as F
 
 US_PER_MIN = 60_000_000
 
-# one day of M1 bars per ordering bucket (<=1440 rows per in-bucket sort)
-ORDER_BUCKET_MINUTES = 1440
-
-
-def with_ordered_neighbors(bars: DataFrame,
-                           prev_cols: dict[str, str] | None = None,
-                           next_cols: dict[str, str] | None = None,
-                           with_index: bool = False,
-                           bucket_minutes: int | None = None) -> DataFrame:
-    """lag / lead / row_number over (source, bar_ts_us) order WITHOUT a
-    per-source global sort — the bucketed-range escape hatch for the last
-    partitionBy(source) windows (SURVEY §4 axis B; engine/skew.py intro).
-
-    Shape: bars are windowed within (source, time-bucket) — every sort task
-    is bounded by the bucket size (<=1440 M1 bars/day) no matter how hot the
-    source — then a ONE-ROW-PER-BUCKET summary table (|bars|/1440) carries
-    each bucket's first/last values, cumulative row offsets, and the
-    neighbouring buckets' boundary values via small per-source windows; a
-    co-partitioned equi-join on (source, bucket) patches the bucket-edge rows
-    and adds the global index. prev/next source columns must be non-null
-    (first_seq / close are), so a null lag/lead means 'bucket edge'.
-
-    prev_cols / next_cols: {output_name: source_column}."""
-    prev_cols = prev_cols or {}
-    next_cols = next_cols or {}
-    # read at call time so tests can shrink the bucket to force boundaries
-    bucket_us = (bucket_minutes or ORDER_BUCKET_MINUTES) * US_PER_MIN
-    b = bars.withColumn("__bkt", F.floor(F.col("bar_ts_us") / F.lit(bucket_us)))
-    w = Window.partitionBy("source", "__bkt").orderBy("bar_ts_us")
-    proj = [F.lead(src).over(w).alias(f"__n_{out}")
-            for out, src in next_cols.items()]
-    proj += [F.lag(src).over(w).alias(f"__p_{out}")
-             for out, src in prev_cols.items()]
-    proj.append(F.row_number().over(w).alias("__rn"))
-    b = b.select("*", *proj)
-
-    first_struct = F.struct(*[F.col(src).alias(out)
-                              for out, src in next_cols.items()]) \
-        if next_cols else F.struct(F.lit(0).alias("__x"))
-    last_struct = F.struct(*[F.col(src).alias(out)
-                             for out, src in prev_cols.items()]) \
-        if prev_cols else F.struct(F.lit(0).alias("__x"))
-    summary = (bars
-               .withColumn("__bkt", F.floor(F.col("bar_ts_us") / F.lit(bucket_us)))
-               .groupBy("source", "__bkt")
-               .agg(F.count(F.lit(1)).alias("__cnt"),
-                    F.min_by(first_struct, "bar_ts_us").alias("__firstv"),
-                    F.max_by(last_struct, "bar_ts_us").alias("__lastv")))
-    # per-source windows over the SUMMARY table only: one row per
-    # source-bucket (~1/1440th of the bars), a bounded sort even for a
-    # pathological source
-    wb = Window.partitionBy("source").orderBy("__bkt")
-    summary = summary.select(
-        "source", "__bkt", "__cnt",
-        F.lead("__firstv").over(wb).alias("__nextb"),
-        F.lag("__lastv").over(wb).alias("__prevb"),
-        (F.sum("__cnt").over(wb) - F.col("__cnt")).alias("__offset"))
-
-    b = b.join(summary, ["source", "__bkt"])
-    for out in next_cols:
-        b = b.withColumn(out, F.when(F.col("__rn") == F.col("__cnt"),
-                                     F.col(f"__nextb.{out}"))
-                         .otherwise(F.col(f"__n_{out}")))
-    for out in prev_cols:
-        b = b.withColumn(out, F.when(F.col("__rn") == 1,
-                                     F.col(f"__prevb.{out}"))
-                         .otherwise(F.col(f"__p_{out}")))
-    if with_index:
-        b = b.withColumn("bar_index",
-                         (F.col("__offset") + F.col("__rn") - 1).cast("int"))
-    drop = (["__bkt", "__rn", "__cnt", "__nextb", "__prevb", "__offset"]
-            + [f"__n_{o}" for o in next_cols] + [f"__p_{o}" for o in prev_cols])
-    return b.drop(*drop)
-
-
-def with_tick_direction(ticks: DataFrame) -> DataFrame:
-    """Adds prev-bid up/down flags. `seq` is the per-source arrival order; use
-    `with_seq` first if the input does not carry one."""
-    w = Window.partitionBy("source").orderBy("seq")
-    prev = F.lag("bid").over(w)
-    return (
-        ticks
-        .withColumn("up_tick", (prev.isNotNull() & (F.col("bid") > prev)).cast("int"))
-        .withColumn("down_tick", (prev.isNotNull() & (F.col("bid") < prev)).cast("int"))
-    )
-
 
 def with_seq(ticks: DataFrame) -> DataFrame:
     w = Window.partitionBy("source").orderBy("ts")
@@ -126,9 +43,7 @@ def _pair_dir(arr: str, field: str, op: str):
         "x -> x))").cast("long")
 
 
-def aggregate_bars_partial(ticks: DataFrame, tf_minutes: int,
-                           bucketed_order: bool = False,
-                           burst_subbars: int | None = None) -> DataFrame:
+def aggregate_bars_partial(ticks: DataFrame, tf_minutes: int) -> DataFrame:
     """ALL bars including the final not-yet-completed one, carrying
     spread_sum and first_ts_us so higher timeframes can be DERIVED from this
     output (bars_from_lower) instead of re-scanning + re-shuffling the full
@@ -140,112 +55,43 @@ def aggregate_bars_partial(ticks: DataFrame, tf_minutes: int,
     of a bar's first tick IS the previous bar's last tick), but it removes
     the tick-level window's partitionBy(source): a 10x-hot source no longer
     becomes one giant sort task, and the only tick-sized exchange left in
-    the whole pipeline is this groupBy's partial-aggregated shuffle.
-    (A pre-existing up_tick/down_tick from with_tick_direction is ignored.)
-
-    HOT-BAR GUARD: the in-bar collect_list buffers ticks-per-bar structs in
-    one aggregation buffer — bounded for minute bars on sane feeds (bench
-    records max_ticks_per_bar), but a burst source cramming millions of
-    ticks into ONE bar balloons it. burst_subbars=K switches to a TWO-LEVEL
-    fold: ticks first aggregate into (bar, sub) groups of <=K ticks (buffer
-    bounded by K), then the per-sub partials compose into the bar — in-sub
-    directions sum, sub-boundary directions come from consecutive subs'
-    first/last bids (one struct per sub, <=ticks/K of them). Bit-identical
-    (tests/test_bars.py burst-bar test)."""
+    the whole pipeline is this groupBy's partial-aggregated shuffle."""
     tf_us = tf_minutes * US_PER_MIN
     # cast: accepts both session-tz TIMESTAMP and parquet TIMESTAMP_NTZ
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     bar_ts = (us - (us % F.lit(tf_us))).alias("bar_ts_us")
     spread = F.col("ask") - F.col("bid")
-    if burst_subbars:
-        sub = (
-            ticks
-            .withColumn("bar_ts_us", bar_ts)
-            .withColumn("__sub", F.floor(F.col("seq") / F.lit(burst_subbars)))
-            .groupBy("source", "bar_ts_us", "__sub")
-            .agg(
-                F.min_by("bid", "seq").alias("open"),
-                F.max("bid").alias("high"),
-                F.min("bid").alias("low"),
-                F.max_by("bid", "seq").alias("close"),
-                F.count(F.lit(1)).alias("tick_volume"),
-                F.sort_array(F.collect_list(F.struct("seq", "bid"))).alias("__tb"),
-                F.sum(spread).alias("spread_sum"),
-                F.max(spread).alias("max_spread"),
-                F.min(spread).alias("min_spread"),
-                F.min("seq").alias("first_seq"),
-                F.min(F.unix_micros(F.col("ts").cast("timestamp"))).alias("first_ts_us"),
-            )
-            .withColumn("__up_in", _pair_dir("__tb", "bid", ">"))
-            .withColumn("__down_in", _pair_dir("__tb", "bid", "<"))
-            .drop("__tb"))
-        g = (
-            sub.groupBy("source", "bar_ts_us")
-            .agg(
-                F.min_by("open", "first_seq").alias("open"),
-                F.max("high").alias("high"),
-                F.min("low").alias("low"),
-                F.max_by("close", "first_seq").alias("close"),
-                F.sum("tick_volume").alias("tick_volume"),
-                # one small struct per sub: its first/last bid in seq order
-                F.sort_array(F.collect_list(
-                    F.struct("first_seq", "open", "close"))).alias("__sb"),
-                F.sum("__up_in").alias("__up_sum"),
-                F.sum("__down_in").alias("__down_sum"),
-                F.sum("spread_sum").alias("spread_sum"),
-                F.max("max_spread").alias("max_spread"),
-                F.min("min_spread").alias("min_spread"),
-                F.min("first_seq").alias("first_seq"),
-                F.min("first_ts_us").alias("first_ts_us"),
-            )
-            # sub-boundary pairs: next sub's first bid vs this sub's last bid
-            .withColumn("__up_in", F.col("__up_sum") + F.expr(
-                "size(filter(zip_with(slice(__sb, 2, size(__sb) - 1), "
-                "slice(__sb, 1, size(__sb) - 1), (c, p) -> c.open > p.close), "
-                "x -> x))").cast("long"))
-            .withColumn("__down_in", F.col("__down_sum") + F.expr(
-                "size(filter(zip_with(slice(__sb, 2, size(__sb) - 1), "
-                "slice(__sb, 1, size(__sb) - 1), (c, p) -> c.open < p.close), "
-                "x -> x))").cast("long"))
-            .drop("__sb", "__up_sum", "__down_sum"))
-    else:
-        g = (
-            ticks
-            .withColumn("bar_ts_us", bar_ts)
-            .groupBy("source", "bar_ts_us")
-            .agg(
-                F.min_by("bid", "seq").alias("open"),
-                F.max("bid").alias("high"),
-                F.min("bid").alias("low"),
-                F.max_by("bid", "seq").alias("close"),
-                F.count(F.lit(1)).alias("tick_volume"),
-                F.sort_array(F.collect_list(F.struct("seq", "bid"))).alias("__tb"),
-                F.sum(spread).alias("spread_sum"),
-                F.max(spread).alias("max_spread"),
-                F.min(spread).alias("min_spread"),
-                F.min("seq").alias("first_seq"),
-                F.min(F.unix_micros(F.col("ts").cast("timestamp"))).alias("first_ts_us"),
-            )
-            .withColumn("__up_in", _pair_dir("__tb", "bid", ">"))
-            .withColumn("__down_in", _pair_dir("__tb", "bid", "<"))
-            .drop("__tb"))
+    g = (
+        ticks
+        .withColumn("bar_ts_us", bar_ts)
+        .groupBy("source", "bar_ts_us")
+        .agg(
+            F.min_by("bid", "seq").alias("open"),
+            F.max("bid").alias("high"),
+            F.min("bid").alias("low"),
+            F.max_by("bid", "seq").alias("close"),
+            F.count(F.lit(1)).alias("tick_volume"),
+            F.sort_array(F.collect_list(F.struct("seq", "bid"))).alias("__tb"),
+            F.sum(spread).alias("spread_sum"),
+            F.max(spread).alias("max_spread"),
+            F.min(spread).alias("min_spread"),
+            F.min("seq").alias("first_seq"),
+            F.min(F.unix_micros(F.col("ts").cast("timestamp"))).alias("first_ts_us"),
+        )
+        .withColumn("__up_in", _pair_dir("__tb", "bid", ">"))
+        .withColumn("__down_in", _pair_dir("__tb", "bid", "<"))
+        .drop("__tb"))
     # boundary: the bar's first tick vs the previous bar's close (the very
-    # first tick of a source has no direction — the _lastBid == 0 guard).
-    # bucketed_order replaces the per-source lag window with the bounded
-    # bucket-window + boundary-patch form (with_ordered_neighbors).
-    if bucketed_order:
-        g = with_ordered_neighbors(g, prev_cols={"__prev_close": "close"})
-        prev_close = F.col("__prev_close")
-    else:
-        w = Window.partitionBy("source").orderBy("bar_ts_us")
-        prev_close = F.lag("close").over(w)
+    # first tick of a source has no direction — the _lastBid == 0 guard)
+    w = Window.partitionBy("source").orderBy("bar_ts_us")
+    prev_close = F.lag("close").over(w)
     b_up = F.when(prev_close.isNotNull() & (F.col("open") > prev_close),
                   F.lit(1)).otherwise(F.lit(0))
     b_down = F.when(prev_close.isNotNull() & (F.col("open") < prev_close),
                     F.lit(1)).otherwise(F.lit(0))
     return (g.withColumn("up", (F.col("__up_in") + b_up).cast("long"))
             .withColumn("down", (F.col("__down_in") + b_down).cast("long"))
-            .drop("__up_in", "__down_in", "__prev_close"))
+            .drop("__up_in", "__down_in"))
 
 
 def bars_from_lower(partial: DataFrame, mult_minutes: int) -> DataFrame:
@@ -278,23 +124,10 @@ def bars_from_lower(partial: DataFrame, mult_minutes: int) -> DataFrame:
     )
 
 
-def finish_bars(partial: DataFrame, bucketed_order: bool = False) -> DataFrame:
+def finish_bars(partial: DataFrame) -> DataFrame:
     """Completion semantics over partial bars: a bar completes when a later
     bar's first tick exists (BarAggregator.cs:39-56), so the final partial
-    bar per source is dropped; adds bar_index and the avg spread.
-
-    bucketed_order=True computes the lead/row_number via the bounded
-    bucket-window form (with_ordered_neighbors) — no per-source sort task."""
-    if bucketed_order:
-        b = with_ordered_neighbors(
-            partial,
-            next_cols={"completion_seq": "first_seq",
-                       "completion_ts_us": "first_ts_us"},
-            with_index=True)
-        return (b.withColumn("avg_spread",
-                             F.col("spread_sum") / F.col("tick_volume"))
-                .filter(F.col("completion_seq").isNotNull())
-                .drop("first_ts_us", "spread_sum"))
+    bar per source is dropped; adds bar_index and the avg spread."""
     w = Window.partitionBy("source").orderBy("bar_ts_us")
     return (
         partial
@@ -307,12 +140,12 @@ def finish_bars(partial: DataFrame, bucketed_order: bool = False) -> DataFrame:
     )
 
 
-def aggregate_bars(ticks_dir: DataFrame, tf_minutes: int) -> DataFrame:
-    """ticks_dir: output of with_tick_direction. Returns COMPLETED bars:
+def aggregate_bars(ticks: DataFrame, tf_minutes: int) -> DataFrame:
+    """ticks: (source, ts, bid, ask, seq). Returns COMPLETED bars:
     (source, bar_ts_us, open, high, low, close, tick_volume, up, down,
      max_spread, min_spread, first_seq, avg_spread, completion_seq,
      completion_ts_us, bar_index)."""
-    return finish_bars(aggregate_bars_partial(ticks_dir, tf_minutes))
+    return finish_bars(aggregate_bars_partial(ticks, tf_minutes))
 
 
 def market_state(m5_bars: DataFrame, out_col: str = "market_state") -> DataFrame:
@@ -336,19 +169,3 @@ def market_state(m5_bars: DataFrame, out_col: str = "market_state") -> DataFrame
         .when((cur_vol < avg_vol * 0.5) & (rng < avg_rng * 0.5), F.lit("LowActivity"))
         .otherwise(F.lit("Normal")))
     return m5_bars.withColumn(out_col, state)
-
-
-def build_bars(ticks: DataFrame, timeframes=(1, 5)) -> dict[int, DataFrame]:
-    """All timeframes branch off ONE tick-sized pass: the finest timeframe's
-    partial bars are aggregated once, coarser ones derive from them."""
-    td = with_tick_direction(ticks)
-    base_tf = min(timeframes)
-    base = aggregate_bars_partial(td, base_tf)
-    out = {}
-    for tf in timeframes:
-        if tf == base_tf:
-            out[tf] = finish_bars(base)
-        else:
-            assert tf % base_tf == 0, (tf, base_tf)
-            out[tf] = finish_bars(bars_from_lower(base, tf))
-    return out

@@ -227,11 +227,12 @@ def compute_labels(entry_seq: np.ndarray, bid: np.ndarray, ask: np.ndarray,
 def labels_for_source(emissions: pd.DataFrame, ticks: pd.DataFrame,
                       cfg: LabelConfig | None = None,
                       with_metadata: bool = False) -> pd.DataFrame:
-    """emissions: (ts_us, completion_seq); ticks: (seq, bid, ask) one source.
-    with_metadata adds the full LabelResult fields next to the label."""
+    """emissions: (ts_us, completion_seq); ticks: (seq, bid, ask), one
+    source's contiguous seq range (a whole source, or a chunk with its label
+    halo). with_metadata adds the full LabelResult fields next to the label."""
     t = ticks.sort_values("seq")
     res = compute_labels(
-        emissions["completion_seq"].to_numpy("int64"),
+        emissions["completion_seq"].to_numpy("int64") - int(t["seq"].iloc[0]),
         t["bid"].to_numpy("float64"), t["ask"].to_numpy("float64"), cfg,
         return_metadata=with_metadata)
     if with_metadata:

@@ -1,18 +1,7 @@
-"""End-to-end Spark pipeline (SURVEY §7.1):
-
-ticks → [seq/secondary sort] → tick-direction window → M1/M5 tumbling bars
-      → cogroup(emissions, ticks).applyInPandas labels (Arrow, per source)
-      → labels joined onto the NARROW m1 bar stream (bars ⋈ 4-column labels)
-      → cogroup(m1+label, M5).applyInPandas feature kernel → 150-column output
-
-Shuffle budget: one exchange on `source` feeds the tick-direction window and
-both bar aggregations (partial aggregation map-side); labels are fused into
-the feature cogroup by joining them onto the bar stream BEFORE the kernel, so
-the wide 150-column output is never shuffled, broadcast, or re-joined
-(the label side is one row per emission — unbounded at 100 TB, so a broadcast
-there would be a driver-OOM scale killer; the bars⋈labels join is
-narrow⋈narrow and AQE picks the strategy). For hot sources see engine/skew.py
-(salted halo-chunking — the default execution path in spark_submit_main)."""
+"""Shared pieces of the feature builder (engine/skew.py, SURVEY §7.1): the
+output schemas, the label pass-through of the feature kernel, the scoped
+self-join override the builder's plan construction runs under, and the
+calculator column selection."""
 
 from __future__ import annotations
 
@@ -20,18 +9,18 @@ from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..oracle.labels import LabelConfig
 from ..oracle.pipeline import FEATURE_NAMES
-from . import bars as ebars
-from .features import compute_features_pdf, WARMUP_BARS
-from .labels import labels_for_source
 
 FEATURES_SCHEMA = ("source string, ts_us long, timestamp long, completion_seq long, "
                    + ", ".join(f"`{c}` double" for c in FEATURE_NAMES))
 FEATURES_LABELED_SCHEMA = FEATURES_SCHEMA + ", label int"
 LABELS_SCHEMA = "source string, ts_us long, label int"
+LABEL_META_SCHEMA = (
+    "source string, ts_us long, label int, confidence double, "
+    "long_profit_pips double, short_profit_pips double, mae_pips double, "
+    "mfe_pips double, time_to_target int, risk_reward double, "
+    "quality_score double")
 
 
 def attach_label(out, m1_pdf):
@@ -64,7 +53,7 @@ def unambiguous_self_join(spark: SparkSession):
     dataset-id heuristic flags the fusion join and the cogroups as potential
     self-join ambiguities even though each side carries fresh applyInPandas /
     aggregation attributes and resolution is well-defined (verified by
-    tests/test_skew.py plain-vs-salted equivalence). The heuristic fires only
+    tests/test_skew.py chunk-size invariance). The heuristic fires only
     at Dataset construction time — downstream analysis of already-built plans
     does not re-run it — so restoring on exit leaves the session's safety net
     intact for every other query (asserted in test_skew)."""
@@ -75,122 +64,6 @@ def unambiguous_self_join(spark: SparkSession):
         yield
     finally:
         spark.conf.set(key, prev)
-
-
-def _features_fn(warmup_bars: int):
-    def fn(key, m1_pdf, m5_pdf):
-        out = compute_features_pdf(m1_pdf, m5_pdf, warmup_bars=warmup_bars)
-        out = out.drop(columns=["bar_index"])
-        out["source"] = key[0]
-        return attach_label(out, m1_pdf)
-    return fn
-
-
-def _labels_fn(cfg: LabelConfig):
-    def fn(key, emissions_pdf, ticks_pdf):
-        if emissions_pdf.empty or ticks_pdf.empty:
-            return pd.DataFrame({"source": pd.Series(dtype="object"),
-                                 "ts_us": pd.Series(dtype="int64"),
-                                 "label": pd.Series(dtype="int32")})
-        out = labels_for_source(emissions_pdf, ticks_pdf, cfg)
-        out.insert(0, "source", key[0])
-        out["label"] = out["label"].astype("int32")
-        return out
-    return fn
-
-
-def run_pipeline(spark: SparkSession, ticks: DataFrame,
-                 warmup_bars: int = WARMUP_BARS,
-                 label_cfg: LabelConfig | None = None,
-                 cache_ticks: bool = True,
-                 bucketed_bar_order: bool = False,
-                 burst_subbars: int | None = None) -> DataFrame:
-    """ticks: (source, ts, bid, ask[, seq]). Returns the feature+label rows:
-    (source, ts_us, <148 features>, label, timestamp)."""
-    cfg = label_cfg or LabelConfig()
-    if "seq" not in ticks.columns:
-        ticks = ebars.with_seq(ticks)
-    if cache_ticks:
-        ticks = ticks.persist()
-
-    # Everything below derives from the one tick scan by design, so the plan
-    # construction (fusion join + cogroups) runs under the scoped self-join-
-    # heuristic override — restored before this function returns.
-    with unambiguous_self_join(spark):
-        # one tick-sized pass: direction is computed inside the bar groupBy
-        # (no per-source tick sort), and M5 derives from the partial M1 bars
-        # (exact field composition, engine/bars.py::bars_from_lower) instead
-        # of a second full-tick window + shuffle
-        base = ebars.aggregate_bars_partial(
-            ticks, 1, bucketed_order=bucketed_bar_order,
-            burst_subbars=burst_subbars).persist()
-        m1 = ebars.finish_bars(base, bucketed_order=bucketed_bar_order)
-        m5 = ebars.finish_bars(ebars.bars_from_lower(base, 5),
-                               bucketed_order=bucketed_bar_order)
-
-        emissions = (m1.filter(F.col("bar_index") >= warmup_bars)
-                     .select("source", F.col("bar_ts_us").alias("ts_us"),
-                             "completion_seq"))
-        labels = (
-            emissions.groupBy("source")
-            .cogroup(ticks.select("source", "seq", "bid", "ask").groupBy("source"))
-            .applyInPandas(_labels_fn(cfg), schema=LABELS_SCHEMA)
-        )
-
-        # Fuse labels into the feature cogroup: join the 3-column label rows
-        # onto the NARROW bar stream (bars ⋈ labels, both one-row-per-bar),
-        # then let the kernel pass the label through — the wide 150-column
-        # output is never shuffled and the unbounded label side is never
-        # broadcast.
-        m1l = m1.join(labels.withColumnRenamed("ts_us", "bar_ts_us"),
-                      ["source", "bar_ts_us"], "left")
-        features = (
-            m1l.groupBy("source").cogroup(m5.groupBy("source"))
-            .applyInPandas(_features_fn(warmup_bars),
-                           schema=FEATURES_LABELED_SCHEMA)
-        )
-        return features.select("source", "ts_us", *FEATURE_NAMES, "label",
-                               "timestamp")
-
-
-LABEL_META_SCHEMA = (
-    "source string, ts_us long, label int, confidence double, "
-    "long_profit_pips double, short_profit_pips double, mae_pips double, "
-    "mfe_pips double, time_to_target int, risk_reward double, "
-    "quality_score double")
-
-
-def label_table(spark: SparkSession, ticks: DataFrame,
-                warmup_bars: int = WARMUP_BARS,
-                label_cfg: LabelConfig | None = None,
-                with_metadata: bool = True) -> DataFrame:
-    """Standalone label surface: (source, ts_us, label [, LabelResult
-    metadata]) — the full LabelGenerator.cs:17-27 output (confidence,
-    per-side profit pips, MAE/MFE, time-to-target, risk-reward, quality),
-    which the reference computes but never persists (Program.cs:323).
-    Same cogroup shape as run_pipeline's label stage."""
-    cfg = label_cfg or LabelConfig()
-    if "seq" not in ticks.columns:
-        ticks = ebars.with_seq(ticks)
-    m1 = ebars.aggregate_bars(ebars.with_tick_direction(ticks), 1)
-    emissions = (m1.filter(F.col("bar_index") >= warmup_bars)
-                 .select("source", F.col("bar_ts_us").alias("ts_us"),
-                         "completion_seq"))
-
-    def fn(key, emissions_pdf, ticks_pdf):
-        if emissions_pdf.empty or ticks_pdf.empty:
-            return pd.DataFrame(columns=[
-                c.split()[0] for c in LABEL_META_SCHEMA.split(", ")])
-        out = labels_for_source(emissions_pdf, ticks_pdf, cfg,
-                                with_metadata=True)
-        out.insert(0, "source", key[0])
-        return out
-
-    schema = LABEL_META_SCHEMA if with_metadata else LABELS_SCHEMA
-    fun = fn if with_metadata else _labels_fn(cfg)
-    return (emissions.groupBy("source")
-            .cogroup(ticks.select("source", "seq", "bid", "ask").groupBy("source"))
-            .applyInPandas(fun, schema=schema))
 
 
 # FeatureConfiguration equivalent (SURVEY §2.10): calculator enable/disable
@@ -216,9 +89,3 @@ def select_calculators(df: DataFrame, enabled: list[str]) -> DataFrame:
             if not c[:1].isdigit() or c.startswith(prefixes)]
     return df.select(*keep)
 
-
-def write_output(df: DataFrame, path: str, partition_by_source: bool = True) -> None:
-    w = df.write.mode("overwrite").option("compression", "snappy")
-    if partition_by_source:
-        w = w.partitionBy("source")
-    w.parquet(path)

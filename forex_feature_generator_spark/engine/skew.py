@@ -1,20 +1,36 @@
-"""Salted halo-chunking for hot sources (SURVEY §4 axis B) — the DEFAULT
-execution path (spark_submit_main).
+"""The feature builder: ticks -> M1/M5 bars -> 148 features + label per
+emission, halo-chunked (SURVEY §4 axis B). It is the one execution path for
+the CLI, run_resumable and the label surface.
+
+  ticks [+ seq] (persisted) -> partial M1 bars -> completed M1, M5 bars
+    (engine/bars.py: one tick-sized pass; M5 derives from the M1 partials)
+  -> chunk bounds: per (source, chunk of chunk_bars M1 bars) the bar range,
+     the tick range and the visible-M5 range
+  -> cogroup(emissions, haloed ticks) per chunk -> labels
+  -> labels joined onto the NARROW m1 bar stream
+  -> cogroup(haloed m1 + label, haloed m5) per chunk -> 150-column output
 
 Per-entity windows are order-dependent, so plain salting would corrupt them.
-Instead each hot source's bar stream is cut into fixed-size chunks that carry
-a read-only HALO of preceding state:
+Instead each source's bar stream is cut into fixed-size chunks that carry a
+read-only HALO of preceding state:
 
   * M1 halo: 620 bars = 499 (anchored window) + ~100 (deepest emission-state
     ring: regime duration walks 100 previous emissions) + slack
   * M5 halo: 620 visible M5 bars before the chunk's first emission, located
     exactly via an as-of count of completed M5 bars at the chunk boundary
-  * label halo: ticks up to completion_seq(last bar) + 600 forward ticks
+  * label halo: ticks up to completion_seq(last bar) + the label config's
+    max_future_ticks forward ticks
 
 Each chunk computes features/labels with full fidelity and EMITS only its own
-bar range, so results are bit-identical to the unsalted run (verified by
-tests/test_skew.py) while a 10x-hot source becomes ceil(n/chunk) parallel
-tasks instead of one straggler.
+bar range, so results do not depend on chunk_bars (tests/test_skew.py). A
+source with at most chunk_bars bars is a single chunk; a 10x-hot source
+becomes ceil(n/chunk) parallel tasks instead of one straggler.
+
+Shuffle budget: labels are fused into the feature cogroup by joining them
+onto the bar stream BEFORE the kernel, so the wide 150-column output is never
+shuffled, broadcast or re-joined (the label side is one row per emission —
+unbounded at 100 TB, so a broadcast there would be a driver-OOM scale killer;
+the bars⋈labels join is narrow⋈narrow and AQE picks the strategy).
 
 Scale shape of the replication joins: a naive equi-join on `source` followed
 by a range filter generates |rows| x |chunks-per-source| candidates — at
@@ -31,22 +47,14 @@ counts <= 110) only affect bar indices < ~560, which always live in chunk 0
 with a complete prefix — later chunks pass every gate, and their ring-buffer
 reads stay inside the halo.
 
-Residual per-source work: NOTHING tick-sized sorts per source anymore
-(direction lives in the bar groupBy); the remaining partitionBy(source)
-windows (bar completion/index, chunk bounds) run over BARS — 1-3 orders of
-magnitude smaller than ticks (a decade of minute bars is ~5M narrow rows,
-one bounded sort task). If even that binds, pass bucketed_bar_order=True:
-engine/bars.py::with_ordered_neighbors computes the completion lead /
-bar_index / boundary lag through day-bucket windows plus a per-bucket
-boundary patch — every sort task bounded by 1440 rows regardless of source
-heat, bit-identical results (tests/test_bars.py, test_skew.py). Default off:
-at bench scale the extra join/shuffle measures ~20% slower than the
-per-source window, which is cheap there; flip it when a single source's bar
-count makes one sort task the straggler."""
+Residual per-source work: nothing tick-sized sorts per source (direction
+lives in the bar groupBy); the remaining partitionBy(source) windows (bar
+boundary direction, completion/index, chunk bounds) run over BARS — 1-3
+orders of magnitude smaller than ticks (a decade of minute bars is ~5M narrow
+rows, one bounded sort task)."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,14 +62,14 @@ from ..oracle.labels import LabelConfig
 from ..oracle.pipeline import FEATURE_NAMES
 from . import bars as ebars
 from .features import compute_features_pdf, WARMUP_BARS
-from .labels import compute_labels
-from .pipeline import (FEATURES_LABELED_SCHEMA, LABELS_SCHEMA, attach_label,
-                       unambiguous_self_join)
+from .labels import labels_for_source
+from .pipeline import (FEATURES_LABELED_SCHEMA, LABEL_META_SCHEMA,
+                       LABELS_SCHEMA, attach_label, unambiguous_self_join)
 
 M1_HALO = 620
 M5_HALO = 620
-LABEL_HALO = 600
 TICK_BUCKET = 1 << 16
+CHUNK_BARS = 4000
 
 
 def _chunk_bounds(m1: DataFrame, m5: DataFrame, chunk_bars: int) -> DataFrame:
@@ -79,15 +87,14 @@ def _chunk_bounds(m1: DataFrame, m5: DataFrame, chunk_bars: int) -> DataFrame:
     from .windows import asof_join_backward
     m5b = m5.select("source", F.col("completion_seq").alias("m5_comp"),
                     F.col("bar_index").alias("m5_idx"))
-    start = (asof_join_backward(c.select("source", "chunk", "comp_lo"),
-                                m5b, ["source"], "comp_lo", "m5_comp", ["m5_idx"])
-             .select("source", "chunk",
-                     (F.coalesce(F.col("m5_idx") + 1, F.lit(0))).alias("m5c_start")))
-    end = (asof_join_backward(c.select("source", "chunk", "comp_hi"),
-                              m5b, ["source"], "comp_hi", "m5_comp", ["m5_idx"])
-           .select("source", "chunk",
-                   (F.coalesce(F.col("m5_idx") + 1, F.lit(0))).alias("m5c_end")))
-    return (c.join(start, ["source", "chunk"]).join(end, ["source", "chunk"]))
+
+    def m5_count(comp: str, name: str) -> DataFrame:
+        return (asof_join_backward(c.select("source", "chunk", comp),
+                                   m5b, ["source"], comp, "m5_comp", ["m5_idx"])
+                .select("source", "chunk",
+                        F.coalesce(F.col("m5_idx") + 1, F.lit(0)).alias(name)))
+    return (c.join(m5_count("comp_lo", "m5c_start"), ["source", "chunk"])
+            .join(m5_count("comp_hi", "m5c_end"), ["source", "chunk"]))
 
 
 def _bucketed(bounds_sel: DataFrame, lo: str, hi: str, bucket: int) -> DataFrame:
@@ -98,102 +105,89 @@ def _bucketed(bounds_sel: DataFrame, lo: str, hi: str, bucket: int) -> DataFrame
                                     F.floor(F.col(hi) / F.lit(bucket)))))
 
 
-def _features_chunk_fn(warmup_bars: int):
+def _features_fn(warmup_bars: int):
+    """Feature kernel over one group's bars: a halo chunk that emits from its
+    `emit_lo` bar, or a whole series with emit_lo = 0 (engine/tokens.py).
+    A label column on the bar stream passes through (attach_label)."""
     def fn(key, m1_pdf, m5_pdf):
-        source, chunk = key[0], key[1]
-        if m1_pdf.empty:
-            return pd.DataFrame(columns=["source", "ts_us", "timestamp",
-                                         "completion_seq"] + FEATURE_NAMES + ["label"])
-        m1_pdf = m1_pdf.sort_values("bar_index").reset_index(drop=True)
-        m5_pdf = m5_pdf.sort_values("bar_index").reset_index(drop=True)
         lo = int(m1_pdf["emit_lo"].iloc[0])
         base = int(m1_pdf["bar_index"].min())
         m5_base = int(m5_pdf["bar_index"].min()) if len(m5_pdf) else 0
         out = compute_features_pdf(
             m1_pdf, m5_pdf, warmup_bars=warmup_bars,
             bar_index_offset=base, m5_index_offset=m5_base)
-        out = (out[out["bar_index"] >= lo] if len(out) else out).drop(
-            columns=["bar_index"])
-        out["source"] = source
+        out = out[out["bar_index"] >= lo].drop(columns=["bar_index"])
+        out["source"] = key[0]
         return attach_label(out, m1_pdf)
     return fn
 
 
-def _labels_chunk_fn(cfg: LabelConfig):
+def _labels_fn(cfg: LabelConfig, with_metadata: bool):
     def fn(key, em_pdf, ticks_pdf):
-        source = key[0]
-        if em_pdf.empty or ticks_pdf.empty:
-            return pd.DataFrame({"source": pd.Series(dtype="object"),
-                                 "ts_us": pd.Series(dtype="int64"),
-                                 "label": pd.Series(dtype="int32")})
-        t = ticks_pdf.sort_values("seq")
-        seq0 = int(t["seq"].min())
-        labels = compute_labels(
-            em_pdf["completion_seq"].to_numpy("int64") - seq0,
-            t["bid"].to_numpy("float64"), t["ask"].to_numpy("float64"), cfg)
-        return pd.DataFrame({"source": source,
-                             "ts_us": em_pdf["ts_us"].to_numpy("int64"),
-                             "label": labels.astype("int32")})
+        out = labels_for_source(em_pdf, ticks_pdf, cfg,
+                                with_metadata=with_metadata)
+        out.insert(0, "source", key[0])
+        return out
     return fn
 
 
-def run_pipeline_salted(spark: SparkSession, ticks: DataFrame,
-                        chunk_bars: int = 4000,
-                        warmup_bars: int = WARMUP_BARS,
-                        label_cfg: LabelConfig | None = None,
-                        cache_ticks: bool = True,
-                        bucketed_bar_order: bool = False,
-                        burst_subbars: int | None = None) -> DataFrame:
-    """Halo-chunked variant of engine.pipeline.run_pipeline — identical
-    results, hot sources split into bounded parallel tasks.
-
-    cache_ticks: the tick table is consumed twice (bar pass + label halo
-    replication). Caching wins at bench scale, but at 100 TB a full-table
-    persist churns the block store — pass False there and let both consumers
-    re-scan the columnar source (pruned to 5 columns)."""
-    cfg = label_cfg or LabelConfig()
+def _bars_and_labels(spark: SparkSession, ticks: DataFrame, chunk_bars: int,
+                     warmup_bars: int, cfg: LabelConfig,
+                     with_metadata: bool):
+    """The builder's bar stage, chunk bounds and chunked label cogroup.
+    Everything derives from the one tick scan, so callers build it under
+    unambiguous_self_join. Returns (m1, m5, bounds, labels)."""
     if "seq" not in ticks.columns:
         ticks = ebars.with_seq(ticks)
-    if cache_ticks:
-        ticks = ticks.persist()
+    # consumed twice: the bar pass and the label halo replication
+    ticks = ticks.persist()
+    base = ebars.aggregate_bars_partial(ticks, 1).persist()
+    m1 = ebars.finish_bars(base).persist()
+    m5 = ebars.finish_bars(ebars.bars_from_lower(base, 5)).persist()
+
+    # The bounds table is tiny (one row per source-chunk) and STAYS
+    # distributed. The RDD round-trip breaks the shared lineage with m1/m5
+    # (fresh attribute ids) so the replication joins cannot resolve the two
+    # sides to the same attributes; persist so it computes once.
+    raw_bounds = _chunk_bounds(m1, m5, chunk_bars)
+    bounds = spark.createDataFrame(raw_bounds.rdd, raw_bounds.schema).persist()
+
+    # one cogroup over (emissions, haloed ticks) per chunk
+    emissions = (m1.filter(F.col("bar_index") >= warmup_bars)
+                 .withColumn("chunk", (F.col("bar_index") / F.lit(chunk_bars)).cast("long"))
+                 .select("source", "chunk", F.col("bar_ts_us").alias("ts_us"),
+                         "completion_seq"))
+    tick_ranges = _bucketed(
+        bounds.select("source", "chunk",
+                      F.col("comp_lo").alias("t_lo"),
+                      (F.col("comp_hi") + F.lit(cfg.max_future_ticks)).alias("t_hi")),
+        "t_lo", "t_hi", TICK_BUCKET)
+    ticks_r = (ticks.select("source", "seq", "bid", "ask")
+               .withColumn("bkt", F.floor(F.col("seq") / F.lit(TICK_BUCKET)))
+               .join(tick_ranges, ["source", "bkt"])
+               .filter((F.col("seq") >= F.col("t_lo")) & (F.col("seq") <= F.col("t_hi")))
+               .drop("bkt", "t_lo", "t_hi"))
+    labels = (emissions.groupBy("source", "chunk")
+              .cogroup(ticks_r.groupBy("source", "chunk"))
+              .applyInPandas(_labels_fn(cfg, with_metadata),
+                             schema=LABEL_META_SCHEMA if with_metadata
+                             else LABELS_SCHEMA))
+    return m1, m5, bounds, labels
+
+
+def run_pipeline_salted(spark: SparkSession, ticks: DataFrame,
+                        chunk_bars: int = CHUNK_BARS,
+                        warmup_bars: int = WARMUP_BARS,
+                        label_cfg: LabelConfig | None = None) -> DataFrame:
+    """ticks: (source, ts, bid, ask[, seq]). Returns the feature+label rows:
+    (source, ts_us, <148 features>, label, timestamp)."""
+    cfg = label_cfg or LabelConfig()
     # the whole plan construction derives from one tick scan, so it runs
     # under the scoped self-join-heuristic override (engine/pipeline.py) —
     # restored before this function returns
     with unambiguous_self_join(spark):
-        # one tick-sized pass (see engine/pipeline.py): direction inside the bar
-        # groupBy, M5 derived from the persisted partial M1 bars
-        base = ebars.aggregate_bars_partial(
-            ticks, 1, bucketed_order=bucketed_bar_order,
-            burst_subbars=burst_subbars).persist()
-        m1 = ebars.finish_bars(base, bucketed_order=bucketed_bar_order).persist()
-        m5 = ebars.finish_bars(ebars.bars_from_lower(base, 5),
-                               bucketed_order=bucketed_bar_order).persist()
-
-        # The bounds table is tiny (one row per source-chunk) and STAYS
-        # distributed. The RDD round-trip breaks the shared lineage with m1/m5
-        # (fresh attribute ids) so the replication joins below cannot resolve the
-        # two sides to the same attributes; persist so it computes once.
-        raw_bounds = _chunk_bounds(m1, m5, chunk_bars)
-        bounds = spark.createDataFrame(raw_bounds.rdd, raw_bounds.schema).persist()
-
-        # --- labels first: one cogroup over (emissions, haloed ticks) per chunk
-        emissions = (m1.filter(F.col("bar_index") >= warmup_bars)
-                     .withColumn("chunk", (F.col("bar_index") / F.lit(chunk_bars)).cast("long"))
-                     .select("source", "chunk", F.col("bar_ts_us").alias("ts_us"),
-                             "completion_seq"))
-        tick_ranges = _bucketed(
-            bounds.select("source", "chunk",
-                          F.col("comp_lo").alias("t_lo"),
-                          (F.col("comp_hi") + F.lit(LABEL_HALO)).alias("t_hi")),
-            "t_lo", "t_hi", TICK_BUCKET)
-        ticks_r = (ticks.select("source", "seq", "bid", "ask")
-                   .withColumn("bkt", F.floor(F.col("seq") / F.lit(TICK_BUCKET)))
-                   .join(tick_ranges, ["source", "bkt"])
-                   .filter((F.col("seq") >= F.col("t_lo")) & (F.col("seq") <= F.col("t_hi")))
-                   .drop("bkt", "t_lo", "t_hi"))
-        labels = (emissions.groupBy("source", "chunk")
-                  .cogroup(ticks_r.groupBy("source", "chunk"))
-                  .applyInPandas(_labels_chunk_fn(cfg), schema=LABELS_SCHEMA))
+        m1, m5, bounds, labels = _bars_and_labels(
+            spark, ticks, chunk_bars, warmup_bars, cfg, with_metadata=False)
 
         # fuse: labels joined onto the NARROW bar stream before replication, so
         # the wide feature output is never shuffled or broadcast (labels come out
@@ -228,7 +222,21 @@ def run_pipeline_salted(spark: SparkSession, ticks: DataFrame,
 
         features = (m1r.groupBy("source", "chunk")
                     .cogroup(m5r.groupBy("source", "chunk"))
-                    .applyInPandas(_features_chunk_fn(warmup_bars),
+                    .applyInPandas(_features_fn(warmup_bars),
                                    schema=FEATURES_LABELED_SCHEMA))
         return features.select("source", "ts_us", *FEATURE_NAMES, "label",
                                "timestamp")
+
+
+def label_table(spark: SparkSession, ticks: DataFrame,
+                warmup_bars: int = WARMUP_BARS,
+                label_cfg: LabelConfig | None = None) -> DataFrame:
+    """Standalone label surface: (source, ts_us, label, LabelResult
+    metadata) — the full LabelGenerator.cs:17-27 output (confidence,
+    per-side profit pips, MAE/MFE, time-to-target, risk-reward, quality),
+    which the reference computes but never persists (Program.cs:323).
+    The builder's own bar stage and chunked label cogroup."""
+    with unambiguous_self_join(spark):
+        return _bars_and_labels(spark, ticks, CHUNK_BARS, warmup_bars,
+                                label_cfg or LabelConfig(),
+                                with_metadata=True)[3]

@@ -25,7 +25,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import run_pipeline
 from .skew import run_pipeline_salted
 
 
@@ -75,11 +74,10 @@ class SnapshotLog:
 
 def run_resumable(spark: SparkSession, ticks: DataFrame, table_path: str,
                   batch_sources: int = 4, max_batches: int | None = None,
-                  inputs: str | None = None, chunked: bool = True,
-                  chunk_bars: int = 4000, **pipeline_kwargs) -> dict:
-    """Process per-source partitions in batches, committing a snapshot (with
-    lineage) after each batch. Re-running resumes from the latest snapshot.
-    Uses the halo-chunked pipeline by default (bounded memory per task).
+                  inputs: str | None = None) -> dict:
+    """Process per-source partitions in batches through the feature builder
+    (engine/skew.py), committing a snapshot (with lineage) after each batch.
+    Re-running resumes from the latest snapshot.
     Returns {"snapshots": n, "skipped": [...], "processed": {...}}."""
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     log = SnapshotLog(table_path)
@@ -98,11 +96,7 @@ def run_resumable(spark: SparkSession, ticks: DataFrame, table_path: str,
         batch = todo[i:i + batch_sources]
         t0 = time.time()
         sub = ticks.filter(F.col("source").isin(batch))
-        if chunked:
-            result = run_pipeline_salted(spark, sub, chunk_bars=chunk_bars,
-                                         **pipeline_kwargs)
-        else:
-            result = run_pipeline(spark, sub, **pipeline_kwargs)
+        result = run_pipeline_salted(spark, sub)
         (result.write.mode("overwrite").partitionBy("source")
          .option("compression", "snappy").parquet(table_path))
         # lineage counts from the just-written files (partition-pruned

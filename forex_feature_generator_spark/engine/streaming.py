@@ -23,7 +23,7 @@ module provides the streaming equivalents of the batch operators:
     micro-batch completes bars incrementally and runs the batch feature
     kernel (engine/features.py::compute_features_pdf) over tail+new with
     global index offsets, emitting exactly the new emissions. Replay parity
-    with run_pipeline is exact (tests/test_streaming.py). No foreachBatch,
+    with the batch builder is exact (tests/test_streaming.py). No foreachBatch,
     no snapshot table: state is the trailing window.
 
 All operators use event time only — no wall clock — so replaying a bounded
@@ -369,7 +369,7 @@ def streaming_features_stateful(ticks: DataFrame,
     a later tick arrives; up/down direction crosses bar AND batch
     boundaries), appends them to the tails, runs the batch kernel
     (compute_features_pdf) with global index offsets, and emits ONLY the
-    newly completed emissions — bit-identical to run_pipeline's feature
+    newly completed emissions — bit-identical to the batch builder's feature
     columns on replay. State is bounded (~2x620 bars x 10 scalars per
     source); the halo argument is the same as engine/skew.py's (absolute
     warm-up/run-count gates live below bar 560, which always precede any

@@ -15,7 +15,8 @@ Two feature surfaces:
      windows (JVM, whole-stage codegen).
   2. `full_features` — the 148 reference calculators over the derived bar
      series via the same cogrouped Arrow kernel as the tick pipeline
-     (M5-analog = 5-row tumbling aggregation on the derived minute clock).
+     (M5-analog = 5-row tumbling aggregation on the derived minute clock);
+     each source is one group that emits from bar 0.
 """
 
 from __future__ import annotations
@@ -23,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .features import compute_features_pdf
-from .pipeline import FEATURES_SCHEMA, _features_fn
+from .pipeline import FEATURES_SCHEMA
+from .skew import _features_fn
 from . import windows as WIN
 
 EPOCH_US = 1704153600000000  # 2024-01-02T00:00:00Z, matches synth.EPOCH
@@ -190,7 +191,7 @@ def full_features(seqs: DataFrame, warmup_bars: int = 260) -> DataFrame:
     """148 reference features over the derived bar series, joined back to the
     original rows; `tokens` byte-identical pass-through."""
     series = with_derived_series(seqs)
-    m1 = _derived_bars(series, 1)
+    m1 = _derived_bars(series, 1).withColumn("emit_lo", F.lit(0))
     m5 = _derived_bars(series, 5)
     feats = (m1.groupBy("source").cogroup(m5.groupBy("source"))
              .applyInPandas(_features_fn(warmup_bars), schema=FEATURES_SCHEMA))

@@ -245,8 +245,8 @@ def hot_shingle_stats(shingles_df: DataFrame,
     return df_counts.agg(
         F.max("df").alias("max_df"),
         F.sum((F.col("df") > hot_df).cast("long")).alias("n_hot"),
-        F.sum((F.col("df") * (F.col("df") - 1) / 2).cast("long"))
-        .alias("candidate_pairs"))
+        # integer `div`: a double product loses exactness past df ~1.3e8
+        F.sum(F.expr("df * (df - 1) div 2")).alias("candidate_pairs"))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,

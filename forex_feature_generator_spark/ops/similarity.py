@@ -9,6 +9,8 @@
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -294,6 +296,16 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float
     return rng.normal(size=(n_planes, dim)).tolist()
 
 
+def _double_sql(v) -> str:
+    """One `...D` SQL literal. The SQL parser has no NaN/inf literal (repr
+    would give `nanD`/`infD`, an opaque ParseException), so non-finite
+    values are refused here by name."""
+    v = float(v)
+    if not math.isfinite(v):
+        raise ValueError(f"non-finite value {v!r} cannot be a double literal")
+    return f"{v!r}D"
+
+
 def lit_doubles(vals: list[float]):
     """array<double> literal built in ONE py4j round-trip via F.expr.
     F.lit(list) (and F.array of F.lit) issues one JVM call per element —
@@ -301,14 +313,14 @@ def lit_doubles(vals: list[float]):
     r7 profile showed whole SECONDS of driver time spent there before any
     job ran. Python repr round-trips doubles exactly and Spark's `...D`
     literal parses back to the identical bits, so values are unchanged."""
-    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in vals) + ")")
+    return F.expr("array(" + ",".join(_double_sql(v) for v in vals) + ")")
 
 
 def lit_double_matrix(rows: list[list[float]]):
     """array<array<double>> literal in one py4j round-trip (see lit_doubles)."""
     return F.expr(
         "array(" + ",".join(
-            "array(" + ",".join(f"{float(v)!r}D" for v in r) + ")"
+            "array(" + ",".join(_double_sql(v) for v in r) + ")"
             for r in rows) + ")")
 
 

@@ -46,10 +46,6 @@ def main() -> None:
                          "broadcast pandas-UDF encoder automatically")
     ap.add_argument("--n-merges", type=int, default=1000,
                     help="--mode bpe-learn: number of merge rules to learn")
-    ap.add_argument("--no-chunking", action="store_true",
-                    help="disable the default halo-chunked execution (one "
-                         "unbounded pandas group per source — test/debug only)")
-    ap.add_argument("--chunk-bars", type=int, default=4000)
     ap.add_argument("--resume", action="store_true",
                     help="snapshot-manifest checkpoint/resume (per-partition lineage)")
     ap.add_argument("--batch-sources", type=int, default=8)
@@ -193,7 +189,7 @@ def main() -> None:
     elif args.mode == "labels":
         # full LabelResult surface (confidence/profits/MAE/MFE/tt/RR/quality)
         # — the reference computes these but persists only the label
-        out = epipe.label_table(spark, ticks, with_metadata=True)
+        out = eskew.label_table(spark, ticks)
         out.write.mode("overwrite").partitionBy("source").parquet(args.output)
         n = spark.read.parquet(args.output).count()
     elif args.resume:
@@ -213,12 +209,8 @@ def main() -> None:
             print(json.dumps({"skipped": "features (output exists)"}))
             n = spark.read.parquet(args.output).count()
         else:
-            if args.no_chunking:
-                out = epipe.run_pipeline(spark, ticks)
-            else:
-                # default: bounded memory per task regardless of source skew
-                out = eskew.run_pipeline_salted(spark, ticks,
-                                                chunk_bars=args.chunk_bars)
+            # halo-chunked: bounded memory per task regardless of source skew
+            out = eskew.run_pipeline_salted(spark, ticks)
             if args.calculators:
                 out = epipe.select_calculators(
                     out, [c.strip() for c in args.calculators.split(",")])

@@ -26,7 +26,7 @@ def oracle_bars_df(ticks: pd.DataFrame, tf: int) -> pd.DataFrame:
 def test_bars_match_oracle(spark, small_ticks):
     sdf = spark.createDataFrame(small_ticks)
     for tf in (1, 5):
-        got = (ebars.aggregate_bars(ebars.with_tick_direction(sdf), tf)
+        got = (ebars.aggregate_bars(sdf, tf)
                .orderBy("source", "bar_ts_us").toPandas())
         exp = oracle_bars_df(small_ticks, tf).sort_values(
             ["source", "bar_ts_us"]).reset_index(drop=True)
@@ -65,7 +65,7 @@ def _py_market_state(vol, high, low):
 
 def test_market_state(spark, small_ticks):
     sdf = spark.createDataFrame(small_ticks)
-    m5 = ebars.aggregate_bars(ebars.with_tick_direction(sdf), 5)
+    m5 = ebars.aggregate_bars(sdf, 5)
     got = (ebars.market_state(m5)
            .orderBy("source", "bar_ts_us")
            .select("source", "bar_ts_us", "market_state").toPandas())
@@ -78,82 +78,3 @@ def test_market_state(spark, small_ticks):
                                bars["high"].tolist(), bars["low"].tolist())
         assert list(g["market_state"]) == exp, src
 
-
-def test_bucketed_order_bit_identical(spark, small_ticks, monkeypatch):
-    """The bucketed (windowless) bar-ordering path must be bit-identical to
-    the per-source-window path, including across bucket boundaries — the
-    bucket is shrunk to 30 minutes so every source spans many buckets and
-    the boundary patches (next bucket's first_seq, previous bucket's close,
-    cumulative index offsets) are all exercised."""
-    monkeypatch.setattr(ebars, "ORDER_BUCKET_MINUTES", 30)
-    sdf = spark.createDataFrame(small_ticks)
-    for tf in (1, 5):
-        base_w = ebars.aggregate_bars_partial(sdf, tf)
-        base_b = ebars.aggregate_bars_partial(sdf, tf, bucketed_order=True)
-        a = (ebars.finish_bars(base_w)
-             .orderBy("source", "bar_ts_us").toPandas())
-        b = (ebars.finish_bars(base_b, bucketed_order=True)
-             .orderBy("source", "bar_ts_us").toPandas())
-        assert len(a) == len(b) > 50
-        b = b[a.columns]
-        for c in a.columns:
-            assert (a[c].to_numpy() == b[c].to_numpy()).all(), (tf, c)
-
-
-def test_bucketed_order_derived_m5(spark, small_ticks, monkeypatch):
-    """bars_from_lower + bucketed finish must also match (M5 derives from
-    bucketed partial M1 bars)."""
-    monkeypatch.setattr(ebars, "ORDER_BUCKET_MINUTES", 60)
-    sdf = spark.createDataFrame(small_ticks)
-    base_w = ebars.aggregate_bars_partial(sdf, 1)
-    base_b = ebars.aggregate_bars_partial(sdf, 1, bucketed_order=True)
-    a = (ebars.finish_bars(ebars.bars_from_lower(base_w, 5))
-         .orderBy("source", "bar_ts_us").toPandas())
-    b = (ebars.finish_bars(ebars.bars_from_lower(base_b, 5), bucketed_order=True)
-         .orderBy("source", "bar_ts_us").toPandas())
-    b = b[a.columns]
-    assert len(a) == len(b) > 10
-    for c in a.columns:
-        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
-
-
-def test_burst_bar_two_level_fold(spark):
-    """A burst bar (one minute holding ~100x the normal tick count) through
-    the two-level direction fold must equal the single-level path exactly —
-    the hot-bar guard: level-1 agg buffers are bounded by burst_subbars, so
-    a million-tick bar can no longer balloon one aggregation buffer."""
-    import pandas as pd
-    rng = np.random.default_rng(11)
-    # normal minutes: ~10 ticks; one burst minute: 5000 ticks
-    ts, bids = [], []
-    base = pd.Timestamp("2024-01-02")
-    for minute in range(40):
-        n = 5000 if minute == 20 else 10
-        offs = np.sort(rng.uniform(0, 59.9, n))
-        ts.extend(base + pd.Timedelta(minutes=minute)
-                  + pd.to_timedelta(offs, unit="s"))
-        bids.extend(1.1 + rng.normal(0, 1e-4, n).cumsum())
-    pdf = pd.DataFrame({"source": "s", "ts": pd.Series(ts).astype("datetime64[us]"),
-                        "bid": bids})
-    pdf["ask"] = pdf["bid"] + 1e-4
-    pdf["seq"] = np.arange(len(pdf))
-    sdf = spark.createDataFrame(pdf)
-
-    one = (ebars.aggregate_bars(sdf, 1)
-           .orderBy("bar_ts_us").toPandas())
-    two = (ebars.finish_bars(ebars.aggregate_bars_partial(
-               sdf, 1, burst_subbars=256))
-           .orderBy("bar_ts_us").toPandas())[one.columns]
-    assert len(one) == len(two) == 39
-    assert one["tick_volume"].max() == 5000
-    for c in one.columns:
-        assert (one[c].to_numpy() == two[c].to_numpy()).all(), c
-    # and the M5 derivation composes from the two-level partials too
-    m5_one = (ebars.finish_bars(ebars.bars_from_lower(
-                  ebars.aggregate_bars_partial(sdf, 1), 5))
-              .orderBy("bar_ts_us").toPandas())
-    m5_two = (ebars.finish_bars(ebars.bars_from_lower(
-                  ebars.aggregate_bars_partial(sdf, 1, burst_subbars=256), 5))
-              .orderBy("bar_ts_us").toPandas())[m5_one.columns]
-    for c in m5_one.columns:
-        assert (m5_one[c].to_numpy() == m5_two[c].to_numpy()).all(), c

@@ -131,7 +131,7 @@ def test_csv_multi_partition_dense_seq_labels(spark, tmp_path):
     between splits) would crash or silently mislabel. Full pipeline parity
     vs the same ticks loaded as one in-memory DataFrame."""
     from forex_feature_generator_spark import synth
-    from forex_feature_generator_spark.engine import pipeline as epipe
+    from forex_feature_generator_spark.engine import skew as eskew
 
     ticks = synth.gen_ticks(n_sources=1, ticks_per_source=3400,
                             hot_sources=0, seed=7, mean_gap_s=6.0)
@@ -150,7 +150,7 @@ def test_csv_multi_partition_dense_seq_labels(spark, tmp_path):
         seqs = sorted(r["seq"] for r in loaded.select("seq").collect())
         assert seqs == list(range(len(ticks)))   # dense 0..n-1, no split gaps
 
-        got = (epipe.run_pipeline(spark, loaded)
+        got = (eskew.run_pipeline_salted(spark, loaded)
                .orderBy("ts_us").toPandas())
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
@@ -158,7 +158,7 @@ def test_csv_multi_partition_dense_seq_labels(spark, tmp_path):
     import pyspark.sql.functions as F
     ref_in = (spark.createDataFrame(ticks).drop("source")
               .withColumn("source", F.lit("default")).repartition(1))
-    exp = epipe.run_pipeline(spark, ref_in).orderBy("ts_us").toPandas()
+    exp = eskew.run_pipeline_salted(spark, ref_in).orderBy("ts_us").toPandas()
     assert len(got) == len(exp) > 50
     assert (got["label"].to_numpy() == exp["label"].to_numpy()).all()
     assert (got["ts_us"].to_numpy() == exp["ts_us"].to_numpy()).all()
@@ -185,13 +185,11 @@ def test_csv_source_feeds_pipeline(spark, tmp_path):
         f.write("garbage,line,here,extra\n")
     loaded = tick_source.load_ticks_csv(spark, path)
     assert loaded.count() == 3000
-    bars = ebars.aggregate_bars(
-        ebars.with_tick_direction(ebars.with_seq(loaded)), 1)
-    ref_bars = ebars.aggregate_bars(
-        ebars.with_tick_direction(ebars.with_seq(
-            spark.createDataFrame(ticks).drop("source")
-            .withColumn("source", __import__("pyspark.sql.functions",
-                                             fromlist=["lit"]).lit("default")))), 1)
+    bars = ebars.aggregate_bars(ebars.with_seq(loaded), 1)
+    ref_bars = ebars.aggregate_bars(ebars.with_seq(
+        spark.createDataFrame(ticks).drop("source")
+        .withColumn("source", __import__("pyspark.sql.functions",
+                                         fromlist=["lit"]).lit("default"))), 1)
     a = bars.orderBy("bar_ts_us").toPandas()
     b = ref_bars.orderBy("bar_ts_us").toPandas()
     assert len(a) == len(b) > 10

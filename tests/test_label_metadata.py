@@ -40,12 +40,12 @@ def test_label_metadata_parity():
 def test_label_table_spark(spark):
     """The standalone Spark label surface carries the metadata columns and
     agrees with the fused pipeline's persisted label."""
-    from forex_feature_generator_spark.engine.pipeline import (label_table,
-                                                               run_pipeline)
+    from forex_feature_generator_spark.engine.skew import (
+        label_table, run_pipeline_salted)
     ticks_pdf = synth.gen_ticks(n_sources=2, ticks_per_source=5000, seed=9)
     sdf = spark.createDataFrame(ticks_pdf)
     lt = label_table(spark, sdf).orderBy("source", "ts_us").toPandas()
-    full = (run_pipeline(spark, sdf).select("source", "ts_us", "label")
+    full = (run_pipeline_salted(spark, sdf, chunk_bars=137).select("source", "ts_us", "label")
             .orderBy("source", "ts_us").toPandas())
     assert len(lt) == len(full) > 0
     assert (lt["label"].to_numpy() == full["label"].to_numpy()).all()

@@ -1,10 +1,9 @@
 """Mixed-size sources: a source below warm-up must contribute nothing (and
-not break the salted chunk path's empty-result schema)."""
+not break the chunked path's empty-result schema)."""
 
 import pandas as pd
 
 from forex_feature_generator_spark import synth
-from forex_feature_generator_spark.engine import pipeline as epipe
 from forex_feature_generator_spark.engine import skew as eskew
 
 
@@ -14,7 +13,7 @@ def test_tiny_source_is_skipped_everywhere(spark):
     small["source"] = "tiny"
     ticks = pd.concat([big, small], ignore_index=True)
     sdf = spark.createDataFrame(ticks)
-    out1 = epipe.run_pipeline(spark, sdf).orderBy("ts_us").toPandas()
+    out1 = eskew.run_pipeline_salted(spark, sdf).orderBy("ts_us").toPandas()
     out2 = eskew.run_pipeline_salted(spark, sdf, chunk_bars=200).orderBy("ts_us").toPandas()
     assert len(out1) > 100
     assert "tiny" not in set(out1["source"]) and "tiny" not in set(out2["source"])

@@ -3,7 +3,7 @@
 import numpy as np
 
 from forex_feature_generator_spark.engine import normalize as enorm
-from forex_feature_generator_spark.engine import pipeline as epipe
+from forex_feature_generator_spark.engine import skew as eskew
 from forex_feature_generator_spark.oracle import pipeline as opipe
 from forex_feature_generator_spark.oracle import stats as ostats
 
@@ -13,7 +13,7 @@ def test_stats_and_normalize(spark, small_ticks):
     feature_cols = opipe.FEATURE_NAMES
 
     sdf = spark.createDataFrame(small_ticks)
-    out = epipe.run_pipeline(spark, sdf)
+    out = eskew.run_pipeline_salted(spark, sdf)
     out = out.persist()
 
     est = enorm.compute_stats(out).set_index("feature")

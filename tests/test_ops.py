@@ -2348,3 +2348,32 @@ def test_hot_shingle_stats_and_max_df(spark):
     assert capped.count() == 0
     from forex_feature_generator_spark.ops.cache import release_all
     release_all()
+
+
+def test_hot_shingle_stats_exact_integer_pairs(spark):
+    """candidate_pairs is an exact integer sum of df*(df-1)/2: computed with
+    integer `div`, never through a double (inexact past df ~1.3e8)."""
+    rows = [(i, " ".join(f"w{(i * j) % 7}" for j in range(12)))
+            for i in range(25)]
+    docs = spark.createDataFrame(pd.DataFrame(rows,
+                                              columns=["doc_id", "text"]))
+    sh = D.shingles(docs)
+    stats_df = D.hot_shingle_stats(sh, hot_df=3)
+    df = sh.groupBy("shingle").count().toPandas()["count"].to_numpy("int64")
+    got = stats_df.collect()[0]
+    assert got["candidate_pairs"] == int((df * (df - 1) // 2).sum()) > 0
+    top = stats_df._jdf.queryExecution().analyzed().toString().splitlines()[0]
+    assert "double" not in top.lower(), top
+
+
+def test_lit_doubles_rejects_non_finite(spark):
+    """NaN/inf have no SQL double literal: a named ValueError, not the
+    parser's opaque ParseException."""
+    with pytest.raises(ValueError, match="nan"):
+        SIM.lit_doubles([1.0, float("nan")])
+    with pytest.raises(ValueError, match="inf"):
+        SIM.lit_double_matrix([[float("inf")]])
+    row = spark.range(1).select(SIM.lit_doubles([1.5, -0.1]).alias("a"),
+                                SIM.lit_double_matrix([[2.0]]).alias("m")
+                                ).collect()[0]
+    assert row["a"] == [1.5, -0.1] and row["m"] == [[2.0]]

@@ -1,41 +1,45 @@
-"""Salted halo-chunked execution must be indistinguishable from the plain
-per-source run (north-rule property: partitioning/salting invariance)."""
+"""The halo-chunked builder's results must not depend on the chunk size:
+chunk_bars=10**9 makes every source one chunk, 137 and 300 cut each source
+into halo-carrying chunks (north-rule property: partitioning/chunking
+invariance). Exact equality, NaN-aware."""
 
 import numpy as np
 import pytest
 
 from forex_feature_generator_spark import synth
-from forex_feature_generator_spark.engine import pipeline as epipe
 from forex_feature_generator_spark.engine import skew as eskew
 from forex_feature_generator_spark.oracle import pipeline as opipe
+from forex_feature_generator_spark.oracle.labels import LabelConfig
+
+CHUNK_SIZES = (137, 300, 10**9)
 
 
-@pytest.mark.parametrize("chunk_bars,seed,cache,bucketed", [
-    (300, 17, True, False),   # halos genuinely truncate the prefix
-    (137, 5, False, False),   # odd chunk + uncached ticks (100 TB posture)
-    (300, 17, True, True),    # bucketed bar ordering (no per-source bar sort)
-])
-def test_salted_equals_unsalted(spark, chunk_bars, seed, cache, bucketed):
+@pytest.mark.parametrize("seed,label_cfg", [
+    (17, None),
+    (5, None),
+    # a label horizon longer than the default 600 ticks: the chunks' label
+    # halo must follow max_future_ticks
+    (17, LabelConfig(max_future_ticks=2000, trigger_pips=30)),
+], ids=["seed17", "seed5", "seed17-long-horizon"])
+def test_chunk_size_invariance(spark, seed, label_cfg):
     ticks = synth.gen_ticks(n_sources=2, ticks_per_source=15000, hot_sources=1,
                             hot_factor=2, seed=seed, mean_gap_s=6.0)
     sdf = spark.createDataFrame(ticks)
     conf_key = "spark.sql.analyzer.failAmbiguousSelfJoin"
     conf_before = spark.conf.get(conf_key)
-    plain = (epipe.run_pipeline(spark, sdf)
-             .orderBy("source", "ts_us").toPandas())
-    salted = (eskew.run_pipeline_salted(spark, sdf, chunk_bars=chunk_bars,
-                                        cache_ticks=cache,
-                                        bucketed_bar_order=bucketed)
-              .orderBy("source", "ts_us").toPandas())
-    # the self-join heuristic override is scoped to the fusion-join
-    # construction — no session-global conf mutation survives the run
+    runs = [eskew.run_pipeline_salted(spark, sdf, chunk_bars=c,
+                                      label_cfg=label_cfg)
+            .orderBy("source", "ts_us").toPandas()
+            for c in CHUNK_SIZES]
+    # the self-join heuristic override is scoped to the plan construction —
+    # no session-global conf mutation survives the run
     assert spark.conf.get(conf_key) == conf_before == "true"
-    assert len(plain) == len(salted) and len(plain) > 1000
-    assert (plain["ts_us"].to_numpy() == salted["ts_us"].to_numpy()).all()
-    assert (plain["label"].to_numpy() == salted["label"].to_numpy()).all()
-    assert (plain["timestamp"].to_numpy() == salted["timestamp"].to_numpy()).all()
-    for c in opipe.FEATURE_NAMES:
-        a = plain[c].to_numpy()
-        b = salted[c].to_numpy()
-        assert np.allclose(a, b, rtol=1e-12, atol=1e-14), (
-            c, float(np.abs(a - b).max()))
+    ref = runs[-1]
+    assert len(ref) > 1000
+    for chunk_bars, got in zip(CHUNK_SIZES, runs):
+        assert len(got) == len(ref), chunk_bars
+        for c in ["source", "ts_us", "timestamp", "label", *opipe.FEATURE_NAMES]:
+            a, b = got[c].to_numpy(), ref[c].to_numpy()
+            same = (np.array_equal(a, b, equal_nan=True) if a.dtype.kind == "f"
+                    else np.array_equal(a, b))
+            assert same, (chunk_bars, c)

@@ -4,11 +4,9 @@ short fixtures cannot reach. Run explicitly via
 `pytest tests/test_slow_parity.py` (included in the default suite; ~30 s)."""
 
 import numpy as np
-import pandas as pd
 
 from forex_feature_generator_spark import synth
 from forex_feature_generator_spark.engine import features as efeat
-from forex_feature_generator_spark.engine import metrics as emetrics
 from forex_feature_generator_spark.oracle import pipeline as opipe
 from tests.test_bars import oracle_bars_df
 from tests.test_features_parity import LOOSE, RTOL, ATOL
@@ -34,34 +32,3 @@ def test_full_window_parity():
             bad.append((c, float(np.nanmax(np.abs(g[c].to_numpy() - o[c].to_numpy())))))
     assert not bad, bad
 
-
-def test_instrumentation(spark):
-    df = spark.range(1000).toDF("id")
-    inst = emetrics.Instrument(df)
-    assert inst.df.count() == 1000
-    assert inst.rows.value == 1000
-    assert inst.batches.value >= 1
-    lin = emetrics.partition_lineage(df).toPandas()
-    assert lin["rows"].sum() == 1000
-
-
-def test_progress_reporter_eta():
-    """ProgressReporter.cs:13-66 surface: percent ticks, items/sec, ETA
-    formatting, completion summary — on a fake clock."""
-    lines = []
-    t = [0.0]
-    pr = emetrics.ProgressReporter("unit", 200, report_interval=10,
-                                   emit=lines.append, clock=lambda: t[0])
-    t[0] = 10.0
-    pr.update(19)     # 10% at 2 items/sec -> 90s remaining -> "1m 30s"
-    t[0] = 100.0
-    pr.update(199)    # 100%
-    pr.complete()
-    assert lines[0] == "  Starting: unit (200 items)"
-    assert lines[1] == "    10% complete - 20/200 items - 2 items/sec - ETA: 1m 30s"
-    assert lines[2].startswith("    100% complete - 200/200 items")
-    assert lines[3].endswith("Completed: unit")
-    assert "2.0 items/sec" in lines[4]
-    assert emetrics.format_timespan(-1) == "calculating..."
-    assert emetrics.format_timespan(59) == "59s"
-    assert emetrics.format_timespan(3700) == "1h 1m"

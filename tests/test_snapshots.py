@@ -3,8 +3,7 @@ output equals the single-run output; completed partitions are skipped."""
 
 import numpy as np
 
-from forex_feature_generator_spark import synth
-from forex_feature_generator_spark.engine import pipeline as epipe
+from forex_feature_generator_spark.engine import skew as eskew
 from forex_feature_generator_spark.engine import snapshots as snap
 from forex_feature_generator_spark.oracle import pipeline as opipe
 
@@ -26,10 +25,10 @@ def test_resume_equivalence(spark, small_ticks, tmp_path):
     assert set(done) == set(small_ticks["source"].unique())
     assert all(v["rows_out"] > 0 and v["rows_in"] > 0 for v in done.values())
 
-    # equivalence with the single-shot pipeline
+    # equivalence with the single-shot builder
     resumed = (spark.read.parquet(table)
                .orderBy("source", "ts_us").toPandas())
-    single = (epipe.run_pipeline(spark, sdf)
+    single = (eskew.run_pipeline_salted(spark, sdf)
               .orderBy("source", "ts_us").toPandas())
     assert len(resumed) == len(single)
     assert (resumed["label"].to_numpy() == single["label"].to_numpy()).all()

@@ -3,7 +3,7 @@ timestamps (the BASELINE.md correctness gate, end to end through Spark)."""
 
 import numpy as np
 
-from forex_feature_generator_spark.engine import pipeline as epipe
+from forex_feature_generator_spark.engine import skew as eskew
 from forex_feature_generator_spark.oracle import pipeline as opipe
 from tests.test_features_parity import LOOSE, RTOL, ATOL
 
@@ -11,7 +11,7 @@ from tests.test_features_parity import LOOSE, RTOL, ATOL
 def test_e2e_matches_oracle(spark, small_ticks):
     oracle = opipe.run_multi_source(small_ticks)
     sdf = spark.createDataFrame(small_ticks)
-    got = epipe.run_pipeline(spark, sdf).toPandas()
+    got = eskew.run_pipeline_salted(spark, sdf).toPandas()
 
     o = oracle.sort_values(["source", "ts_us"]).reset_index(drop=True)
     g = got.sort_values(["source", "ts_us"]).reset_index(drop=True)
@@ -34,9 +34,9 @@ def test_partitioning_invariance(spark, small_ticks):
     property test: partitioning must not change window/as-of results)."""
     sdf1 = spark.createDataFrame(small_ticks).repartition(1)
     sdf8 = spark.createDataFrame(small_ticks).repartition(8, "source")
-    a = (epipe.run_pipeline(spark, sdf1).orderBy("source", "ts_us")
+    a = (eskew.run_pipeline_salted(spark, sdf1).orderBy("source", "ts_us")
          .toPandas())
-    b = (epipe.run_pipeline(spark, sdf8).orderBy("source", "ts_us")
+    b = (eskew.run_pipeline_salted(spark, sdf8).orderBy("source", "ts_us")
          .toPandas())
     assert len(a) == len(b)
     for c in a.columns:

@@ -26,7 +26,7 @@ def test_streaming_bars_match_batch(spark, tmp_path, small_ticks):
 
     got = (spark.read.parquet(out_dir)
            .orderBy("source", "bar_ts_us").toPandas())
-    batch = (ebars.aggregate_bars(ebars.with_tick_direction(sdf), 1)
+    batch = (ebars.aggregate_bars(sdf, 1)
              .orderBy("source", "bar_ts_us").toPandas())
 
     # append-mode emits only watermark-closed windows; every emitted bar must
@@ -83,8 +83,7 @@ def test_streaming_bars_stateful_exact_parity(spark, tmp_path, small_ticks):
 
     got = (spark.read.parquet(out_dir)
            .orderBy("source", "bar_ts_us").toPandas().reset_index(drop=True))
-    batch = (ebars.aggregate_bars(ebars.with_tick_direction(
-                 ebars.with_seq(sdf)), 1)
+    batch = (ebars.aggregate_bars(ebars.with_seq(sdf), 1)
              .select("source", "bar_ts_us", "open", "high", "low", "close",
                      "tick_volume", "up", "down", "avg_spread", "max_spread",
                      "min_spread")
@@ -134,7 +133,7 @@ def test_streaming_labels_match_batch(spark, tmp_path, small_ticks):
     tail (truncated windows) stays pending by design."""
     import os
     from pyspark.sql import functions as F
-    from forex_feature_generator_spark.engine import pipeline as epipe
+    from forex_feature_generator_spark.engine import skew as eskew
     from forex_feature_generator_spark.engine.streaming import (
         streaming_labels_stateful)
 
@@ -161,12 +160,11 @@ def test_streaming_labels_match_batch(spark, tmp_path, small_ticks):
     got = (spark.read.parquet(out_dir)
            .orderBy("source", "ts_us").toPandas())
 
-    batch = (epipe.run_pipeline(spark, sdf)
+    batch = (eskew.run_pipeline_salted(spark, sdf)
              .select("source", "ts_us", "label")
              .orderBy("source", "ts_us").toPandas())
     # the streamed set = emissions with >= 600 ticks after the entry tick
-    m1 = ebars.aggregate_bars(
-        ebars.with_tick_direction(ebars.with_seq(sdf)), 1)
+    m1 = ebars.aggregate_bars(ebars.with_seq(sdf), 1)
     counts = sdf.groupBy("source").count()
     full_win = (m1.filter(F.col("bar_index") >= 260).join(counts, "source")
                 .filter(F.col("count") - 1 - F.col("completion_seq") >= 600)
@@ -180,14 +178,14 @@ def test_streaming_labels_match_batch(spark, tmp_path, small_ticks):
 
 
 def test_streaming_features_stateful_parity(spark, tmp_path, small_ticks):
-    """The stateful streaming feature kernel == run_pipeline's feature
+    """The stateful streaming feature kernel == the batch builder's feature
     columns EXACTLY on replay (all 148 features + timestamp/completion_seq),
     with micro-batch boundaries landing mid-bar and mid-window. The batch
     pipeline's label column is excluded: labels stream separately
     (streaming_labels_stateful)."""
     import os
     import pandas as pd
-    from forex_feature_generator_spark.engine import pipeline as epipe
+    from forex_feature_generator_spark.engine import skew as eskew
     from forex_feature_generator_spark.engine.streaming import (
         streaming_features_stateful)
     from forex_feature_generator_spark.oracle.pipeline import FEATURE_NAMES
@@ -215,7 +213,7 @@ def test_streaming_features_stateful_parity(spark, tmp_path, small_ticks):
 
     got = (spark.read.parquet(out_dir)
            .orderBy("source", "ts_us").toPandas().reset_index(drop=True))
-    batch = (epipe.run_pipeline(spark, spark.createDataFrame(small_ticks))
+    batch = (eskew.run_pipeline_salted(spark, spark.createDataFrame(small_ticks))
              .orderBy("source", "ts_us").toPandas().reset_index(drop=True))
     # the stream cannot emit the final bars whose completing window hasn't
     # closed? No — bars complete on the next tick, same rule as batch: the
@@ -224,7 +222,7 @@ def test_streaming_features_stateful_parity(spark, tmp_path, small_ticks):
     np.testing.assert_array_equal(got["source"], batch["source"])
     np.testing.assert_array_equal(got["ts_us"], batch["ts_us"])
     np.testing.assert_array_equal(got["timestamp"], batch["timestamp"])
-    # completion_seq isn't in run_pipeline's persisted surface; check it
+    # completion_seq isn't in the builder's persisted surface; check it
     # against the batch bar stream instead
     from pyspark.sql import functions as F
     bars = (ebars.aggregate_bars(ebars.with_seq(
@@ -246,7 +244,7 @@ def test_streaming_features_halo_trim(spark, tmp_path):
     the tail is truncated mid-stream (the 620-bar halo bound in action), with
     4 micro-batches. Every emission after trimming must still be exact."""
     import os
-    from forex_feature_generator_spark.engine import pipeline as epipe
+    from forex_feature_generator_spark.engine import skew as eskew
     from forex_feature_generator_spark.engine.streaming import (
         streaming_features_stateful, FEATURE_HALO)
     from forex_feature_generator_spark.oracle.pipeline import FEATURE_NAMES
@@ -274,7 +272,7 @@ def test_streaming_features_halo_trim(spark, tmp_path):
 
     got = (spark.read.parquet(out_dir)
            .orderBy("ts_us").toPandas().reset_index(drop=True))
-    batch = (epipe.run_pipeline(spark, spark.createDataFrame(ticks))
+    batch = (eskew.run_pipeline_salted(spark, spark.createDataFrame(ticks))
              .orderBy("ts_us").toPandas().reset_index(drop=True))
     # enough bars that the tail was genuinely cut (bars ~ minutes of data)
     assert len(batch) > FEATURE_HALO - 260
