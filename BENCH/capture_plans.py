@@ -8,11 +8,10 @@ For each plan we check the properties that matter at 100 TB:
   * the normalization select is a single ProjectExec inside
     WholeStageCodegen (no shuffle, stats folded to literals)
   * the as-of join is window-based (no nested-loop / row explosion)
-  * labels are FUSED into the feature cogroup: the narrow bars ⋈ labels join
-    happens before the kernel, so NO broadcast of the unbounded label side
-    and no shuffle of the 150-column output
-  * the halo-chunked replication joins are bucketed equi-joins (no
-    per-source fan-out, no driver materialization of the bounds)
+  * the feature builder is ONE cogroup per (source, chunk) that computes
+    features and labels: halo membership is column arithmetic on bar
+    indices, the only join is the bucketed tick-range join, no RDD round
+    trip, and the 150-column output is never shuffled
   * embedding near-dup candidates come from an LSH bucket self-join
     (no CartesianProduct, no full-corpus broadcast)
 
@@ -90,24 +89,25 @@ def main() -> None:
         "ASOF JOIN.",
         explain_str(asof)))
 
-    # 4. the feature builder: labels fused into the feature cogroup, halo
-    # replication through bucketed equi-joins (chunk_bars=500 so the
-    # 2000-tick sources span several chunks)
+    # 4. the feature builder: one cogroup computes features and labels; halo
+    # membership by arithmetic, one bucketed tick join (chunk_bars=500 so
+    # the 2000-tick sources span several chunks)
     from forex_feature_generator_spark.engine import skew as eskew
     out = eskew.run_pipeline_salted(spark, ticks, chunk_bars=500)
     plan4 = explain_str(out, max_lines=90)
     assert "CartesianProduct" not in plan4
     sections.append((
-        "Feature builder (labels fused, bucketed range-replication)",
-        "FlatMapCoGroupsInPandas for the label kernel feeds a NARROW "
-        "bars ⋈ labels join (both sides one-row-per-bar), then the feature "
-        "cogroup passes the label through — the label side is never "
-        "broadcast (it is unbounded at 100 TB) and the 150-column output is "
-        "never shuffled. Every replication join is an equi-join on (source, "
-        "bucket) against the exploded chunk-bounds ranges — O(1) candidate "
-        "ranges per row regardless of chunks-per-source, bounds stay "
-        "distributed (no toPandas), and the only broadcast is the tiny "
-        "exploded bounds table.",
+        "Feature builder (one cogroup, halo membership by arithmetic)",
+        "ONE FlatMapCoGroupsInPandas per (source, chunk) joins the tagged "
+        "M1 ∪ M5 bars with the chunk's haloed ticks and computes the "
+        "features, then the labels of the rows it emits, in one Python "
+        "call. Each bar's chunks come from arithmetic on its bar index "
+        "(M5 bars through last_lower_index and one lead window), so there "
+        "is no bounds table, as-of join or RDD round trip. The only join is "
+        "the tick-range join, an equi-join on (source, bucket) against each "
+        "chunk's exploded tick range: O(1) candidate ranges per tick "
+        "regardless of chunks-per-source. The 150-column output is never "
+        "shuffled.",
         plan4))
 
     # 4c. embedding near-dup: LSH bucket self-join, no cartesian product

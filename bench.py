@@ -971,9 +971,9 @@ def main() -> None:
         if not args.skip_scaling and m is not None and remaining() > 30:
             # hot-bar lineage: the in-bar direction fold buffers
             # ticks-per-bar structs in one agg buffer; record the corpus's
-            # worst bar so a burst corpus is visible in the record (the
-            # two-level fold — aggregate_bars_partial(burst_subbars=K) —
-            # bounds the buffer when this number gets hot)
+            # worst bar so a burst corpus is visible in the record (no
+            # fold bounds that buffer; a hot number here means one is
+            # needed)
             from forex_feature_generator_spark.engine import bars as ebars
             from pyspark.sql import functions as F
             t = spark.read.parquet(os.path.join(corpus, "ticks.parquet"))

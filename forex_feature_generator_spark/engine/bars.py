@@ -55,7 +55,11 @@ def aggregate_bars_partial(ticks: DataFrame, tf_minutes: int) -> DataFrame:
     of a bar's first tick IS the previous bar's last tick), but it removes
     the tick-level window's partitionBy(source): a 10x-hot source no longer
     becomes one giant sort task, and the only tick-sized exchange left in
-    the whole pipeline is this groupBy's partial-aggregated shuffle."""
+    the whole pipeline is this groupBy's partial-aggregated shuffle.
+
+    bar_index numbers the partial bars in time order (the boundary term's
+    window): a completed bar keeps its number (finish_bars), and a higher
+    timeframe records the last number it covers (bars_from_lower)."""
     tf_us = tf_minutes * US_PER_MIN
     # cast: accepts both session-tz TIMESTAMP and parquet TIMESTAMP_NTZ
     us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -85,6 +89,7 @@ def aggregate_bars_partial(ticks: DataFrame, tf_minutes: int) -> DataFrame:
     # first tick of a source has no direction — the _lastBid == 0 guard)
     w = Window.partitionBy("source").orderBy("bar_ts_us")
     prev_close = F.lag("close").over(w)
+    g = g.withColumn("bar_index", F.row_number().over(w) - F.lit(1))
     b_up = F.when(prev_close.isNotNull() & (F.col("open") > prev_close),
                   F.lit(1)).otherwise(F.lit(0))
     b_down = F.when(prev_close.isNotNull() & (F.col("open") < prev_close),
@@ -98,14 +103,17 @@ def bars_from_lower(partial: DataFrame, mult_minutes: int) -> DataFrame:
     """Higher-timeframe PARTIAL bars aggregated from lower-timeframe partial
     bars (e.g. M1 -> M5): exact for every field — the bucket's first/last
     tick are the first/last lower bar's, extrema and sums compose, and
-    spread_sum re-aggregates losslessly. The tick stream is never touched."""
+    spread_sum re-aggregates losslessly. The tick stream is never touched.
+    last_lower_index is the bar_index of the bucket's last lower bar: an M5
+    bar completes with that M1 bar, so it is first visible at that M1
+    emission (engine/skew.py)."""
     tf_us = mult_minutes * US_PER_MIN
     bucket = (F.col("bar_ts_us") - (F.col("bar_ts_us") % F.lit(tf_us))).alias("bar_ts_us")
     return (
         partial
         .select(F.col("source"), bucket, "open", "high", "low", "close",
                 "tick_volume", "up", "down", "spread_sum", "max_spread",
-                "min_spread", "first_seq", "first_ts_us")
+                "min_spread", "first_seq", "first_ts_us", "bar_index")
         .groupBy("source", "bar_ts_us")
         .agg(
             F.min_by("open", "first_seq").alias("open"),
@@ -120,6 +128,7 @@ def bars_from_lower(partial: DataFrame, mult_minutes: int) -> DataFrame:
             F.min("min_spread").alias("min_spread"),
             F.min("first_seq").alias("first_seq"),
             F.min("first_ts_us").alias("first_ts_us"),
+            F.max("bar_index").alias("last_lower_index"),
         )
     )
 

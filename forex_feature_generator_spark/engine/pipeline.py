@@ -1,13 +1,11 @@
 """Shared pieces of the feature builder (engine/skew.py, SURVEY §7.1): the
-output schemas, the label pass-through of the feature kernel, the scoped
-self-join override the builder's plan construction runs under, and the
-calculator column selection."""
+output schemas, the scoped self-join override the builder's plan
+construction runs under, and the calculator column selection."""
 
 from __future__ import annotations
 
 from contextlib import contextmanager
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..oracle.pipeline import FEATURE_NAMES
@@ -15,7 +13,6 @@ from ..oracle.pipeline import FEATURE_NAMES
 FEATURES_SCHEMA = ("source string, ts_us long, timestamp long, completion_seq long, "
                    + ", ".join(f"`{c}` double" for c in FEATURE_NAMES))
 FEATURES_LABELED_SCHEMA = FEATURES_SCHEMA + ", label int"
-LABELS_SCHEMA = "source string, ts_us long, label int"
 LABEL_META_SCHEMA = (
     "source string, ts_us long, label int, confidence double, "
     "long_profit_pips double, short_profit_pips double, mae_pips double, "
@@ -23,36 +20,14 @@ LABEL_META_SCHEMA = (
     "quality_score double")
 
 
-def attach_label(out, m1_pdf):
-    """Carries the pre-joined per-bar label through the feature kernel
-    (ts_us == bar_ts_us is unique per source/chunk group). No-op for callers
-    whose bar stream has no label column (tokens pipeline). Every emission
-    row MUST have a label (the label cogroup covers exactly the emission
-    set); a missing one would silently become INT_MIN under numpy's unsafe
-    float->int32 cast, so fail loudly instead."""
-    import numpy as np
-    if "label" not in m1_pdf.columns:
-        return out
-    lab = pd.Series(m1_pdf["label"].to_numpy(),
-                    index=m1_pdf["bar_ts_us"].to_numpy())
-    vals = lab.reindex(out["ts_us"].to_numpy()).to_numpy("float64")
-    if np.isnan(vals).any():
-        missing = out["ts_us"].to_numpy()[np.isnan(vals)][:5]
-        raise ValueError(
-            f"{int(np.isnan(vals).sum())} emission rows have no label "
-            f"(first ts_us: {missing.tolist()}) — label/emission sets diverged")
-    out["label"] = vals.astype("int32")
-    return out
-
-
 @contextmanager
 def unambiguous_self_join(spark: SparkSession):
     """Scopes spark.sql.analyzer.failAmbiguousSelfJoin=false to the
     pipeline's PLAN CONSTRUCTION. The single-pass design deliberately derives
-    every stream (m1, m5, emissions, labels) from one tick scan, so the
-    dataset-id heuristic flags the fusion join and the cogroups as potential
-    self-join ambiguities even though each side carries fresh applyInPandas /
-    aggregation attributes and resolution is well-defined (verified by
+    every stream (m1, m5, emissions, tick ranges) from one tick scan, so the
+    dataset-id heuristic flags the tick join and the cogroup as potential
+    self-join ambiguities even though each side carries fresh aggregation
+    attributes and resolution is well-defined (verified by
     tests/test_skew.py chunk-size invariance). The heuristic fires only
     at Dataset construction time — downstream analysis of already-built plans
     does not re-run it — so restoring on exit leaves the session's safety net

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .pipeline import FEATURES_SCHEMA
-from .skew import _features_fn
+from .skew import emitted_features
 from . import windows as WIN
 
 EPOCH_US = 1704153600000000  # 2024-01-02T00:00:00Z, matches synth.EPOCH
@@ -191,10 +191,13 @@ def full_features(seqs: DataFrame, warmup_bars: int = 260) -> DataFrame:
     """148 reference features over the derived bar series, joined back to the
     original rows; `tokens` byte-identical pass-through."""
     series = with_derived_series(seqs)
-    m1 = _derived_bars(series, 1).withColumn("emit_lo", F.lit(0))
+    m1 = _derived_bars(series, 1)
     m5 = _derived_bars(series, 5)
+
+    def fn(m1_pdf, m5_pdf):
+        return emitted_features(m1_pdf, m5_pdf, 0, warmup_bars)
     feats = (m1.groupBy("source").cogroup(m5.groupBy("source"))
-             .applyInPandas(_features_fn(warmup_bars), schema=FEATURES_SCHEMA))
+             .applyInPandas(fn, schema=FEATURES_SCHEMA))
     return (series
             .select("source", "doc_id", "tokens", "n_tok", "ts_us")
             .join(feats.drop("completion_seq", "timestamp"),

@@ -640,7 +640,9 @@ def simhash(docs: DataFrame, text_col: str = "text",
     bit-matrix cumsum below (A/B, bit-identical on all 5000 docs).
     Integer arithmetic end to end — identical signatures regardless of
     partitioning, order or batch boundaries; a NULL token array yields
-    sig 0 on both paths."""
+    sig 0 on both paths.
+
+    Executors need pandas and pyarrow: the votes run in mapInPandas."""
     import numpy as np
     words = F.array_distinct(F.split(normalize_text(F.col(text_col)), " "))
     hs = F.transform(words, lambda w: F.conv(F.substring(F.md5(w), 1, 15),
