@@ -7,9 +7,9 @@ value-hash -> CORRECTNESS_r{N}.json).
 
 Every query aliases computed columns identically on both sides; float
 aggregates whose partial-combine order is nondeterministic are rounded on
-BOTH sides so the value-hash is stable.  Queries marked "no oracle" exercise
-Python-stub or Spark-internal-hash paths and get the weaker rows-only check
-(noted in the per-query docstring)."""
+BOTH sides so the value-hash is stable.  Every registered entry has an
+oracle, and every module-level ``q*`` function is either registered or
+called by a registered entry (tests/test_entry_queries.py checks both)."""
 
 from __future__ import annotations
 
@@ -82,8 +82,9 @@ def _load(spark: SparkSession, sf_dir: str, name: str,
 def _parquet_num_rows(sf_dir: str, name: str) -> int:
     """Row count from parquet FOOTER metadata — driver-side, no Spark job,
     O(#files) footer reads (the 100 TB answer is the same: footers or the
-    table catalog, never a count() scan). Feeds size gates like q42's
-    exact-vs-approx quantile switch without an eager job at plan time."""
+    table catalog, never a count() scan). Feeds size gates like
+    q10_norm_binning's exact-vs-approx quantile switch without an eager job
+    at plan time."""
     import glob
     import os
 
@@ -257,15 +258,6 @@ FROM t
 """
 
 
-def q06_backfill(spark, sf_dir):
-    """Forward-fill a sparse column (north-rule backfill): only every 7th
-    event observes the value; the rest inherit the latest earlier one."""
-    ev = _load(spark, sf_dir, "events")
-    ev = ev.withColumn("sparse", F.when(F.col("event_id") % 7 == 0, F.col("value")))
-    return (WIN.forward_fill(ev, "sparse", ["user_id"], "ts", "filled")
-            .select("event_id", "user_id", "filled"))
-
-
 SQL_Q06 = """
 WITH t AS (
   SELECT event_id, user_id, ts,
@@ -336,20 +328,6 @@ SELECT user_id, round(sum(value), 4) AS total, count(*) AS n
 FROM events GROUP BY user_id
 ORDER BY total DESC, user_id ASC LIMIT 10
 """
-
-
-def q10_broadcast_norm(spark, sf_dir):
-    """Broadcast-stats normalization (DataNormalizer StandardScaler over
-    lineitem numerics; the 150-entry stats map folded into expressions)."""
-    li = _load(spark, sf_dir, "lineitem")
-    stats = li.agg(
-        F.avg("l_extendedprice").alias("mp"), F.stddev_samp("l_extendedprice").alias("sp"),
-        F.avg("l_quantity").alias("mq"), F.stddev_samp("l_quantity").alias("sq"))
-    j = li.crossJoin(F.broadcast(stats))
-    return j.select(
-        "l_orderkey", "l_linenumber",
-        F.round((F.col("l_extendedprice") - F.col("mp")) / F.col("sp"), 6).alias("z_price"),
-        F.round((F.col("l_quantity") - F.col("mq")) / F.col("sq"), 6).alias("z_qty"))
 
 
 SQL_Q10 = """
@@ -547,13 +525,6 @@ FROM clean
 """
 
 
-def q15_ngram_jaccard(spark, sf_dir):
-    """Exact word-3-gram Jaccard near-dup pairs (threshold 0.08 so the
-    synthetic corpus yields a non-trivial pair set)."""
-    docs = _load(spark, sf_dir, "documents", floor=True)
-    return D.ngram_jaccard_pairs(docs, threshold=0.08)
-
-
 SQL_Q15 = """
 WITH w AS (
   SELECT doc_id AS id,
@@ -585,13 +556,6 @@ def _hex2int_sql(expr: str, n: int = 8) -> str:
         f"(strpos('0123456789abcdef', {expr}[{i + 1}:{i + 1}]) - 1)::BIGINT"
         f" * {16 ** (n - 1 - i)}::BIGINT" for i in range(n))
     return f"({terms})"
-
-
-def q16_minhash(spark, sf_dir):
-    """MinHash signature agreement: estimated-Jaccard pairs from 16-hash
-    signatures with md5-derived shingle hashes (scale path for q15)."""
-    docs = _load(spark, sf_dir, "documents", floor=True)
-    return D.minhash_lsh_pairs(docs, num_hashes=16, bands=8, threshold=0.05)
 
 
 def _sql_q16() -> str:
@@ -959,17 +923,6 @@ FROM t
 """
 
 
-def q25_minmax_norm(spark, sf_dir):
-    """MinMaxScaler to [-1, 1] (DataNormalizer.cs:185-189) over lineitem."""
-    li = _load(spark, sf_dir, "lineitem")
-    stats = li.agg(F.min("l_extendedprice").alias("mn"),
-                   F.max("l_extendedprice").alias("mx"))
-    return (li.crossJoin(F.broadcast(stats))
-            .select("l_orderkey", "l_linenumber",
-                    F.round(2 * (F.col("l_extendedprice") - F.col("mn"))
-                            / (F.col("mx") - F.col("mn")) - 1, 6).alias("mm_price")))
-
-
 SQL_Q25 = """
 WITH s AS (SELECT min(l_extendedprice) AS mn, max(l_extendedprice) AS mx FROM lineitem)
 SELECT l_orderkey, l_linenumber,
@@ -1240,15 +1193,6 @@ ASOF LEFT JOIN quotes q
 """
 
 
-def q36_backward_fill(spark, sf_dir):
-    """Backward fill: each row inherits the NEXT observed value of a sparse
-    column (the companion of q06's forward fill)."""
-    ev = _load(spark, sf_dir, "events")
-    ev = ev.withColumn("sparse", F.when(F.col("event_id") % 7 == 0, F.col("value")))
-    return (WIN.backward_fill(ev, "sparse", ["user_id"], "ts", "bfilled")
-            .select("event_id", "user_id", "bfilled"))
-
-
 SQL_Q36 = """
 WITH t AS (
   SELECT event_id, user_id, ts,
@@ -1260,33 +1204,6 @@ SELECT event_id, user_id,
                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS bfilled
 FROM t
 """
-
-
-def q42_quantile_binning(spark, sf_dir):
-    """Quantile discretization (feature binning): decile id per row from
-    percentile cutpoints, folded in as a broadcast 1-row array —
-    bin = #cutpoints <= value. Cutpoints are rounded to 4dp on both sides so
-    boundary rows bin identically (l_extendedprice itself has 2 decimals).
-
-    Cutpoints go through engine.normalize.gated_quantile_agg: exact
-    `percentile` at test scale (<=20M rows, deterministic vs the DuckDB
-    oracle), approx_percentile sketch above — an exact global percentile
-    buffers every value in one agg buffer, a 100 TB OOM. The gate's row
-    count comes from parquet FOOTER metadata (_parquet_num_rows), not a
-    count() job, so no Spark job runs at query-construction time and the
-    timed window matches the DuckDB oracle's."""
-    from forex_feature_generator_spark.engine.normalize import gated_quantile_agg
-    li = _load(spark, sf_dir, "lineitem")
-    qs = [i / 10 for i in range(1, 10)]
-    n = _parquet_num_rows(sf_dir, "lineitem")   # footer metadata, no job
-    cuts = li.agg(F.transform(
-        gated_quantile_agg("l_extendedprice", qs, n),
-        lambda c: F.round(c, 4)).alias("cuts"))
-    j = li.crossJoin(F.broadcast(cuts))
-    dec = F.size(F.filter(F.col("cuts"),
-                          lambda c: F.col("l_extendedprice") >= c))
-    return j.select("l_orderkey", "l_linenumber",
-                    dec.cast("int").alias("price_decile"))
 
 
 SQL_Q42 = """
@@ -2298,16 +2215,6 @@ FROM feat
 """
 
 
-def q37_ann_ivf(spark, sf_dir):
-    """IVF-style ANN (the second scale path next to q29's LSH): hash-sampled
-    centroids partition the corpus into cells, queries probe their 2 best
-    cells, exact rerank — the oracle mirrors the same deterministic
-    quantizer."""
-    emb = _load(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    return SIM.ivf_topk(emb, queries_df, k=5, n_cells=16, n_probe=2)
-
-
 SQL_Q37 = """
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
 picked AS (
@@ -2360,18 +2267,20 @@ FROM ranked WHERE rank <= 5
 # driver-level correctness evidence, so related operators are consolidated
 # into single entries below — every underlying operator still runs and is
 # still hash-gated (unions carry a `method`/`mode` discriminator; joins key
-# on the natural PK), and the standalone per-operator functions above remain
-# the implementations (and stay covered by tests/).
+# on the natural PK). The per-operator oracles above (the SQL_Q* constants
+# and _sql_q* functions) are the parts the composite oracles embed; a
+# per-operator entry function stays only while a composite entry calls it.
 # ---------------------------------------------------------------------------
 
 
 def q06_fill(spark, sf_dir):
-    """Forward + backward fill of the same sparse column in one entry
-    (q06_backfill ⊕ q36_backward_fill). Both fills share one window
-    partitioning (user_id, ordered by ts), so they evaluate in a SINGLE
-    Window node over one exchange+sort — the r6 shape ran two separate
-    windowed scans and glued them back with a sort-merge join on the
-    event PK (guide §2.4: same-keyed operations share one exchange)."""
+    """Forward + backward fill of the same sparse column in one entry; its
+    oracle joins SQL_Q06 (forward) and SQL_Q36 (backward) on event_id.
+    Both fills share one window partitioning (user_id, ordered by ts), so
+    they evaluate in a SINGLE Window node over one exchange+sort — the r6
+    shape ran two separate windowed scans and glued them back with a
+    sort-merge join on the event PK (guide §2.4: same-keyed operations
+    share one exchange)."""
     ev = _load(spark, sf_dir, "events")
     sparse = F.when(F.col("event_id") % 7 == 0, F.col("value"))
     wf = (Window.partitionBy("user_id").orderBy("ts")

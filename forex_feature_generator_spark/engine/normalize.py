@@ -146,12 +146,6 @@ STATS_COLUMNS = ["feature", "count", "mean", "stddev", "min", "max",
                  "q1", "median", "q3", "iqr"]
 
 
-def save_stats(stats: pd.DataFrame, path: str) -> None:
-    """Stats CSV with the reference's header/order, sorted by feature name
-    (FeatureStatisticsCollector.SaveStatistics, cs:128-142)."""
-    stats.sort_values("feature")[STATS_COLUMNS].to_csv(path, index=False)
-
-
 def load_stats(path: str) -> pd.DataFrame:
     """Round-trip loader (FeatureStatisticsCollector.LoadStatistics)."""
     return pd.read_csv(path)[STATS_COLUMNS]

@@ -35,14 +35,6 @@ def forward_fill(df: DataFrame, value_col: str, partition_cols: list[str],
                          F.last(value_col, ignorenulls=True).over(w))
 
 
-def backward_fill(df: DataFrame, value_col: str, partition_cols: list[str],
-                  order_col: str, out_col: str | None = None) -> DataFrame:
-    w = (Window.partitionBy(*partition_cols).orderBy(order_col)
-         .rowsBetween(0, Window.unboundedFollowing))
-    return df.withColumn(out_col or f"{value_col}_bfill",
-                         F.first(value_col, ignorenulls=True).over(w))
-
-
 def lag_lead_deltas(df: DataFrame, value_col: str, partition_cols: list[str],
                     order_col: str, lags=(1,), leads=(1,)) -> DataFrame:
     w = Window.partitionBy(*partition_cols).orderBy(order_col)

@@ -1,4 +1,5 @@
 """Large-scale training-data pipeline operators: deduplication, similarity
-search, text analysis, multimodal plumbing. All hot paths are JVM-side
-(built-in functions / higher-order array expressions); Python appears only in
-the clearly-marked multimodal decode stubs (Arrow-batched mapInPandas)."""
+search, text analysis, multimodal plumbing. Hot paths are JVM-side (built-in
+functions / higher-order array expressions); the multimodal decode/resize
+seam runs Python in Arrow-batched mapInPandas, with a sha256-keyed stub as
+its default decoder."""

@@ -1,36 +1,17 @@
 """Multimodal columns: image/audio/video as opaque `binary` columns with typed
-metadata. The Spark-side plumbing (schema, partitioning, Arrow batch shape,
-mapInPandas signatures) is real and tested. Decode comes in three tiers:
+metadata, decoded and resized in Arrow-batched mapInPandas passes (the binary
+column is never shuffled; `spark.sql.execution.arrow.maxRecordsPerBatch`
+bounds executor memory; downstream joins use the compact metadata only).
 
-  * REAL, no codec libraries needed: `raw_decoder` parses actual netpbm
-    P5/P6, uncompressed 24-bpp BMP, PNG and PCM WAV; `decode_raw_pixels` +
-    `resize_raw_assets` do genuine pixel decode and nearest-neighbor resize
-    (output hashes are of the actual resized buffer). PNG and GIF —
-    COMPRESSED formats — decode for real: PNG's codec (DEFLATE) ships in
-    the Python stdlib (`zlib`) with the scanline filters in pure numpy
-    (decode_png_pixels); GIF's LZW is ~40 lines of pure Python
-    (decode_gif_pixels), and multi-frame GIFs give the video path a real
-    frame count; JPEG — both baseline sequential (ITU T.81, the dominant
-    web-crawl image format) AND progressive (SOF2, Annex G spectral
-    selection + successive approximation, the majority variant for large
-    web JPEGs) — decodes via pure-Python Huffman entropy decode + numpy
-    dequantize/IDCT/chroma-upsample/YCbCr (decode_jpeg_pixels). AUDIO
-    payloads decode for real too (decode_wav_samples + audio_stats_raw):
-    linear PCM 8/16-bit, IEEE float32, the G.711 companding pair
-    (mu-law/A-law — COMPRESSED telephony codecs, pure bit algebra), and
-    IMA/DVI ADPCM (step-adaptive 4-bit differential coding).
-    Pixel-exact and sample-exact tests in tests/test_ops.py.
-  * INJECTABLE for the remaining compressed formats (H.264/AAC/MP3
-    payloads, 12-bit/arithmetic JPEG) — and as the FAST path for JPEG at
-    scale (the no-deps entropy decoder is bit-by-bit Python): pass any
-    `decoder=` callable (a PIL/pyav/librosa implementation drops in).
-  * STUBBED default otherwise — a deterministic fake keyed on the content
-    hash (oracle-expressible), or NotImplementedError when `strict`.
-
-At 100 TB the pattern is: binary assets in their own parquet column chunk
-(never shuffled), metadata extracted once via Arrow-batched mapInPandas with
-`spark.sql.execution.arrow.maxRecordsPerBatch` bounding executor memory, and
-downstream joins on the compact metadata only."""
+Decoding is a seam, not a codec: `decode_assets` and `resize_assets` take a
+`decoder=` callable (content: bytes, modality: str) -> (width, height,
+n_frames, sample_rate), so a PIL/pyav/librosa-backed decoder drops in
+without touching call sites. The default, `fake_decoder`, is a stub that
+derives the metadata from the sha256 digest of the bytes, and the resize
+output is keyed as sha256(hex(sha256(content)) + ':WxH'). Every output
+column is therefore a pure function of the content bytes, which DuckDB's
+`sha256` can reproduce: that is what lets q22_multimodal and
+q40_multimodal_resize be checked row for row against their SQL oracles."""
 
 from __future__ import annotations
 
@@ -40,8 +21,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 ASSET_SCHEMA = StructType([
     StructField("asset_id", StringType()),
@@ -63,10 +44,9 @@ DECODED_SCHEMA = StructType([
 
 
 def _fake_decode(digest: bytes, modality: str) -> tuple:
-    """Deterministic stand-in for the real decoder: derives plausible
-    dimensions from the sha256 content digest so tests are stable AND the
-    whole stub is a pure function of the bytes — expressible in the DuckDB
-    oracle (q23)."""
+    """Deterministic stand-in for a real decoder: plausible dimensions
+    derived from the sha256 content digest, a pure function of the bytes
+    that the DuckDB oracles of q22/q40 mirror."""
     h = digest
     return (
         64 + h[0] % 192 if modality in ("image", "video") else None,
@@ -77,32 +57,18 @@ def _fake_decode(digest: bytes, modality: str) -> tuple:
 
 
 def fake_decoder(content: bytes, modality: str) -> tuple:
-    """The default `decoder=` callable. INJECTION SEAM for real media
-    decoding: pass any callable (content: bytes, modality: str) ->
-    (width, height, n_frames, sample_rate) — a PIL/pyav/librosa-backed
-    implementation drops into decode_assets / resize_assets / frame_sample
-    without touching call sites (tests/test_ops.py proves the injection
-    with a header-parsing decoder)."""
+    """The default `decoder=` callable. Any callable (content: bytes,
+    modality: str) -> (width, height, n_frames, sample_rate) drops into
+    decode_assets / resize_assets in its place (tests/test_ops.py injects
+    a header-parsing decoder)."""
     return _fake_decode(hashlib.sha256(content).digest(), modality)
 
 
-def _resolve_decoder(decoder, strict: bool, what: str):
-    if decoder is not None:
-        return decoder
-    if strict:
-        raise NotImplementedError(
-            f"real {what} requires media libraries absent in this "
-            "environment — inject one via decoder=")
-    return fake_decoder
-
-
-def decode_assets(assets: DataFrame, strict: bool = False,
-                  decoder=None) -> DataFrame:
-    """Arrow-batched metadata extraction. The per-batch pandas work is the
-    ONLY Python in this module (columnar list comprehensions, no iterrows);
-    everything upstream/downstream is columnar. decoder: optional real
-    decoder callable (see fake_decoder); strict without one raises."""
-    dec = _resolve_decoder(decoder, strict, "media decoding")
+def decode_assets(assets: DataFrame, decoder=None) -> DataFrame:
+    """Arrow-batched metadata extraction: byte length, sha256 and the
+    decoder's (width, height, n_frames, sample_rate) per asset. decoder:
+    optional real decoder callable (default fake_decoder)."""
+    dec = decoder or fake_decoder
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -135,13 +101,13 @@ RESIZED_SCHEMA = StructType([
 
 
 def resize_assets(assets: DataFrame, target_w: int = 64, target_h: int = 64,
-                  strict: bool = False, decoder=None) -> DataFrame:
+                  decoder=None) -> DataFrame:
     """Aspect-fit resize plumbing (never upscales). Source dims come from
     the decoder (injectable — see fake_decoder); the pixel work itself stays
     keyed as sha256(hex(sha256(content)) + ':WxH') so every output column is
     a pure function of the bytes and oracle-checkable; the Arrow batch shape
     and schema are what a PIL-backed implementation drops into."""
-    dec = _resolve_decoder(decoder, strict, "image resizing")
+    dec = decoder or fake_decoder
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -171,1580 +137,12 @@ def resize_assets(assets: DataFrame, target_w: int = 64, target_h: int = 64,
     return assets.mapInPandas(batches, schema=RESIZED_SCHEMA)
 
 
-FRAME_SCHEMA = StructType([
-    StructField("asset_id", StringType()),
-    StructField("n_frames", IntegerType()),
-    StructField("frame_idx", IntegerType()),
-])
-
-
-def frame_sample(assets: DataFrame, k: int = 8, decoder=None) -> DataFrame:
-    """Uniform frame sampling for video assets: k evenly spaced frame
-    indices floor(i * n_frames / k), deduplicated for short clips —
-    the standard vision-pretraining sampling plan. Frame COUNTS come from
-    the decoder (injectable — see fake_decoder); the plan explodes to one
-    row per sampled frame (what a real decoder would feed the feature
-    extractor)."""
-    dec = decoder or fake_decoder
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"asset_id": [], "n_frames": [], "frame_idx": []}
-            for aid, c, m in zip(pdf["asset_id"], pdf["content"],
-                                 pdf["modality"]):
-                if m != "video":
-                    continue
-                n = dec(bytes(c or b""), m)[2]
-                for idx in sorted({i * n // k for i in range(k)}):
-                    out["asset_id"].append(aid)
-                    out["n_frames"].append(n)
-                    out["frame_idx"].append(idx)
-            yield pd.DataFrame({
-                "asset_id": out["asset_id"],
-                "n_frames": pd.array(out["n_frames"], dtype="Int32"),
-                "frame_idx": pd.array(out["frame_idx"], dtype="Int32"),
-            })
-
-    return assets.mapInPandas(batches, schema=FRAME_SCHEMA)
-
-
-FRAME_RAW_SCHEMA = StructType([
-    StructField("asset_id", StringType()),
-    StructField("n_frames", IntegerType()),
-    StructField("frame_idx", IntegerType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("frame_sha256", StringType()),     # of the decoded RGB
-])
-
-
-def frame_sample_raw(assets: DataFrame, k: int = 8) -> DataFrame:
-    """REAL uniform frame sampling for decodable video assets (animated
-    GIF and MJPEG-in-AVI): the same floor(i * n_frames / k) deduplicated
-    sampling plan as frame_sample, but each sampled frame is ACTUALLY
-    decoded — the emitted sha256 is of the real composited RGB canvas
-    (GIF) / JPEG frame (AVI). AVI frames are independent, so only the k
-    sampled frames decode (O(k) per clip); GIF composites sequentially
-    up to the last sampled index. Same 100 TB shape as the other raw
-    ops: one Arrow-batched mapInPandas pass, binary never shuffled."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"asset_id": [], "n_frames": [], "frame_idx": [],
-                   "width": [], "height": [], "sha": []}
-            for aid, c, m in zip(pdf["asset_id"], pdf["content"],
-                                 pdf["modality"]):
-                if m != "video":
-                    continue
-                blob = bytes(c or b"")
-                if blob[:6] in _GIF_SIGS:
-                    n = _gif_header(blob)[2]
-                    idxs = sorted({i * n // k for i in range(k)})
-                    n, got = decode_gif_frames(blob, idxs)
-                elif blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-                    n = _avi_header(blob)[2]
-                    idxs = sorted({i * n // k for i in range(k)})
-                    n, got = decode_avi_frames(blob, idxs)
-                else:
-                    raise ValueError(
-                        "frame_sample_raw: not GIF/AVI bytes — inject a "
-                        "decoder via frame_sample for other containers")
-                for idx in sorted(got):
-                    img = got[idx]
-                    out["asset_id"].append(aid)
-                    out["n_frames"].append(n)
-                    out["frame_idx"].append(idx)
-                    out["height"].append(img.shape[0])
-                    out["width"].append(img.shape[1])
-                    out["sha"].append(hashlib.sha256(
-                        img.astype("uint8").tobytes()).hexdigest())
-            yield pd.DataFrame({
-                "asset_id": out["asset_id"],
-                "n_frames": pd.array(out["n_frames"], dtype="Int32"),
-                "frame_idx": pd.array(out["frame_idx"], dtype="Int32"),
-                "width": pd.array(out["width"], dtype="Int32"),
-                "height": pd.array(out["height"], dtype="Int32"),
-                "frame_sha256": out["sha"],
-            })
-
-    return assets.mapInPandas(batches, schema=FRAME_RAW_SCHEMA)
-
-
 def documents_as_assets(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id") -> DataFrame:
-    """Adapter for tests/benchmarks: treats document text bytes as binary
-    image-like assets so the plumbing can be exercised without media files."""
+    """Adapter for the queries and tests: treats document text bytes as
+    binary image-like assets so the plumbing runs without media files."""
     return docs.select(
         F.col(id_col).cast("string").alias("asset_id"),
         F.lit("image").alias("modality"),
         F.encode(F.col(text_col), "UTF-8").alias("content"),
         F.lit("application/octet-stream").alias("mime"))
-
-
-# ---------------------------------------------------------------------------
-# REAL decode for uncompressed container formats (round 5). The sandbox has
-# no codec libraries, but netpbm PPM/PGM, uncompressed 24-bpp BMP and PCM
-# WAV need none — their headers and pixel/sample layouts are parsed here
-# with numpy only, which upgrades the decode path from "injectable stub"
-# to "real for uncompressed formats". Compressed formats (JPEG/PNG/MP4/...)
-# remain the documented `decoder=` injection seam.
-# ---------------------------------------------------------------------------
-
-
-def _ppm_header(b: bytes):
-    """Parses 'P6'/'P5' netpbm headers (whitespace + '#' comments per spec).
-    Returns (fmt, width, height, maxval, pixel_offset) or None."""
-    if len(b) < 2 or b[0:1] != b"P" or b[1:2] not in (b"5", b"6"):
-        return None
-    fmt = b[:2].decode()
-    pos, fields = 2, []
-    while len(fields) < 3 and pos < len(b):
-        while pos < len(b) and b[pos:pos + 1].isspace():
-            pos += 1
-        if b[pos:pos + 1] == b"#":                 # comment to end of line
-            while pos < len(b) and b[pos:pos + 1] != b"\n":
-                pos += 1
-            continue
-        start = pos
-        while pos < len(b) and not b[pos:pos + 1].isspace():
-            pos += 1
-        if pos == start:
-            return None
-        fields.append(int(b[start:pos]))
-    if len(fields) < 3:
-        return None
-    pos += 1                                       # single whitespace after maxval
-    w, h, maxval = fields
-    # A CRLF-written header leaves the '\n' of the "\r\n" separator inside
-    # the pixel data, silently shifting every decoded byte (round-5
-    # advice). The spec says ONE whitespace byte, so only consume the LF
-    # when the byte-count check proves it is separator, not pixel data.
-    ch = 3 if fmt == "P6" else 1
-    need = w * h * ch * (2 if maxval > 255 else 1)
-    if (b[pos - 1:pos] == b"\r" and b[pos:pos + 1] == b"\n"
-            and len(b) - pos - 1 >= need):
-        pos += 1
-    if len(b) - pos < need:
-        return None                                # truncated pixel data
-    return fmt, w, h, maxval, pos
-
-
-def _bmp_header(b: bytes):
-    """Uncompressed 24-bpp BITMAPINFOHEADER BMP. Returns
-    (width, height, top_down, pixel_offset) or None."""
-    import struct
-    if len(b) < 54 or b[:2] != b"BM":
-        return None
-    pixel_off = struct.unpack_from("<I", b, 10)[0]
-    w, h = struct.unpack_from("<ii", b, 18)
-    planes, bpp = struct.unpack_from("<HH", b, 26)
-    compression = struct.unpack_from("<I", b, 30)[0]
-    if planes != 1 or bpp != 24 or compression != 0:
-        return None
-    return w, abs(h), h < 0, pixel_off
-
-
-def _wav_chunks(b: bytes):
-    """Walk the RIFF chunk list of a WAVE file, yielding
-    (fourcc, body_start, body_len). Chunks are word-aligned (odd sizes
-    carry a pad byte, per the RIFF spec)."""
-    pos = 12
-    n = len(b)
-    while pos + 8 <= n:
-        cc = b[pos:pos + 4]
-        size = int.from_bytes(b[pos + 4:pos + 8], "little")
-        yield cc, pos + 8, size
-        pos += 8 + size + (size & 1)
-
-
-def _wav_header(b: bytes):
-    """RIFF/WAVE via a REAL chunk walk (the fmt chunk need not sit at the
-    canonical offset 12 — LIST/INFO or fact chunks may precede it).
-    Returns (sample_rate, n_channels) or None."""
-    import struct
-    if len(b) < 20 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        return None
-    for cc, off, size in _wav_chunks(b):
-        if cc == b"fmt " and size >= 16 and off + 16 <= len(b):
-            n_channels = struct.unpack_from("<H", b, off + 2)[0]
-            sample_rate = struct.unpack_from("<I", b, off + 4)[0]
-            return sample_rate, n_channels
-    return None
-
-
-# ---- WAV sample decode (round 6): REAL payload decode for the audio
-# codecs that need no external library — linear PCM (8/16-bit and IEEE
-# float), the G.711 companding pair (mu-law format 7, A-law format 6 —
-# pure bit algebra from the public spec), and IMA/DVI ADPCM (format 0x11
-# — the step-size-adapted 4-bit differential codec, block-structured per
-# the WAV mapping). Everything is vectorized numpy except the inherently
-# sequential ADPCM predictor recurrence (per-block Python loop over
-# nibbles). Compressed psychoacoustic payloads (MP3/AAC) stay behind
-# `decoder=`.
-
-_IMA_INDEX_TABLE = (-1, -1, -1, -1, 2, 4, 6, 8,
-                    -1, -1, -1, -1, 2, 4, 6, 8)
-_IMA_STEP_TABLE = (
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767)
-
-
-def _mulaw_expand(u):
-    """G.711 mu-law byte -> int16 (vectorized; the public expansion
-    formula, 16-bit-aligned output in +-32124)."""
-    import numpy as np
-    u = (~u.astype(np.int64)) & 0xFF
-    sign = (u & 0x80) != 0
-    exp = (u >> 4) & 7
-    mant = u & 0x0F
-    x = (((mant << 3) + 0x84) << exp) - 0x84
-    return np.where(sign, -x, x).astype(np.int16)
-
-
-def _alaw_expand(a):
-    """G.711 A-law byte -> int16 (vectorized, +-32256). Per the CCITT
-    reference, bit 7 AFTER the 0x55 toggle is SET for positive values
-    (the opposite of mu-law's post-complement convention)."""
-    import numpy as np
-    a = a.astype(np.int64) ^ 0x55
-    pos = (a & 0x80) != 0
-    exp = (a >> 4) & 7
-    mant = a & 0x0F
-    x = np.where(exp == 0, (mant << 4) + 8,
-                 ((mant << 4) + 0x108) << np.maximum(exp - 1, 0))
-    return np.where(pos, x, -x).astype(np.int16)
-
-
-def _ima_decode_block(data: bytes, n_channels: int, spb: int):
-    """One IMA ADPCM WAV block -> (spb, n_channels) int16. Block layout
-    per the public WAV mapping: a 4-byte header per channel (int16
-    predictor = first output sample, uint8 step index, reserved), then
-    4-byte nibble groups interleaved channel-major."""
-    import numpy as np
-    out = np.zeros((spb, n_channels), np.int16)
-    preds, idxs = [], []
-    for c in range(n_channels):
-        off = 4 * c
-        preds.append(int.from_bytes(data[off:off + 2], "little",
-                                    signed=True))
-        idxs.append(min(max(data[off + 2], 0), 88))
-        out[0, c] = preds[c]
-    pos = 4 * n_channels
-    si = 1                                         # next output sample
-    while si < spb and pos < len(data):
-        for c in range(n_channels):
-            group = data[pos:pos + 4]
-            pos += 4
-            pred, idx = preds[c], idxs[c]
-            s = si
-            for byte in group:
-                for nib in (byte & 0x0F, byte >> 4):
-                    step = _IMA_STEP_TABLE[idx]
-                    diff = step >> 3
-                    if nib & 4:
-                        diff += step
-                    if nib & 2:
-                        diff += step >> 1
-                    if nib & 1:
-                        diff += step >> 2
-                    pred = pred - diff if nib & 8 else pred + diff
-                    pred = max(-32768, min(32767, pred))
-                    idx = max(0, min(88, idx + _IMA_INDEX_TABLE[nib]))
-                    if s < spb:
-                        out[s, c] = pred
-                    s += 1
-            preds[c], idxs[c] = pred, idx
-        si += 8
-    return out
-
-
-def decode_wav_samples(content: bytes):
-    """REAL WAV payload decode -> (samples int16 (n, channels),
-    sample_rate). Formats: 1 = linear PCM (8-bit unsigned / 16-bit LE /
-    24-bit LE truncated to the top 16), 3 = IEEE float32 (scaled+clipped
-    to int16), 6 = G.711 A-law, 7 = G.711 mu-law, 0x11 = IMA/DVI ADPCM
-    (mono or stereo, any block_align). Anything else (MP3-in-WAV, ...)
-    raises ValueError — inject a codec-backed decoder for those."""
-    import struct
-
-    import numpy as np
-    if len(content) < 20 or content[:4] != b"RIFF" \
-            or content[8:12] != b"WAVE":
-        raise ValueError("decode_wav_samples: not RIFF/WAVE bytes")
-    fmt = data = None
-    for cc, off, size in _wav_chunks(content):
-        body = content[off:off + size]
-        if cc == b"fmt " and len(body) >= 16:
-            fmt = body
-        elif cc == b"data":
-            data = body
-    if fmt is None or data is None:
-        raise ValueError("WAV: missing fmt or data chunk")
-    (tag, ch, rate, _brate, balign, bits) = struct.unpack_from("<HHIIHH",
-                                                               fmt, 0)
-    if ch < 1:
-        raise ValueError("WAV: zero channels")
-    if tag == 1 and bits == 16:
-        n = len(data) // (2 * ch)
-        s = np.frombuffer(data, np.int16, n * ch).reshape(n, ch)
-        return s.copy(), rate
-    if tag == 1 and bits == 8:                     # 8-bit PCM is unsigned
-        n = len(data) // ch
-        u = np.frombuffer(data, np.uint8, n * ch).reshape(n, ch)
-        return ((u.astype(np.int16) - 128) << 8), rate
-    if tag == 1 and bits == 24:                    # 24-bit LE -> top 16
-        n = len(data) // (3 * ch)
-        raw = np.frombuffer(data, np.uint8, n * ch * 3).reshape(-1, 3)
-        v = (raw[:, 0].astype(np.int32)
-             | raw[:, 1].astype(np.int32) << 8
-             | raw[:, 2].astype(np.int32) << 16)
-        v = (v ^ 0x800000) - 0x800000              # sign-extend bit 23
-        return (v >> 8).astype(np.int16).reshape(n, ch), rate
-    if tag == 3 and bits == 32:
-        n = len(data) // (4 * ch)
-        f = np.frombuffer(data, "<f4", n * ch).reshape(n, ch)
-        return np.clip(np.round(f * 32767.0), -32768, 32767) \
-            .astype(np.int16), rate
-    if tag == 7 and bits == 8:                     # G.711 mu-law
-        n = len(data) // ch
-        u = np.frombuffer(data, np.uint8, n * ch).reshape(n, ch)
-        return _mulaw_expand(u), rate
-    if tag == 6 and bits == 8:                     # G.711 A-law
-        n = len(data) // ch
-        a = np.frombuffer(data, np.uint8, n * ch).reshape(n, ch)
-        return _alaw_expand(a), rate
-    if tag == 0x11 and bits == 4:                  # IMA/DVI ADPCM
-        if balign < 4 * ch:
-            raise ValueError("WAV: bad ADPCM block align")
-        spb = (balign - 4 * ch) * 2 // ch + 1      # samples per block
-        blocks = []
-        for boff in range(0, len(data) - (4 * ch) + 1, balign):
-            blocks.append(_ima_decode_block(data[boff:boff + balign],
-                                            ch, spb))
-        if not blocks:
-            return np.zeros((0, ch), np.int16), rate
-        return np.concatenate(blocks, axis=0), rate
-    raise ValueError(
-        f"WAV: format tag {tag}/{bits}-bit needs a codec-backed decoder "
-        "injected via decoder=")
-
-
-# ---- MP4/M4A container + MP3 frame header (round 6): REAL metadata
-# extraction without any codec decode — exactly the tier WAV already has.
-# The ISO BMFF box layout (ftyp/moov/trak/tkhd/mdia/mdhd/minf/stbl/stsz)
-# and the MPEG audio frame header are public specs; dimensions, frame
-# counts, and sample rates come from the actual container, while the
-# compressed PAYLOAD (H.264/AAC/MP3 audio data) stays behind `decoder=`.
-
-def _mp4_boxes(b: bytes, start: int, end: int):
-    """Yield (box_type, body_start, body_end) walking one container
-    level, handling 64-bit largesize boxes."""
-    pos = start
-    while pos + 8 <= end:
-        size = int.from_bytes(b[pos:pos + 4], "big")
-        btype = b[pos + 4:pos + 8]
-        body = pos + 8
-        if size == 1:                              # 64-bit largesize
-            if pos + 16 > end:
-                raise ValueError("MP4: truncated largesize box")
-            size = int.from_bytes(b[pos + 8:pos + 16], "big")
-            body = pos + 16
-        elif size == 0:                            # box extends to end
-            size = end - pos
-        if size < 8 or pos + size > end:
-            raise ValueError("MP4: bad box size")
-        yield btype, body, pos + size
-        pos += size
-
-
-def _mp4_header(b: bytes):
-    """(width, height, n_frames, sample_rate) from a real ISO BMFF box
-    walk, or None if not an MP4/M4A container. Video track: tkhd 16.16
-    fixed-point dimensions + stsz sample count (the REAL frame count).
-    Audio-only: mdhd timescale as the sample rate."""
-    if len(b) < 12 or b[4:8] != b"ftyp":
-        return None
-    w = h = frames = rate = None
-    try:
-        for t, s, e in _mp4_boxes(b, 0, len(b)):
-            if t != b"moov":
-                continue
-            for tt, ts, te in _mp4_boxes(b, s, e):
-                if tt != b"trak":
-                    continue
-                tw = th = tframes = trate = None
-                handler = b""
-                for mt, ms, me in _mp4_boxes(b, ts, te):
-                    if mt == b"tkhd":
-                        ver = b[ms]
-                        off = ms + (96 if ver == 1 else 84)
-                        if off <= me:              # width/height end here
-                            tw = int.from_bytes(b[off - 8:off - 4],
-                                                "big") >> 16
-                            th = int.from_bytes(b[off - 4:off], "big") >> 16
-                    elif mt == b"mdia":
-                        for dt, ds, de in _mp4_boxes(b, ms, me):
-                            if dt == b"mdhd" and de - ds >= 20:
-                                ver = b[ds]
-                                trate = int.from_bytes(
-                                    b[ds + (20 if ver == 1 else 12):
-                                      ds + (24 if ver == 1 else 16)], "big")
-                            elif dt == b"hdlr" and de - ds >= 12:
-                                handler = b[ds + 8:ds + 12]
-                            elif dt == b"minf":
-                                for ft, fs, fe in _mp4_boxes(b, ds, de):
-                                    if ft != b"stbl":
-                                        continue
-                                    for bt, bs, be in _mp4_boxes(b, fs, fe):
-                                        if bt == b"stsz" and be - bs >= 12:
-                                            tframes = int.from_bytes(
-                                                b[bs + 8:bs + 12], "big")
-                if tw:                             # a video track wins
-                    w, h, frames = tw, th, tframes
-                elif handler == b"soun" and trate:
-                    rate = trate
-    except ValueError:
-        return None
-    if w is None and rate is None:
-        return None
-    return w, h, frames, rate
-
-
-_MP3_RATES = {0: 44100, 1: 48000, 2: 32000}       # MPEG-1; halved for v2
-
-
-def _mp3_header(b: bytes):
-    """(sample_rate,) from the first MPEG audio frame sync (skipping an
-    ID3v2 tag if present), or None. Payload decode stays injectable."""
-    pos = 0
-    if b[:3] == b"ID3" and len(b) > 10:            # syncsafe tag length
-        pos = 10 + ((b[6] & 0x7F) << 21 | (b[7] & 0x7F) << 14
-                    | (b[8] & 0x7F) << 7 | (b[9] & 0x7F))
-    if pos + 4 > len(b) or b[pos] != 0xFF or (b[pos + 1] & 0xE0) != 0xE0:
-        return None
-    version = (b[pos + 1] >> 3) & 3                # 3=MPEG1, 2=MPEG2, 0=2.5
-    layer = (b[pos + 1] >> 1) & 3
-    rate_i = (b[pos + 2] >> 2) & 3
-    if layer == 0 or rate_i == 3 or version == 1:
-        return None
-    rate = _MP3_RATES.get(rate_i)
-    if rate is None:
-        return None
-    if version == 2:
-        rate //= 2
-    elif version == 0:
-        rate //= 4
-    return (rate,)
-
-
-# ---- AVI / MJPEG (round 6): REAL compressed-VIDEO decode with no codec
-# library. AVI is a RIFF container (public spec: LIST hdrl -> avih for
-# dimensions/frame count, LIST movi -> '##dc'/'##db' chunks holding one
-# frame each); Motion-JPEG stores every frame as an independent baseline
-# JPEG, so the pure-Python T.81 decoder above IS the video codec. Frames
-# are independently random-accessible (no inter-frame prediction).
-
-def _avi_parse(b: bytes):
-    """RIFF/AVI walk. Returns (w, h, n_frames, frame_payload_list) or
-    None if not AVI bytes. Frame payloads come from '##dc'/'##db' chunks
-    inside LIST movi, in stream order."""
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-        return None
-    info = {"w": None, "h": None, "total": None}
-    frames = []
-
-    def walk(start, end):
-        pos = start
-        while pos + 8 <= end:
-            cc = b[pos:pos + 4]
-            size = int.from_bytes(b[pos + 4:pos + 8], "little")
-            body0 = pos + 8
-            body1 = min(body0 + size, end)
-            if cc == b"LIST" and size >= 4:
-                walk(body0 + 4, body1)
-            elif cc == b"avih" and size >= 40:
-                info["total"] = int.from_bytes(b[body0 + 16:body0 + 20],
-                                               "little")
-                info["w"] = int.from_bytes(b[body0 + 32:body0 + 36],
-                                           "little")
-                info["h"] = int.from_bytes(b[body0 + 36:body0 + 40],
-                                           "little")
-            elif len(cc) == 4 and cc[2:4] in (b"dc", b"db"):
-                frames.append(b[body0:body1])
-            pos = body0 + size + (size & 1)        # chunks are word-aligned
-
-    walk(12, len(b))
-    if info["w"] is None:
-        raise ValueError("AVI: missing avih header")
-    n = info["total"] or len(frames)
-    return info["w"], info["h"], n, frames
-
-
-def _avi_header(b: bytes):
-    """(width, height, n_frames) or None if not AVI bytes."""
-    parsed = _avi_parse(b)
-    if parsed is None:
-        return None
-    w, h, n, _ = parsed
-    return w, h, n
-
-
-def decode_avi_frames(content: bytes, indices=None):
-    """REAL MJPEG-in-AVI decode -> (n_frames, {frame_idx: (h, w, 3)
-    uint8 RGB}). Each selected '##dc' payload must be a JPEG frame
-    (Motion-JPEG); anything else raises ValueError (DIB/H.264/... need a
-    codec-backed decoder injected). Unlike GIF, frames are independent,
-    so only the REQUESTED frames are decoded — O(k) work for k samples
-    regardless of clip length."""
-    parsed = _avi_parse(content)
-    if parsed is None:
-        raise ValueError("decode_avi_frames: not AVI bytes")
-    w, h, n, frames = parsed
-    if not frames:
-        raise ValueError("AVI: no frame chunks in movi")
-    want = (range(len(frames)) if indices is None else
-            sorted({i for i in indices if 0 <= i < len(frames)}))
-    out = {}
-    for i in want:
-        payload = frames[i]
-        if not payload.startswith(_JPEG_SIG):
-            raise ValueError(
-                "AVI: frame payload is not JPEG (MJPEG) — inject a "
-                "codec-backed decoder for this video codec")
-        out[i] = decode_jpeg_pixels(payload)
-    return len(frames), out
-
-
-# ---- PNG (round 6): the one compressed format whose codec is in the
-# Python STDLIB — PNG's IDAT stream is DEFLATE (zlib) and its per-scanline
-# prediction filters are spec'd in RFC 2083 §6; both are public knowledge
-# and need no external library. This upgrades "compressed-format decode"
-# from injection-seam-only to REAL for PNG; JPEG/MP4 (entropy coding + DCT /
-# container demux) remain the documented `decoder=` seam.
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-# color type -> samples per pixel (RFC 2083 §4.1.1)
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _png_chunks(b: bytes):
-    """Yields (type, data) for each chunk, verifying lengths and CRC-32
-    (zlib.crc32 over type+data, per spec). Raises ValueError on a corrupt
-    or truncated chunk rather than misdecoding."""
-    import struct
-    import zlib
-    pos = len(_PNG_SIG)
-    while pos + 8 <= len(b):
-        (length,) = struct.unpack_from(">I", b, pos)
-        ctype = b[pos + 4:pos + 8]
-        data_end = pos + 8 + length
-        if data_end + 4 > len(b):
-            raise ValueError("PNG: truncated chunk")
-        data = b[pos + 8:data_end]
-        (crc,) = struct.unpack_from(">I", b, data_end)
-        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG: CRC mismatch in {ctype!r} chunk")
-        yield ctype, data
-        pos = data_end + 4
-        if ctype == b"IEND":
-            return
-    raise ValueError("PNG: missing IEND")
-
-
-def _png_header(b: bytes):
-    """IHDR fields. Returns (width, height, bit_depth, color_type,
-    interlace) or None if the bytes are not PNG."""
-    import struct
-    if len(b) < len(_PNG_SIG) + 25 or not b.startswith(_PNG_SIG):
-        return None
-    for ctype, data in _png_chunks(b):
-        if ctype != b"IHDR" or len(data) != 13:
-            raise ValueError("PNG: first chunk is not a valid IHDR")
-        w, h, depth, color, comp, filt, interlace = struct.unpack(
-            ">IIBBBBB", data)
-        if comp != 0 or filt != 0:
-            raise ValueError("PNG: unknown compression/filter method")
-        return w, h, depth, color, interlace
-
-
-def _png_unfilter(raw, w: int, h: int, ch: int):
-    """Reverses the five per-scanline filters (None/Sub/Up/Average/Paeth,
-    RFC 2083 §6.3-6.9). numpy per row; Sub is an exact per-lane cumulative
-    sum mod 256, Up is one vector add, Average/Paeth walk pixels with
-    bpp-wide lane vectors. Returns (h, w*ch) uint8."""
-    import numpy as np
-    stride = w * ch
-    rows = raw.reshape(h, 1 + stride)
-    filters = rows[:, 0]
-    out = np.empty((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        f = int(filters[y])
-        cur = rows[y, 1:]
-        if f == 0:                                  # None
-            rec = cur.copy()
-        elif f == 1:                                # Sub: prefix sum per lane
-            rec = (np.cumsum(cur.reshape(w, ch), axis=0, dtype=np.uint64)
-                   % 256).astype(np.uint8).reshape(stride)
-        elif f == 2:                                # Up
-            rec = cur + prev                        # uint8 wraps = mod 256
-        elif f == 3:                                # Average
-            rec = np.empty(stride, dtype=np.uint8)
-            left = np.zeros(ch, dtype=np.uint16)
-            c16, p16 = cur.astype(np.uint16), prev.astype(np.uint16)
-            for x in range(0, stride, ch):
-                rec[x:x + ch] = (c16[x:x + ch]
-                                 + ((left + p16[x:x + ch]) >> 1)) & 0xFF
-                left = rec[x:x + ch].astype(np.uint16)
-        elif f == 4:                                # Paeth
-            rec = np.empty(stride, dtype=np.uint8)
-            a = np.zeros(ch, dtype=np.int32)        # left
-            c = np.zeros(ch, dtype=np.int32)        # upper-left
-            b_ = prev.astype(np.int32)              # up
-            for x in range(0, stride, ch):
-                bb = b_[x:x + ch]
-                p = a + bb - c
-                pa, pb, pc = np.abs(p - a), np.abs(p - bb), np.abs(p - c)
-                pred = np.where((pa <= pb) & (pa <= pc), a,
-                                np.where(pb <= pc, bb, c))
-                rec[x:x + ch] = ((cur[x:x + ch].astype(np.int32) + pred)
-                                 & 0xFF).astype(np.uint8)
-                a = rec[x:x + ch].astype(np.int32)
-                c = bb
-        else:
-            raise ValueError(f"PNG: unknown filter type {f}")
-        out[y] = rec
-        prev = rec
-    return out
-
-
-def decode_png_pixels(content: bytes):
-    """REAL PNG decode (stdlib zlib + numpy, no codec libraries): 8-bit
-    non-interlaced gray / RGB / palette / gray+alpha / RGBA -> (h, w, 3)
-    uint8 RGB (alpha dropped, gray replicated, palette resolved via PLTE).
-    Raises ValueError on CRC mismatch, truncation, or unsupported variants
-    (16-bit, sub-byte depths, Adam7 interlace) — never misdecodes."""
-    import zlib
-    import numpy as np
-    hdr = _png_header(content)
-    if hdr is None:
-        raise ValueError("decode_png_pixels: not PNG bytes")
-    w, h, depth, color, interlace = hdr
-    if depth != 8:
-        raise ValueError(f"PNG: bit depth {depth} not supported (8 only)")
-    if interlace != 0:
-        raise ValueError("PNG: Adam7 interlace not supported")
-    if color not in _PNG_CHANNELS:
-        raise ValueError(f"PNG: unknown color type {color}")
-    ch = _PNG_CHANNELS[color]
-    idat, plte = [], None
-    for ctype, data in _png_chunks(content):
-        if ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"PLTE":
-            plte = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-    raw = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
-    if raw.size != h * (1 + w * ch):
-        raise ValueError("PNG: decompressed size does not match dimensions")
-    px = _png_unfilter(raw, w, h, ch).reshape(h, w, ch)
-    if color == 3:                                  # palette
-        if plte is None:
-            raise ValueError("PNG: palette image without PLTE chunk")
-        if int(px.max()) >= len(plte):
-            raise ValueError("PNG: palette index out of range")
-        return plte[px[:, :, 0]]
-    if color in (4, 6):                             # drop alpha
-        px = px[:, :, :-1]
-    if px.shape[2] == 1:                            # gray -> RGB
-        px = np.repeat(px, 3, axis=2)
-    return px.copy()
-
-
-# ---- GIF (round 6): the second compressed format needing no external
-# library — GIF's image data is LZW (a ~40-line pure-Python decode; the
-# CompuServe GIF87a/89a spec is public) over palette indices. Multi-frame
-# GIFs give the video path a REAL frame count.
-
-_GIF_SIGS = (b"GIF87a", b"GIF89a")
-
-
-def _gif_lzw_decode(data: bytes, mcs: int) -> bytes:
-    """GIF-flavor LZW: variable-width codes packed LSB-first, clear/end
-    codes at 2^mcs and 2^mcs+1, code width growing to 12 bits when the
-    table fills (the non-'early change' convention GIF uses)."""
-    clear, end = 1 << mcs, (1 << mcs) + 1
-
-    def fresh():
-        return [bytes([i]) for i in range(clear)] + [b"", b""]
-
-    dic = fresh()
-    width = mcs + 1
-    out = bytearray()
-    prev = None
-    bitpos, total_bits = 0, len(data) * 8
-    while bitpos + width <= total_bits:
-        byte_i, bit_o = divmod(bitpos, 8)
-        chunk = int.from_bytes(data[byte_i:byte_i + 3], "little")
-        code = (chunk >> bit_o) & ((1 << width) - 1)
-        bitpos += width
-        if code == clear:
-            dic, width, prev = fresh(), mcs + 1, None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            if code >= len(dic):
-                raise ValueError("GIF: first LZW code not a literal")
-            entry = dic[code]
-        elif code < len(dic):
-            entry = dic[code]
-            dic.append(prev + entry[:1])
-        elif code == len(dic):                     # the KwKwK case
-            entry = prev + prev[:1]
-            dic.append(entry)
-        else:
-            raise ValueError("GIF: LZW code beyond table")
-        # the decoder's table lags the encoder by exactly one entry
-        # (the encoder registers a string one code before the decoder can
-        # reconstruct it), so the width bump fires at 2^width - 1 entries
-        if len(dic) + 1 == (1 << width) and width < 12:
-            width += 1
-        out += entry
-        prev = entry
-    return bytes(out)
-
-
-def _gif_parse(b: bytes):
-    """Header + block walk. Returns (w, h, bg_index, global_palette,
-    frames) where each frame is (left, top, fw, fh, interlace,
-    local_palette, min_code_size, lzw_bytes); None if not GIF."""
-    import numpy as np
-    if len(b) < 13 or b[:6] not in _GIF_SIGS:
-        return None
-    w = int.from_bytes(b[6:8], "little")
-    h = int.from_bytes(b[8:10], "little")
-    flags, bg = b[10], b[11]
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 ** ((flags & 7) + 1)
-        if pos + n * 3 > len(b):
-            raise ValueError("GIF: truncated global color table")
-        gct = np.frombuffer(b, np.uint8, n * 3, pos).reshape(n, 3).copy()
-        pos += n * 3
-    frames = []
-    while pos < len(b):
-        t = b[pos]
-        if t == 0x3B:                              # trailer
-            return w, h, bg, gct, frames
-        if t == 0x21:                              # extension + sub-blocks
-            pos += 2
-            while pos < len(b) and b[pos] != 0:
-                pos += 1 + b[pos]
-            pos += 1
-        elif t == 0x2C:                            # image descriptor
-            if pos + 10 > len(b):
-                raise ValueError("GIF: truncated image descriptor")
-            left = int.from_bytes(b[pos + 1:pos + 3], "little")
-            top = int.from_bytes(b[pos + 3:pos + 5], "little")
-            fw = int.from_bytes(b[pos + 5:pos + 7], "little")
-            fh = int.from_bytes(b[pos + 7:pos + 9], "little")
-            fl = b[pos + 9]
-            pos += 10
-            lct = None
-            if fl & 0x80:
-                n = 2 ** ((fl & 7) + 1)
-                lct = np.frombuffer(b, np.uint8, n * 3, pos) \
-                    .reshape(n, 3).copy()
-                pos += n * 3
-            mcs = b[pos]
-            pos += 1
-            data = bytearray()
-            while pos < len(b) and b[pos] != 0:
-                ln = b[pos]
-                data += b[pos + 1:pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            frames.append((left, top, fw, fh, bool(fl & 0x40), lct, mcs,
-                           bytes(data)))
-        else:
-            raise ValueError(f"GIF: unknown block 0x{t:02x}")
-    raise ValueError("GIF: missing trailer")
-
-
-def _gif_header(b: bytes):
-    """(width, height, n_frames) or None if not GIF bytes."""
-    parsed = _gif_parse(b)
-    if parsed is None:
-        return None
-    w, h, _, _, frames = parsed
-    return w, h, max(1, len(frames))
-
-
-def _gif_frame_indices(frame):
-    """LZW-decode one parsed GIF frame into its (fh, fw) palette-index
-    array, undoing the 4-pass interlace shuffle when flagged."""
-    import numpy as np
-    left, top, fw, fh, interlace, lct, mcs, data = frame
-    idx = np.frombuffer(_gif_lzw_decode(data, mcs), dtype=np.uint8)
-    if idx.size < fw * fh:
-        raise ValueError("GIF: LZW output shorter than frame")
-    idx = idx[:fw * fh].reshape(fh, fw)
-    if interlace:                                  # 4-pass row shuffle
-        out = np.empty_like(idx)
-        order = ([*range(0, fh, 8)] + [*range(4, fh, 8)]
-                 + [*range(2, fh, 4)] + [*range(1, fh, 2)])
-        out[np.array(order)] = idx
-        idx = out
-    return idx
-
-
-def decode_gif_pixels(content: bytes):
-    """REAL GIF decode (pure-Python LZW + numpy): FIRST frame composited
-    onto the logical screen (background = palette[bg], other frames'
-    regions untouched; GCE transparency not applied to frame 0) ->
-    (h, w, 3) uint8 RGB. Raises ValueError on truncation/bad codes."""
-    import numpy as np
-    parsed = _gif_parse(content)
-    if parsed is None:
-        raise ValueError("decode_gif_pixels: not GIF bytes")
-    w, h, bg, gct, frames = parsed
-    if not frames:
-        raise ValueError("GIF: no image data")
-    left, top, fw, fh, interlace, lct, mcs, data = frames[0]
-    pal = lct if lct is not None else gct
-    if pal is None:
-        raise ValueError("GIF: frame without any color table")
-    idx = _gif_frame_indices(frames[0])
-    if int(idx.max()) >= len(pal):
-        raise ValueError("GIF: palette index out of range")
-    canvas = np.zeros((h, w, 3), dtype=np.uint8)
-    if gct is not None and bg < len(gct):
-        canvas[:, :] = gct[bg]
-    canvas[top:top + fh, left:left + fw] = pal[idx]
-    return canvas
-
-
-def decode_gif_frames(content: bytes, indices=None):
-    """REAL multi-frame GIF decode -> (n_frames, {frame_idx: (h, w, 3)
-    uint8 canvas}). Frames composite successively onto the logical
-    screen (do-not-dispose semantics — the common animation case; GCE
-    disposal modes 2/3 and transparency are not modeled, documented
-    simplification). `indices=None` decodes every frame; otherwise only
-    the canvases for the requested indices are returned (decode is still
-    sequential up to max(indices) — GIF frames are delta-composited, so
-    random access requires the prefix)."""
-    import numpy as np
-    parsed = _gif_parse(content)
-    if parsed is None:
-        raise ValueError("decode_gif_frames: not GIF bytes")
-    w, h, bg, gct, frames = parsed
-    if not frames:
-        raise ValueError("GIF: no image data")
-    want = None if indices is None else {i for i in indices
-                                         if 0 <= i < len(frames)}
-    last = len(frames) - 1 if want is None else (max(want) if want else -1)
-    canvas = np.zeros((h, w, 3), dtype=np.uint8)
-    if gct is not None and bg < len(gct):
-        canvas[:, :] = gct[bg]
-    out = {}
-    for i, fr in enumerate(frames[:last + 1]):
-        left, top, fw, fh, interlace, lct, mcs, data = fr
-        pal = lct if lct is not None else gct
-        if pal is None:
-            raise ValueError("GIF: frame without any color table")
-        idx = _gif_frame_indices(fr)
-        if int(idx.max()) >= len(pal):
-            raise ValueError("GIF: palette index out of range")
-        canvas[top:top + fh, left:left + fw] = pal[idx]
-        if want is None or i in want:
-            out[i] = canvas.copy()
-    return len(frames), out
-
-
-# ---- JPEG (round 6): baseline sequential DCT JPEG per the public ITU
-# T.81 spec — the dominant web-crawl image format. Everything needed is
-# pure Python + numpy: canonical Huffman entropy decode, dequantize +
-# de-zigzag, 8x8 IDCT as an orthogonal matrix sandwich, chroma upsample,
-# YCbCr->RGB. No codec library. The entropy loop is bit-by-bit Python, so
-# at scale the `decoder=` seam stays the fast path; this is the
-# correctness-first no-deps fallback (and the test oracle's target).
-
-_JPEG_SIG = b"\xff\xd8"
-
-
-def _make_zigzag():
-    """Flat (row-major) index of the k-th coefficient in JPEG zigzag
-    order: diagonals d=r+c, odd diagonals walk r ascending."""
-    import numpy as np
-    coords = sorted(((r, c) for r in range(8) for c in range(8)),
-                    key=lambda rc: (rc[0] + rc[1],
-                                    rc[0] if (rc[0] + rc[1]) % 2 else -rc[0]))
-    return np.array([r * 8 + c for r, c in coords])
-
-
-def _dct_basis():
-    """Orthogonal 8x8 DCT-II basis A (A @ A.T = I): forward F = A f A^T,
-    inverse f = A^T F A."""
-    import numpy as np
-    x = np.arange(8)
-    A = np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16) / 2.0
-    A[0] /= np.sqrt(2)
-    return A
-
-
-class _JpegBits:
-    """MSB-first bit reader over entropy-coded data with 0xFF00 byte
-    unstuffing; raises on any bare marker mid-symbol."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.d, self.pos, self.acc, self.n = data, pos, 0, 0
-
-    def _next_byte(self) -> int:
-        d = self.d
-        if self.pos >= len(d):
-            raise ValueError("JPEG: truncated entropy-coded segment")
-        x = d[self.pos]
-        self.pos += 1
-        if x == 0xFF:
-            if self.pos >= len(d):
-                raise ValueError("JPEG: truncated after 0xFF")
-            if d[self.pos] != 0x00:
-                raise ValueError("JPEG: marker inside entropy data")
-            self.pos += 1                          # stuffed zero
-        return x
-
-    def bit(self) -> int:
-        if self.n == 0:
-            self.acc, self.n = self._next_byte(), 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def bits(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.bit()
-        return v
-
-    def sync_restart(self, idx: int) -> None:
-        """Byte-align and consume the expected RSTn marker, skipping any
-        stuffed 0xFF00 pairs or 0xFF fill bytes the encoder's 1-fill
-        alignment may have produced before it."""
-        self.n = 0
-        d = self.d
-        while (self.pos + 1 < len(d) and d[self.pos] == 0xFF
-               and d[self.pos + 1] in (0x00, 0xFF)):
-            self.pos += 2 if d[self.pos + 1] == 0x00 else 1
-        if (self.pos + 1 >= len(d) or d[self.pos] != 0xFF
-                or d[self.pos + 1] != 0xD0 + (idx & 7)):
-            raise ValueError("JPEG: expected restart marker")
-        self.pos += 2
-
-
-def _huff_decode(br: "_JpegBits", table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("JPEG: invalid Huffman code")
-
-
-def _extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 sign extension of an s-bit magnitude."""
-    return v - (1 << s) + 1 if s and v < (1 << (s - 1)) else v
-
-
-def _jpeg_header(b: bytes):
-    """(width, height) from the SOFn segment, or None if not JPEG."""
-    if not b.startswith(_JPEG_SIG):
-        return None
-    pos = 2
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            return None
-        m = b[pos + 1]
-        if m == 0xD8 or 0xD0 <= m <= 0xD7:
-            pos += 2
-            continue
-        if m == 0xD9:
-            return None
-        seglen = int.from_bytes(b[pos + 2:pos + 4], "big")
-        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-            if pos + 9 > len(b):
-                return None
-            return (int.from_bytes(b[pos + 7:pos + 9], "big"),
-                    int.from_bytes(b[pos + 5:pos + 7], "big"))
-        pos += 2 + seglen
-    return None
-
-
-def decode_jpeg_pixels(content: bytes):
-    """REAL JPEG decode (pure Python + numpy, ITU T.81): Huffman entropy
-    decode -> dequantize (zigzag-ordered DQT) -> IDCT -> chroma upsample ->
-    YCbCr->RGB, returning (h, w, 3) uint8. Supports baseline sequential
-    (SOF0/1: one interleaved DC+AC scan) AND progressive (SOF2: multi-scan
-    spectral selection + successive approximation per T.81 Annex G —
-    EOB-run coding, AC refinement correction bits, non-interleaved
-    per-component scan geometry), 1- and 3-component frames, arbitrary
-    1-2x sampling factors, and DRI/RSTn restart intervals. 12-bit,
-    arithmetic-coded, and lossless/hierarchical streams raise ValueError —
-    inject a codec decoder for those."""
-    import numpy as np
-    if not content.startswith(_JPEG_SIG):
-        raise ValueError("decode_jpeg_pixels: not JPEG bytes")
-    qt, hdc, hac = {}, {}, {}
-    frame, ri, pos = None, 0, 2
-    prog, coefs = False, None
-    while pos + 2 <= len(content):
-        if content[pos] != 0xFF:
-            raise ValueError("JPEG: expected marker")
-        m = content[pos + 1]
-        if m == 0xD9:                              # EOI
-            if prog and coefs is not None:
-                return _jpeg_reconstruct(frame, coefs, qt)
-            break
-        if pos + 4 > len(content):
-            raise ValueError("JPEG: truncated segment header")
-        seglen = int.from_bytes(content[pos + 2:pos + 4], "big")
-        seg = content[pos + 4:pos + 2 + seglen]
-        if len(seg) != seglen - 2:
-            raise ValueError("JPEG: truncated segment")
-        if m == 0xDB:                              # DQT (zigzag order)
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 15
-                i += 1
-                if pq != 0:
-                    raise ValueError("JPEG: 16-bit quant table unsupported")
-                qt[tq] = np.frombuffer(seg, np.uint8, 64, i).astype(np.int32)
-                i += 64
-        elif m == 0xC4:                            # DHT (canonical codes)
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 15
-                counts = seg[i + 1:i + 17]
-                i += 17
-                tbl, code = {}, 0
-                for length in range(1, 17):
-                    for _ in range(counts[length - 1]):
-                        tbl[(length, code)] = seg[i]
-                        i += 1
-                        code += 1
-                    code <<= 1
-                (hdc if tc == 0 else hac)[th] = tbl
-        elif m in (0xC0, 0xC1, 0xC2):              # SOF0/1 seq, SOF2 prog
-            if seg[0] != 8:
-                raise ValueError("JPEG: only 8-bit precision supported")
-            h = int.from_bytes(seg[1:3], "big")
-            w = int.from_bytes(seg[3:5], "big")
-            comps = [{"id": seg[6 + 3 * k], "h": seg[7 + 3 * k] >> 4,
-                      "v": seg[7 + 3 * k] & 15, "tq": seg[8 + 3 * k]}
-                     for k in range(seg[5])]
-            frame = (w, h, comps)
-            prog = m == 0xC2
-        elif 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-            raise ValueError("JPEG: only sequential (SOF0/1) and "
-                             "progressive (SOF2) Huffman streams supported "
-                             "— inject a decoder for this SOF type")
-        elif m == 0xDD:                            # DRI
-            ri = int.from_bytes(seg[:2], "big")
-        elif m == 0xDA:                            # SOS -> entropy data
-            ns = seg[0]
-            scomps = [(seg[1 + 2 * k], seg[2 + 2 * k] >> 4,
-                       seg[2 + 2 * k] & 15) for k in range(ns)]
-            if not prog:
-                return _jpeg_scan(content, pos + 2 + seglen, frame, scomps,
-                                  qt, hdc, hac, ri)
-            if frame is None:
-                raise ValueError("JPEG: SOS before SOF")
-            if coefs is None:
-                w_, h_, comps_ = frame
-                hmax = max(c["h"] for c in comps_)
-                vmax = max(c["v"] for c in comps_)
-                mcux = -(-w_ // (8 * hmax))
-                mcuy = -(-h_ // (8 * vmax))
-                coefs = {c["id"]: np.zeros(
-                    (mcuy * c["v"], mcux * c["h"], 64), np.int32)
-                    for c in comps_}
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
-            pos = _jpeg_prog_scan(content, pos + 2 + seglen, frame, scomps,
-                                  coefs, hdc, hac, ri, ss, se,
-                                  ahal >> 4, ahal & 15)
-            continue
-        pos += 2 + seglen
-    if prog and coefs is not None:
-        raise ValueError("JPEG: progressive stream truncated before EOI")
-    raise ValueError("JPEG: no SOS segment found")
-
-
-def _jpeg_scan(b: bytes, pos: int, frame, scomps, qt, hdc, hac, ri: int):
-    """Decode one interleaved baseline scan into RGB pixels."""
-    import numpy as np
-    if frame is None:
-        raise ValueError("JPEG: SOS before SOF")
-    w, h, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    by_id = {c["id"]: c for c in comps}
-    order = []
-    for cs, td, ta in scomps:
-        c = by_id[cs]
-        order.append((c, hdc[td], hac[ta], qt[c["tq"]]))
-    planes = [np.zeros((mcuy * 8 * c["v"], mcux * 8 * c["h"]))
-              for c, _, _, _ in order]
-    zz, A = _make_zigzag(), _dct_basis()
-    preds = [0] * len(order)
-    br = _JpegBits(b, pos)
-    mcu, rst = 0, 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if ri and mcu and mcu % ri == 0:
-                br.sync_restart(rst)
-                rst = (rst + 1) & 7
-                preds = [0] * len(order)
-            for ci, (c, tdc, tac, q) in enumerate(order):
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        coefs = np.zeros(64, np.int64)
-                        s = _huff_decode(br, tdc)
-                        preds[ci] += _extend(br.bits(s), s) if s else 0
-                        coefs[0] = preds[ci]
-                        k = 1
-                        while k < 64:
-                            rs = _huff_decode(br, tac)
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r != 15:        # EOB
-                                    break
-                                k += 16            # ZRL
-                                continue
-                            k += r
-                            if k > 63:
-                                raise ValueError("JPEG: AC index overflow")
-                            coefs[k] = _extend(br.bits(s), s)
-                            k += 1
-                        blk = np.zeros(64)
-                        blk[zz] = coefs * q        # dequant + de-zigzag
-                        f = A.T @ blk.reshape(8, 8) @ A + 128.0
-                        py = (my * c["v"] + by) * 8
-                        px = (mx * c["h"] + bx) * 8
-                        planes[ci][py:py + 8, px + 0:px + 8] = f
-            mcu += 1
-    full = []
-    for (c, _, _, _), pl in zip(order, planes):
-        sy, sx = vmax // c["v"], hmax // c["h"]
-        if sy > 1 or sx > 1:
-            pl = np.kron(pl, np.ones((sy, sx)))
-        full.append(pl[:h, :w])
-    return _jpeg_color(full)
-
-
-def _jpeg_color(full):
-    """Shared YCbCr->RGB (or grayscale replicate) tail: `full` is a list of
-    1 or 3 float planes already upsampled and cropped to (h, w)."""
-    import numpy as np
-    if len(full) == 1:
-        y = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
-        return np.repeat(y[:, :, None], 3, axis=2)
-    if len(full) != 3:
-        raise ValueError("JPEG: unsupported component count")
-    y, cb, cr = full
-    img = np.stack([y + 1.402 * (cr - 128.0),
-                    y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
-                    y + 1.772 * (cb - 128.0)], axis=2)
-    return np.clip(np.round(img), 0, 255).astype(np.uint8)
-
-
-def _comp_blocks(w: int, h: int, c: dict, hmax: int, vmax: int):
-    """(nbx, nby) block dims of one component for NON-interleaved scans
-    (T.81 A.1.1: ceil of the downsampled component dims / 8 — NOT padded
-    to the MCU grid, unlike interleaved scans)."""
-    cw = -(-(w * c["h"]) // hmax)
-    chh = -(-(h * c["v"]) // vmax)
-    return -(-cw // 8), -(-chh // 8)
-
-
-def _jpeg_prog_scan(b, pos, frame, scomps, coefs, hdc, hac, ri,
-                    ss, se, ah, al):
-    """Decode ONE progressive scan (T.81 Annex G) into the per-component
-    zigzag coefficient arrays `coefs[comp_id]` (nby, nbx, 64), returning
-    the stream position of the next marker. Four scan kinds:
-
-      DC first   (Ss=0, Ah=0): diff-coded predictors, value << Al
-      DC refine  (Ss=0, Ah>0): one bit per block appended at bit Al
-      AC first   (Ss>0, Ah=0): run/size + EOB-run (EOBn) coding
-      AC refine  (Ss>0, Ah>0): correction bit per already-nonzero coef,
-                               new coefs inserted at +-(1 << Al)
-
-    DC scans may interleave components (MCU order over the padded grid);
-    AC scans are single-component with raster order over `_comp_blocks`
-    dims. RSTn resets predictors AND the EOB run."""
-    w, h, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    by_id = {c["id"]: c for c in comps}
-    br = _JpegBits(b, pos)
-    bit_al = 1 << al
-
-    if ss == 0:                                    # ---- DC scan
-        if se != 0:
-            raise ValueError("JPEG: progressive DC scan with Se != 0")
-        order = [(by_id[cs], hdc.get(td) if ah == 0 else None)
-                 for cs, td, _ in scomps]
-        if ah == 0 and any(t is None for _, t in order):
-            raise ValueError("JPEG: missing DC Huffman table")
-        preds = [0] * len(order)
-
-        def dc_unit(ci, blk):
-            if ah == 0:                            # first pass
-                s = _huff_decode(br, order[ci][1])
-                preds[ci] += _extend(br.bits(s), s) if s else 0
-                blk[0] = preds[ci] << al
-            else:                                  # refinement bit
-                blk[0] |= br.bit() << al
-
-        mcu = rst = 0
-        if len(order) == 1:                        # non-interleaved
-            c = order[0][0]
-            arr = coefs[c["id"]]
-            nbx, nby = _comp_blocks(w, h, c, hmax, vmax)
-            for i in range(nbx * nby):
-                if ri and mcu and mcu % ri == 0:
-                    br.sync_restart(rst)
-                    rst = (rst + 1) & 7
-                    preds = [0]
-                by, bx = divmod(i, nbx)
-                dc_unit(0, arr[by, bx])
-                mcu += 1
-        else:                                      # interleaved MCU order
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if ri and mcu and mcu % ri == 0:
-                        br.sync_restart(rst)
-                        rst = (rst + 1) & 7
-                        preds = [0] * len(order)
-                    for ci, (c, _) in enumerate(order):
-                        arr = coefs[c["id"]]
-                        for by in range(c["v"]):
-                            for bx in range(c["h"]):
-                                dc_unit(ci, arr[my * c["v"] + by,
-                                                mx * c["h"] + bx])
-                    mcu += 1
-    else:                                          # ---- AC scan
-        if len(scomps) != 1:
-            raise ValueError("JPEG: progressive AC scan must be "
-                             "single-component")
-        if se > 63 or ss > se:
-            raise ValueError("JPEG: bad spectral band")
-        cs, _, ta = scomps[0]
-        c = by_id[cs]
-        tac = hac.get(ta)
-        if tac is None:
-            raise ValueError("JPEG: missing AC Huffman table")
-        arr = coefs[c["id"]]
-        nbx, nby = _comp_blocks(w, h, c, hmax, vmax)
-        eobrun = 0
-
-        def refine(blk, k):
-            v = int(blk[k])
-            if br.bit() and not (v & bit_al):
-                blk[k] = v + bit_al if v > 0 else v - bit_al
-
-        mcu = rst = 0
-        for i in range(nbx * nby):
-            if ri and mcu and mcu % ri == 0:
-                br.sync_restart(rst)
-                rst = (rst + 1) & 7
-                eobrun = 0
-            by, bx = divmod(i, nbx)
-            blk = arr[by, bx]
-            if ah == 0:                            # first pass
-                if eobrun:
-                    eobrun -= 1
-                else:
-                    k = ss
-                    while k <= se:
-                        rs = _huff_decode(br, tac)
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r != 15:            # EOBn
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += br.bits(r)
-                                break
-                            k += 16                # ZRL
-                        else:
-                            k += r
-                            if k > se:
-                                raise ValueError("JPEG: AC index overflow")
-                            blk[k] = _extend(br.bits(s), s) << al
-                            k += 1
-            else:                                  # refinement pass
-                if eobrun:
-                    for kk in range(ss, se + 1):
-                        if blk[kk]:
-                            refine(blk, kk)
-                    eobrun -= 1
-                else:
-                    k = ss
-                    while k <= se:
-                        rs = _huff_decode(br, tac)
-                        r, s = rs >> 4, rs & 15
-                        newval = 0
-                        if s == 0:
-                            if r != 15:            # EOBn: refine the rest
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += br.bits(r)
-                                break
-                            # ZRL: pass 16 zero-history coefs below
-                        elif s == 1:
-                            newval = bit_al if br.bit() else -bit_al
-                        else:
-                            raise ValueError("JPEG: refinement size != 1")
-                        while k <= se:             # walk, refining nonzeros
-                            if blk[k]:
-                                refine(blk, k)
-                            elif r == 0:
-                                break
-                            else:
-                                r -= 1
-                            k += 1
-                        if newval:
-                            if k > se:
-                                raise ValueError("JPEG: refinement overflow")
-                            blk[k] = newval
-                        k += 1
-                    if eobrun:                     # finish this EOB block
-                        for kk in range(k, se + 1):
-                            if blk[kk]:
-                                refine(blk, kk)
-                        eobrun -= 1
-            mcu += 1
-
-    # skip any padding up to the next marker (fill 0xFFs allowed)
-    p = br.pos
-    n = len(b)
-    while p + 1 < n and not (b[p] == 0xFF and b[p + 1] not in (0x00, 0xFF)):
-        p += 1
-    return p
-
-
-def _jpeg_reconstruct(frame, coefs, qt):
-    """Shared final stage for progressive streams: dequantize the
-    accumulated zigzag coefficients, de-zigzag, vectorized IDCT (one
-    einsum per component), upsample, crop, color-convert."""
-    import numpy as np
-    w, h, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    zz, A = _make_zigzag(), _dct_basis()
-    full = []
-    for c in comps:
-        arr = coefs[c["id"]].astype(np.float64)
-        q = qt[c["tq"]].astype(np.float64)
-        deq = arr * q[None, None, :]
-        blk = np.zeros_like(deq)
-        blk[:, :, zz] = deq
-        nby, nbx = arr.shape[:2]
-        blk = blk.reshape(nby, nbx, 8, 8)
-        f = np.einsum("ij,yxjk,kl->yxil", A.T, blk, A) + 128.0
-        pl = f.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
-        sy, sx = vmax // c["v"], hmax // c["h"]
-        if sy > 1 or sx > 1:
-            pl = np.kron(pl, np.ones((sy, sx)))
-        full.append(pl[:h, :w])
-    return _jpeg_color(full)
-
-
-def raw_decoder(content: bytes, modality: str) -> tuple:
-    """REAL decoder, drop-in for the `decoder=` seam: (width, height,
-    n_frames, sample_rate) from actual file headers. Supports netpbm P5/P6,
-    uncompressed 24-bpp BMP, PNG (stdlib-zlib DEFLATE decode), GIF
-    (pure-Python LZW; multi-frame GIFs report a REAL frame count for the
-    video path), JPEG both baseline and progressive (SOFn dimensions;
-    pixels via decode_jpeg_pixels), MP4/M4A containers (real ISO BMFF
-    box walk: tkhd dimensions, stsz frame count, audio-track mdhd sample
-    rate), AVI (RIFF walk: avih dimensions + frame count; MJPEG payloads
-    decode fully via decode_avi_frames), MP3 frame headers (sample rate,
-    ID3v2-aware), and PCM WAV; anything else raises ValueError
-    (psychoacoustic/inter-frame payloads — H.264/AAC/MP3 frames — need a
-    codec-backed decoder injected; this function never fakes)."""
-    if modality in ("image", "video"):
-        ppm = _ppm_header(content)
-        if ppm is not None:
-            _, w, h, _, _ = ppm
-            return (w, h, 1 if modality == "video" else None, None)
-        bmp = _bmp_header(content)
-        if bmp is not None:
-            w, h, _, _ = bmp
-            return (w, h, 1 if modality == "video" else None, None)
-        png = _png_header(content)
-        if png is not None:
-            w, h = png[0], png[1]
-            return (w, h, 1 if modality == "video" else None, None)
-        gif = _gif_header(content)
-        if gif is not None:
-            w, h, nf = gif
-            return (w, h, nf if modality == "video" else None, None)
-        jpg = _jpeg_header(content)
-        if jpg is not None:
-            w, h = jpg
-            return (w, h, 1 if modality == "video" else None, None)
-        mp4 = _mp4_header(content)
-        if mp4 is not None and mp4[0] is not None:
-            w, h, nf, _ = mp4
-            return (w, h, nf if modality == "video" else None, None)
-        avi = _avi_header(content)
-        if avi is not None:
-            w, h, nf = avi
-            return (w, h, nf if modality == "video" else None, None)
-    elif modality == "audio":
-        wav = _wav_header(content)
-        if wav is not None:
-            return (None, None, None, wav[0])
-        mp4 = _mp4_header(content)                 # M4A audio container
-        if mp4 is not None and mp4[3] is not None:
-            return (None, None, None, mp4[3])
-        mp3 = _mp3_header(content)
-        if mp3 is not None:
-            return (None, None, None, mp3[0])
-    raise ValueError(
-        f"raw_decoder: unrecognized/compressed {modality} bytes — inject a "
-        "codec-backed decoder via decoder= for this format")
-
-
-def decode_raw_pixels(content: bytes):
-    """Pixel array (uint8, H x W x 3 RGB) from PPM/PGM/BMP/PNG/GIF/JPEG
-    (baseline or progressive) bytes."""
-    import numpy as np
-    ppm = _ppm_header(content)
-    if ppm is not None:
-        fmt, w, h, maxval, off = ppm
-        if maxval > 255:
-            raise ValueError("16-bit netpbm not supported")
-        ch = 3 if fmt == "P6" else 1
-        px = np.frombuffer(content, dtype=np.uint8, count=w * h * ch,
-                           offset=off).reshape(h, w, ch)
-        return np.repeat(px, 3, axis=2) if ch == 1 else px.copy()
-    bmp = _bmp_header(content)
-    if bmp is not None:
-        import numpy as np
-        w, h, top_down, off = bmp
-        stride = (w * 3 + 3) & ~3                  # rows padded to 4 bytes
-        rows = np.frombuffer(content, dtype=np.uint8, count=stride * h,
-                             offset=off).reshape(h, stride)[:, :w * 3]
-        img = rows.reshape(h, w, 3)[:, :, ::-1]    # BGR -> RGB
-        return img if top_down else img[::-1]      # bottom-up -> top-down
-    if content.startswith(_PNG_SIG):
-        return decode_png_pixels(content)
-    if content[:6] in _GIF_SIGS:
-        return decode_gif_pixels(content)
-    if content.startswith(_JPEG_SIG):
-        return decode_jpeg_pixels(content)
-    raise ValueError("decode_raw_pixels: not PPM/PGM/BMP/PNG/GIF/JPEG bytes")
-
-
-def resize_nearest(img, target_w: int, target_h: int):
-    """Aspect-fit nearest-neighbor resize (never upscales) — the same
-    geometry rule as resize_assets, on REAL pixels. Pure numpy indexing."""
-    import numpy as np
-    h, w = img.shape[:2]
-    scale = min(target_w / w, target_h / h, 1.0)
-    ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
-    xi = (np.arange(ow) * (w / ow)).astype(np.int64).clip(0, w - 1)
-    yi = (np.arange(oh) * (h / oh)).astype(np.int64).clip(0, h - 1)
-    return img[yi][:, xi]
-
-
-def resize_raw_assets(assets: DataFrame, target_w: int = 64,
-                      target_h: int = 64) -> DataFrame:
-    """REAL resize for decodable image assets: decodes PPM/PGM/BMP/PNG/GIF/
-    JPEG pixels, nearest-neighbor aspect-fit resizes them, and emits the
-    sha256 of the ACTUAL resized RGB buffer (not a key derived from the source
-    hash). Same Arrow-batched mapInPandas shape as resize_assets — binary
-    never shuffled, one pass, executor memory bounded by the Arrow batch."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            src_w, src_h, out_w, out_h, shas = [], [], [], [], []
-            for c in pdf["content"]:
-                img = decode_raw_pixels(bytes(c or b""))
-                r = resize_nearest(img, target_w, target_h)
-                src_h.append(img.shape[0]); src_w.append(img.shape[1])
-                out_h.append(r.shape[0]); out_w.append(r.shape[1])
-                shas.append(hashlib.sha256(
-                    r.astype("uint8").tobytes()).hexdigest())
-            yield pd.DataFrame({
-                "asset_id": pdf["asset_id"].to_numpy(),
-                "modality": pdf["modality"].to_numpy(),
-                "src_width": pd.array(src_w, dtype="Int32"),
-                "src_height": pd.array(src_h, dtype="Int32"),
-                "width": pd.array(out_w, dtype="Int32"),
-                "height": pd.array(out_h, dtype="Int32"),
-                "resized_sha256": shas,
-            })
-
-    return assets.mapInPandas(batches, schema=RESIZED_SCHEMA)
-
-
-AUDIO_STATS_SCHEMA = StructType([
-    StructField("asset_id", StringType()),
-    StructField("sample_rate", IntegerType()),
-    StructField("n_channels", IntegerType()),
-    StructField("n_samples", LongType()),          # frames per channel
-    StructField("duration_ms", LongType()),
-    StructField("peak", IntegerType()),            # max |int16 sample|
-    StructField("rms", DoubleType()),
-    StructField("samples_sha256", StringType()),   # of the decoded buffer
-])
-
-
-def audio_stats_raw(assets: DataFrame) -> DataFrame:
-    """REAL audio feature extraction for decodable WAV assets (linear PCM,
-    IEEE float, G.711 mu-law/A-law, IMA ADPCM — see decode_wav_samples):
-    decodes the actual payload and emits duration, peak, RMS, and the
-    sha256 of the decoded int16 buffer (proof the samples are real, the
-    audio analogue of resize_raw_assets' resized_sha256). Same 100 TB
-    shape: binary stays in its parquet column chunk, one Arrow-batched
-    mapInPandas pass, downstream joins on the compact stats only."""
-    import math
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rate, nch, ns, dur, peak, rms, shas = [], [], [], [], [], [], []
-            for c in pdf["content"]:
-                s, r = decode_wav_samples(bytes(c or b""))
-                rate.append(r)
-                nch.append(s.shape[1])
-                ns.append(s.shape[0])
-                dur.append(int(s.shape[0] * 1000 // r) if r else 0)
-                x = s.astype("float64")
-                peak.append(int(abs(x).max()) if s.size else 0)
-                rms.append(float(math.sqrt((x * x).mean()))
-                           if s.size else 0.0)
-                shas.append(hashlib.sha256(s.tobytes()).hexdigest())
-            yield pd.DataFrame({
-                "asset_id": pdf["asset_id"].to_numpy(),
-                "sample_rate": pd.array(rate, dtype="Int32"),
-                "n_channels": pd.array(nch, dtype="Int32"),
-                "n_samples": pd.array(ns, dtype="Int64"),
-                "duration_ms": pd.array(dur, dtype="Int64"),
-                "peak": pd.array(peak, dtype="Int32"),
-                "rms": rms,
-                "samples_sha256": shas,
-            })
-
-    return assets.mapInPandas(batches, schema=AUDIO_STATS_SCHEMA)

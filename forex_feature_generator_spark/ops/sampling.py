@@ -212,8 +212,7 @@ def mixture_weights(df: DataFrame, group_cols: list[str],
 
 def dsir_select(pool: DataFrame, target: DataFrame, k: int,
                 text_col: str = "text", id_col: str = "doc_id",
-                n_buckets: int = 4096, alpha: float = 1.0,
-                cache_pool: bool = True) -> DataFrame:
+                n_buckets: int = 4096, alpha: float = 1.0) -> DataFrame:
     """DSIR-style data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling" — public paper): score each
     pool document by the log-likelihood ratio of a hashed-unigram model of
@@ -238,11 +237,7 @@ def dsir_select(pool: DataFrame, target: DataFrame, k: int,
     plans TakeOrderedAndProject (per-partition top-k + driver merge of
     P*k rows), never a global sort. The k winners broadcast-join back to
     the pool for their metadata. The pool's word-bucket frame is pinned
-    (two consumers: raw counts + scoring) — `cache_pool=False` drops that
-    pin and pays the second tokenization scan instead: at 100 TB the
-    (id, bucket) word stream is corpus-sized, and persisting it trades
-    executor storage (and LRU pressure on every later op) for one scan —
-    the wrong trade past the point the stream outgrows cluster memory."""
+    (two consumers: raw counts + scoring)."""
     from .dedup import normalize_text
 
     def buckets(df, extra=()):
@@ -252,9 +247,7 @@ def dsir_select(pool: DataFrame, target: DataFrame, k: int,
                % F.lit(n_buckets))
         return d.select(*extra, bkt.alias("__bkt"))
 
-    pb = buckets(pool, extra=(id_col,))
-    if cache_pool:
-        pb = pin(pb)
+    pb = pin(buckets(pool, extra=(id_col,)))
     tc = pin(buckets(target).groupBy("__bkt")
              .agg(F.count(F.lit(1)).alias("__tc")))
     rc = pin(pb.groupBy("__bkt").agg(F.count(F.lit(1)).alias("__rc")))
@@ -333,12 +326,6 @@ def weighted_sample(df: DataFrame, k: int, weight_col: str = "n_chars",
             .orderBy(F.col("__es_key").desc(), F.col(id_col).asc())
             .limit(int(k))
             .drop("__es_key"))
-
-
-def sql_unit_hash(id_expr: str, seed: int, hex2int_15: str) -> str:
-    """DuckDB mirror of _unit_hash for oracle construction; hex2int_15 is the
-    caller's 15-hex-char conversion of md5('seed:' || id)."""
-    return f"({hex2int_15} % {HASH_BUCKETS})"
 
 
 def shard_assign(df: DataFrame, n_shards: int,

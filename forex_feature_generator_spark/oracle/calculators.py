@@ -106,15 +106,6 @@ def calc_slope(values):
     return safe_div(n * sum_xy - sum_x * sum_y, n * sum_x2 - sum_x * sum_x)
 
 
-def true_range(bars, index):
-    if index < 1:
-        return bars[index].high - bars[index].low
-    high = bars[index].high
-    low = bars[index].low
-    prev_close = bars[index - 1].close
-    return max(high - low, abs(high - prev_close), abs(low - prev_close))
-
-
 def calc_atr(bars, current_index, period):
     s = 0.0
     for i in range(current_index - period + 1, current_index + 1):

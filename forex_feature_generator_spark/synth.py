@@ -108,11 +108,3 @@ def gen_sequences(
     df = pd.DataFrame(rows, columns=["doc_id", "tokens", "n_tok", "source", "row_idx"])
     df["ts"] = EPOCH + (df["row_idx"].to_numpy() * 60_000_000).astype("timedelta64[us]")
     return df.drop(columns=["row_idx"])
-
-
-def ticks_csv_bytes(df: pd.DataFrame) -> bytes:
-    """Render a single-source tick frame to the reference CSV shape
-    (Timestamp,Bid,Ask) — used by CSV-source tests."""
-    out = df[["ts", "bid", "ask"]].copy()
-    out["ts"] = out["ts"].dt.strftime("%Y-%m-%d %H:%M:%S.%f")
-    return ("Timestamp,Bid,Ask\n" + out.to_csv(index=False, header=False)).encode()

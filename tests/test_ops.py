@@ -222,7 +222,7 @@ def test_multimodal_decode_deterministic(spark, docs):
     assert row["height"] == 64 + digest[1] % 192
 
 
-def test_multimodal_resize_and_frame_sample(spark, docs):
+def test_multimodal_resize(spark, docs):
     assets = MM.documents_as_assets(docs)
     rs = MM.resize_assets(assets).orderBy("asset_id").toPandas()
     assert len(rs) == docs.count()
@@ -240,28 +240,11 @@ def test_multimodal_resize_and_frame_sample(spark, docs):
     key = d.hex() + f":{row['width']}x{row['height']}"
     assert row["resized_sha256"] == hashlib.sha256(key.encode()).hexdigest()
 
-    # frame sampling over synthetic videos: k evenly spaced, in range, sorted
-    vids = assets.limit(5).withColumn("modality", F.lit("video"))
-    fs = MM.frame_sample(vids, k=8).toPandas()
-    assert fs["asset_id"].nunique() == 5
-    for aid, g in fs.groupby("asset_id"):
-        n = g["n_frames"].iloc[0]
-        assert (g["frame_idx"] < n).all() and (g["frame_idx"] >= 0).all()
-        assert list(g["frame_idx"]) == sorted(set(i * n // 8 for i in range(8)))
-    # images produce no frames
-    assert MM.frame_sample(assets.limit(3), k=4).count() == 0
-
-
-def test_multimodal_strict_raises(spark, docs):
-    assets = MM.documents_as_assets(docs.limit(2))
-    with pytest.raises(Exception):
-        MM.decode_assets(assets, strict=True).collect()
-
 
 def test_multimodal_decoder_injection(spark):
     """A 'real' decoder (here: parses a WxH:F:R header out of the bytes)
-    drops into decode/resize/frame_sample via decoder= without touching any
-    other call-site code — the PIL/pyav integration seam."""
+    drops into decode/resize via decoder= without touching any other
+    call-site code — the PIL/pyav integration seam."""
     import pandas as pd
 
     def header_decoder(content: bytes, modality: str) -> tuple:
@@ -289,11 +272,6 @@ def test_multimodal_decoder_injection(spark):
     # 640x480 aspect-fit into 64x64 -> 64x48; never upscale
     assert (rs["a"]["width"], rs["a"]["height"]) == (64, 48)
     assert rs["c"]["width"] is None           # audio has no dims
-
-    fr = MM.frame_sample(assets, k=4, decoder=header_decoder).toPandas()
-    assert set(fr["asset_id"]) == {"b"}
-    assert sorted(fr["frame_idx"]) == [0, 2, 5, 7]   # floor(i*10/4)
-    assert (fr["n_frames"] == 10).all()
 
 
 def test_dedup_keep_best(spark):
@@ -975,1326 +953,6 @@ def test_cross_source_leakage_planted(spark):
     assert r["n_shared"] == 1
     assert r["n_sh_a"] == 2 and r["n_sh_b"] == 3
     assert abs(r["leakage"] - 0.5) < 1e-9          # 1 / min(2, 3)
-
-
-def _ppm_bytes(w, h, px):
-    """px: numpy uint8 (h, w, 3)."""
-    return b"P6\n# test\n%d %d\n255\n" % (w, h) + px.tobytes()
-
-
-def _bmp_bytes(w, h, px):
-    """Uncompressed 24-bpp bottom-up BMP from numpy (h, w, 3) RGB."""
-    import struct
-    stride = (w * 3 + 3) & ~3
-    rows = []
-    for y in range(h - 1, -1, -1):                 # bottom-up
-        row = px[y, :, ::-1].tobytes()             # RGB -> BGR
-        rows.append(row + b"\x00" * (stride - len(row)))
-    data = b"".join(rows)
-    header = (b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
-              + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data),
-                            2835, 2835, 0, 0))
-    return header + data
-
-
-def _wav_bytes(sample_rate, n_samples=16):
-    import struct
-    data = b"\x00\x00" * n_samples
-    return (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-            + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate,
-                                    sample_rate * 2, 2, 16)
-            + b"data" + struct.pack("<I", len(data)) + data)
-
-
-def _wav_container(tag, ch, rate, bits, balign, data, extra=b""):
-    """General RIFF/WAVE builder (any format tag) for the payload-decode
-    tests; includes a LIST chunk BEFORE fmt to prove the chunk walk."""
-    import struct
-    fmt = struct.pack("<HHIIHH", tag, ch, rate, rate * balign, balign,
-                      bits) + extra
-    body = (b"LIST" + struct.pack("<I", 4) + b"INFO"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-
-def _mulaw_compress(x):
-    """Independent G.711 mu-law compressor (CCITT reference formula)."""
-    out = bytearray()
-    for v in x:
-        v = int(v)
-        sign = 0x80 if v < 0 else 0
-        v = min(abs(v), 32635) + 0x84
-        exp = v.bit_length() - 8
-        mant = (v >> (exp + 3)) & 0x0F
-        out.append(~(sign | (exp << 4) | mant) & 0xFF)
-    return bytes(out)
-
-
-def _alaw_compress(x):
-    """Independent G.711 A-law compressor (16-bit-aligned segments; the
-    positive mask is 0xD5 per the CCITT reference)."""
-    out = bytearray()
-    for v in x:
-        v = int(v)
-        pos = v >= 0
-        m = min(abs(v), 32767)
-        if m < 256:
-            seg, mant = 0, m >> 4
-        else:
-            seg = m.bit_length() - 8
-            mant = (m >> (seg + 3)) & 0x0F
-        out.append(((seg << 4) | mant) ^ (0xD5 if pos else 0x55))
-    return bytes(out)
-
-
-def _ima_encode_block(samples, idxs):
-    """Independent IMA ADPCM encoder for ONE WAV block: returns
-    (block_bytes, reconstruction, end_idxs). `samples` is (spb, ch) int16
-    with spb = 1 + 8k; the reconstruction tracks the decoder's predictor
-    recurrence exactly, so decode must reproduce it bit-for-bit."""
-    spb, ch = samples.shape
-    st, it = MM._IMA_STEP_TABLE, MM._IMA_INDEX_TABLE
-    preds = [int(samples[0, c]) for c in range(ch)]
-    idxs = list(idxs)
-    header = b""
-    for c in range(ch):
-        header += preds[c].to_bytes(2, "little", signed=True) \
-            + bytes([idxs[c], 0])
-    nibbles = [[] for _ in range(ch)]
-    recon = np.zeros_like(samples)
-    recon[0] = samples[0]
-    for s in range(1, spb):
-        for c in range(ch):
-            step = st[idxs[c]]
-            diff = int(samples[s, c]) - preds[c]
-            nib = 0
-            if diff < 0:
-                nib, diff = 8, -diff
-            if diff >= step:
-                nib |= 4
-                diff -= step
-            if diff >= step >> 1:
-                nib |= 2
-                diff -= step >> 1
-            if diff >= step >> 2:
-                nib |= 1
-            d = step >> 3                   # decoder-side reconstruction
-            if nib & 4:
-                d += step
-            if nib & 2:
-                d += step >> 1
-            if nib & 1:
-                d += step >> 2
-            preds[c] = preds[c] - d if nib & 8 else preds[c] + d
-            preds[c] = max(-32768, min(32767, preds[c]))
-            idxs[c] = max(0, min(88, idxs[c] + it[nib]))
-            recon[s, c] = preds[c]
-            nibbles[c].append(nib)
-    data = bytearray(header)
-    for g in range(0, spb - 1, 8):
-        for c in range(ch):
-            grp = nibbles[c][g:g + 8]
-            for i in range(0, 8, 2):
-                data.append(grp[i] | (grp[i + 1] << 4))
-    return bytes(data), recon, idxs
-
-
-def test_wav_payload_decode():
-    """REAL WAV payload decode: PCM16/PCM8/float32 exact; G.711 mu-law and
-    A-law vs independent CCITT-formula compressors (per-sample expansion
-    parity + bounded companding quantization error); chunk walk handles a
-    LIST chunk before fmt."""
-    rng = np.random.default_rng(11)
-    x = rng.integers(-32768, 32768, size=200).astype(np.int16)
-    # PCM16 (stereo) round-trips exactly
-    st = np.stack([x[:100], x[100:]], axis=1)
-    s, r = MM.decode_wav_samples(
-        _wav_container(1, 2, 8000, 16, 4, st.tobytes()))
-    assert r == 8000 and (s == st).all()
-    # PCM8 unsigned -> int16 << 8
-    u8 = rng.integers(0, 256, size=64).astype(np.uint8)
-    s, _ = MM.decode_wav_samples(_wav_container(1, 1, 8000, 8, 1,
-                                                u8.tobytes()))
-    assert (s[:, 0] == ((u8.astype(np.int16) - 128) << 8)).all()
-    # IEEE float32
-    f = (rng.random(50).astype(np.float32) - 0.5) * 1.8
-    s, _ = MM.decode_wav_samples(_wav_container(3, 1, 16000, 32, 4,
-                                                f.tobytes()))
-    ref = np.clip(np.round(f.astype(np.float64) * 32767), -32768, 32767)
-    assert (s[:, 0] == ref.astype(np.int16)).all()
-    # 24-bit PCM: top 16 bits survive, sign extended
-    v24 = rng.integers(-(1 << 23), 1 << 23, size=40).astype(np.int32)
-    raw = np.zeros((40, 3), np.uint8)
-    raw[:, 0] = v24 & 0xFF
-    raw[:, 1] = (v24 >> 8) & 0xFF
-    raw[:, 2] = (v24 >> 16) & 0xFF
-    s, _ = MM.decode_wav_samples(_wav_container(1, 1, 48000, 24, 3,
-                                                raw.tobytes()))
-    assert (s[:, 0] == (v24 >> 8).astype(np.int16)).all()
-    # G.711 mu-law: decode matches the scalar reference expansion and the
-    # companding error stays within the segment's quantization step
-    enc = _mulaw_compress(x)
-    s, _ = MM.decode_wav_samples(_wav_container(7, 1, 8000, 8, 1, enc))
-    got = s[:, 0].astype(np.int64)
-    for i in (0, 1, 17, 199):               # scalar spot-check
-        u = ~enc[i] & 0xFF
-        mag = (((u & 0x0F) << 3 | 0x84) << ((u >> 4) & 7)) - 0x84
-        assert got[i] == (-mag if u & 0x80 else mag)
-    err = np.abs(got - x.astype(np.int64))
-    seg = np.maximum((np.minimum(np.abs(x.astype(np.int64)), 32635)
-                      + 0x84).astype(np.int64), 1)
-    bound = 1 << (np.log2(seg).astype(np.int64) - 7 + 3)
-    assert (err <= bound).all()
-    # G.711 A-law: same checks (positive values carry mask 0xD5)
-    enca = _alaw_compress(x)
-    s, _ = MM.decode_wav_samples(_wav_container(6, 1, 8000, 8, 1, enca))
-    gota = s[:, 0].astype(np.int64)
-    assert np.abs(gota - x.astype(np.int64)).max() <= 1024 + 16
-    assert (np.sign(gota) == np.sign(x))[np.abs(x) >= 256].all()
-    # honest error on a payload that needs a codec
-    with pytest.raises(ValueError, match="codec-backed"):
-        MM.decode_wav_samples(_wav_container(0x55, 1, 8000, 0, 1, b"xx"))
-
-
-def test_ima_adpcm_decode():
-    """IMA/DVI ADPCM decode is bit-exact vs the independent in-test
-    encoder's predictor reconstruction — mono and stereo, multi-block,
-    step-index carried across blocks via the per-block headers."""
-    rng = np.random.default_rng(12)
-    for ch in (1, 2):
-        spb = 33                            # 1 + 8k samples per block
-        balign = 4 * ch + (spb - 1) // 2 * ch
-        t = np.arange(spb * 3, dtype=np.float64)
-        wave = (6000 * np.sin(t / 3)[:, None]
-                + rng.integers(-900, 900, size=(spb * 3, ch))) \
-            .astype(np.int16)
-        data, recon, idxs = b"", [], [0] * ch
-        for b0 in range(0, spb * 3, spb):
-            blk, rec, idxs = _ima_encode_block(wave[b0:b0 + spb], idxs)
-            assert len(blk) == balign
-            data += blk
-            recon.append(rec)
-        expected = np.concatenate(recon, axis=0)
-        s, r = MM.decode_wav_samples(
-            _wav_container(0x11, ch, 8000, 4, balign, data,
-                           extra=(2).to_bytes(2, "little")
-                           + spb.to_bytes(2, "little")))
-        assert r == 8000
-        assert s.shape == expected.shape
-        assert (s == expected).all(), f"ch={ch}"
-        # ADPCM tracks the waveform (sanity: decode is audio, not noise)
-        assert float(np.abs(s.astype(float)
-                            - wave.astype(float)).mean()) < 2000
-
-
-def test_audio_stats_spark_e2e(spark):
-    """mu-law and IMA ADPCM WAV assets through the Arrow-batched Spark
-    audio_stats_raw path: per-asset sample hash equals the local payload
-    decode (the audio analogue of the resized-pixel hash test)."""
-    import hashlib as hl
-    rng = np.random.default_rng(13)
-    x = (3000 * np.sin(np.arange(65) / 2)).astype(np.int16)
-    mu = _wav_container(7, 1, 8000, 8, 1, _mulaw_compress(x))
-    blk, _, _ = _ima_encode_block(x[:, None], [0])
-    ima = _wav_container(0x11, 1, 16000, 4, 36, blk,
-                         extra=(2).to_bytes(2, "little")
-                         + (65).to_bytes(2, "little"))
-    assets = spark.createDataFrame(
-        [("mu", "audio", bytearray(mu), "audio/wav"),
-         ("ima", "audio", bytearray(ima), "audio/wav")], MM.ASSET_SCHEMA)
-    rows = {r["asset_id"]: r for r in MM.audio_stats_raw(assets).collect()}
-    for aid, content in (("mu", mu), ("ima", ima)):
-        s, r = MM.decode_wav_samples(content)
-        assert rows[aid]["sample_rate"] == r
-        assert rows[aid]["n_samples"] == s.shape[0]
-        assert rows[aid]["peak"] == int(np.abs(s.astype(np.int64)).max())
-        assert rows[aid]["samples_sha256"] == \
-            hl.sha256(s.tobytes()).hexdigest()
-
-
-def test_raw_decoder_real_headers(spark):
-    """The pure-numpy raw decoder reads REAL dimensions/rates from actual
-    PPM / BMP / WAV bytes through the same decoder= seam the stub uses —
-    the decode path is no longer fake for uncompressed formats."""
-    rng = np.random.default_rng(9)
-    px = rng.integers(0, 256, size=(4, 8, 3), dtype=np.uint8)
-    rows = [("a", "image", bytearray(_ppm_bytes(8, 4, px)), "image/x-ppm"),
-            ("b", "image", bytearray(_bmp_bytes(8, 4, px)), "image/bmp"),
-            ("c", "audio", bytearray(_wav_bytes(44100)), "audio/wav")]
-    assets = spark.createDataFrame(rows, MM.ASSET_SCHEMA)
-    got = {r["asset_id"]: r for r in
-           MM.decode_assets(assets, decoder=MM.raw_decoder).collect()}
-    assert (got["a"]["width"], got["a"]["height"]) == (8, 4)
-    assert (got["b"]["width"], got["b"]["height"]) == (8, 4)
-    assert got["c"]["sample_rate"] == 44100 and got["c"]["width"] is None
-    # honest failure on unknown/garbage bytes — never fakes (these JPEG-SIG
-    # bytes carry no valid SOF segment; PNG and JPEG both graduated to
-    # real decode in round 6, so only genuinely undecodable content raises)
-    with pytest.raises(ValueError, match="codec-backed"):
-        MM.raw_decoder(b"\xff\xd8\xff\xe0....JFIF....", "image")
-
-
-def test_decode_raw_pixels_roundtrip():
-    """PPM and BMP bytes decode to the EXACT pixel array they were built
-    from (BMP path exercises BGR order, bottom-up rows, stride padding)."""
-    rng = np.random.default_rng(10)
-    px = rng.integers(0, 256, size=(5, 7, 3), dtype=np.uint8)  # odd stride
-    assert (MM.decode_raw_pixels(_ppm_bytes(7, 5, px)) == px).all()
-    assert (MM.decode_raw_pixels(_bmp_bytes(7, 5, px)) == px).all()
-
-
-def test_resize_raw_assets_real_pixels(spark):
-    """resize_raw_assets hashes the ACTUAL nearest-neighbor-resized buffer:
-    verified against an independently computed reference resize."""
-    import hashlib as hl
-    rng = np.random.default_rng(11)
-    px = rng.integers(0, 256, size=(8, 16, 3), dtype=np.uint8)
-    assets = spark.createDataFrame(
-        [("a", "image", bytearray(_ppm_bytes(16, 8, px)), "image/x-ppm")],
-        MM.ASSET_SCHEMA)
-    row = MM.resize_raw_assets(assets, target_w=8, target_h=8).first()
-    assert (row["src_width"], row["src_height"]) == (16, 8)
-    assert (row["width"], row["height"]) == (8, 4)      # aspect-fit 0.5x
-    xi = (np.arange(8) * 2).clip(0, 15)
-    yi = (np.arange(4) * 2).clip(0, 7)
-    ref = px[yi][:, xi]
-    assert row["resized_sha256"] == hl.sha256(ref.tobytes()).hexdigest()
-
-
-def _png_bytes(px, color_type=2, filters=None, palette=None):
-    """Minimal PNG encoder for roundtrip tests: applies the FORWARD
-    per-scanline filters (RFC 2083 §6 — filters act on raw bytes of the
-    current and prior unfiltered scanlines), deflates with stdlib zlib,
-    writes IHDR/[PLTE]/IDAT/IEND with real CRCs. px: (h, w, ch) uint8."""
-    import struct
-    import zlib
-    h, w, ch = px.shape
-    filters = filters if filters is not None else [0] * h
-    raw = bytearray()
-    prev = np.zeros(w * ch, dtype=np.int32)
-    for y in range(h):
-        cur = px[y].reshape(-1).astype(np.int32)
-        f = filters[y]
-        raw.append(f)
-        if f == 0:
-            out = cur
-        elif f == 1:                               # Sub
-            out = cur.copy()
-            out[ch:] -= cur[:-ch]
-        elif f == 2:                               # Up
-            out = cur - prev
-        elif f == 3:                               # Average
-            left = np.concatenate([np.zeros(ch, dtype=np.int32), cur[:-ch]])
-            out = cur - ((left + prev) >> 1)
-        elif f == 4:                               # Paeth
-            left = np.concatenate([np.zeros(ch, dtype=np.int32), cur[:-ch]])
-            ul = np.concatenate([np.zeros(ch, dtype=np.int32), prev[:-ch]])
-            p = left + prev - ul
-            pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - ul)
-            pred = np.where((pa <= pb) & (pa <= pc), left,
-                            np.where(pb <= pc, prev, ul))
-            out = cur - pred
-        raw.extend((out % 256).astype(np.uint8).tobytes())
-        prev = cur
-
-    def chunk(t, d):
-        return (struct.pack(">I", len(d)) + t + d
-                + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    body = bytearray(b"\x89PNG\r\n\x1a\n") + chunk(b"IHDR", ihdr)
-    if palette is not None:
-        body += chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-    body += chunk(b"IDAT", zlib.compress(bytes(raw)))
-    body += chunk(b"IEND", b"")
-    return bytes(body)
-
-
-def test_png_decode_all_filters_and_color_types():
-    """REAL PNG decode (stdlib zlib + numpy): pixel-exact roundtrip through
-    every scanline filter (None/Sub/Up/Average/Paeth) and every 8-bit color
-    type — RGB, grayscale, palette, gray+alpha, RGBA."""
-    rng = np.random.default_rng(13)
-    # RGB through a mix of all five filters (h=10 rows)
-    px = rng.integers(0, 256, size=(10, 7, 3), dtype=np.uint8)
-    filt = [0, 1, 2, 3, 4, 4, 3, 2, 1, 0]
-    assert (MM.decode_png_pixels(_png_bytes(px, 2, filt)) == px).all()
-    assert (MM.decode_raw_pixels(_png_bytes(px, 2, filt)) == px).all()
-    # grayscale -> replicated to RGB
-    g = rng.integers(0, 256, size=(5, 6, 1), dtype=np.uint8)
-    assert (MM.decode_png_pixels(_png_bytes(g, 0, [0, 1, 2, 3, 4]))
-            == np.repeat(g, 3, axis=2)).all()
-    # RGBA / gray+alpha -> alpha dropped
-    rgba = rng.integers(0, 256, size=(4, 5, 4), dtype=np.uint8)
-    assert (MM.decode_png_pixels(_png_bytes(rgba, 6, [4, 3, 2, 1]))
-            == rgba[:, :, :3]).all()
-    ga = rng.integers(0, 256, size=(3, 4, 2), dtype=np.uint8)
-    assert (MM.decode_png_pixels(_png_bytes(ga, 4, [1, 4, 2]))
-            == np.repeat(ga[:, :, :1], 3, axis=2)).all()
-    # palette: indices resolve through PLTE
-    pal = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-    idx = rng.integers(0, 16, size=(6, 6, 1), dtype=np.uint8)
-    assert (MM.decode_png_pixels(_png_bytes(idx, 3, [0, 4, 1, 2, 3, 4],
-                                            palette=pal))
-            == pal[idx[:, :, 0]]).all()
-
-
-def test_png_header_errors_and_seam(spark):
-    """PNG dims flow through the raw_decoder seam; corruption is rejected
-    (CRC, truncation, unsupported depth), never misdecoded; and the full
-    Spark resize path hashes the ACTUAL resized PNG pixel buffer."""
-    import hashlib as hl
-    rng = np.random.default_rng(14)
-    px = rng.integers(0, 256, size=(8, 16, 3), dtype=np.uint8)
-    b = _png_bytes(px, 2, [4] * 8)
-    assert MM.raw_decoder(b, "image") == (16, 8, None, None)
-    # CRC corruption (flip one IDAT byte) -> honest error
-    bad = bytearray(b)
-    bad[-20] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC|truncated"):
-        MM.decode_png_pixels(bytes(bad))
-    with pytest.raises(ValueError, match="truncated|IEND"):
-        MM.decode_png_pixels(b[:-6])
-    # 16-bit depth: recognized header, refused decode
-    import struct
-    import zlib as zl
-    ihdr16 = struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0)
-    chunk = (struct.pack(">I", 13) + b"IHDR" + ihdr16
-             + struct.pack(">I", zl.crc32(b"IHDR" + ihdr16) & 0xFFFFFFFF))
-    with pytest.raises(ValueError, match="bit depth"):
-        MM.decode_png_pixels(b"\x89PNG\r\n\x1a\n" + chunk)
-    # e2e through the Arrow-batched Spark path: decode + aspect-fit resize
-    assets = spark.createDataFrame(
-        [("p", "image", bytearray(b), "image/png")], MM.ASSET_SCHEMA)
-    row = MM.resize_raw_assets(assets, target_w=8, target_h=8).first()
-    assert (row["src_width"], row["src_height"]) == (16, 8)
-    assert (row["width"], row["height"]) == (8, 4)
-    xi = (np.arange(8) * 2).clip(0, 15)
-    yi = (np.arange(4) * 2).clip(0, 7)
-    ref = px[yi][:, xi]
-    assert row["resized_sha256"] == hl.sha256(ref.tobytes()).hexdigest()
-
-
-def _gif_lzw_encode(data: bytes, mcs: int) -> bytes:
-    """Real LZW encoder for the GIF roundtrip tests: dictionary growth,
-    LSB-first variable-width packing, width bump when the table reaches
-    2^width (the non-'early change' GIF convention), clear on a full
-    12-bit table."""
-    clear, end = 1 << mcs, (1 << mcs) + 1
-    dic = {bytes([i]): i for i in range(clear)}
-    next_code, width = end + 1, mcs + 1
-    codes = [(clear, width)]
-    buf = b""
-    for ch in data:
-        nxt = buf + bytes([ch])
-        if nxt in dic:
-            buf = nxt
-            continue
-        codes.append((dic[buf], width))
-        dic[nxt] = next_code
-        next_code += 1
-        if next_code == (1 << width) and width < 12:
-            width += 1
-        buf = bytes([ch])
-        if next_code == 4096:
-            codes.append((clear, width))
-            dic = {bytes([i]): i for i in range(clear)}
-            next_code, width = end + 1, mcs + 1
-    if buf:
-        codes.append((dic[buf], width))
-    codes.append((end, width))
-    out, acc, nbits = bytearray(), 0, 0
-    for code, w in codes:
-        acc |= code << nbits
-        nbits += w
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _gif_bytes(idx, palette, w=None, h=None, left=0, top=0,
-               interlace=False, n_frames=1, mcs=None):
-    """Minimal GIF89a encoder for roundtrip tests: global palette, real
-    LZW image data in <=255-byte sub-blocks, optional interlace row
-    shuffle and sub-rectangle placement, extra frames for the video
-    frame-count path. idx: (fh, fw) uint8 palette indices."""
-    import math
-    fh, fw = idx.shape
-    w, h = w or fw, h or fh
-    pbits = max(1, math.ceil(math.log2(len(palette))))
-    mcs = mcs or max(2, pbits)
-    out = bytearray(b"GIF89a")
-    out += w.to_bytes(2, "little") + h.to_bytes(2, "little")
-    out += bytes([0x80 | (pbits - 1), 0, 0])       # GCT present, bg=0
-    pad = (1 << pbits) - len(palette)
-    out += palette.astype(np.uint8).tobytes() + b"\x00" * (pad * 3)
-    rows = idx
-    if interlace:
-        order = ([*range(0, fh, 8)] + [*range(4, fh, 8)]
-                 + [*range(2, fh, 4)] + [*range(1, fh, 2)])
-        rows = idx[np.array(order)]
-    for _ in range(n_frames):
-        out += b"\x2c" + left.to_bytes(2, "little") + top.to_bytes(2, "little")
-        out += fw.to_bytes(2, "little") + fh.to_bytes(2, "little")
-        out += bytes([0x40 if interlace else 0, mcs])
-        data = _gif_lzw_encode(rows.tobytes(), mcs)
-        for i in range(0, len(data), 255):
-            blk = data[i:i + 255]
-            out += bytes([len(blk)]) + blk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def _gif_multi_bytes(frames, palette, w, h):
-    """Multi-frame GIF89a builder with DISTINCT frames: each entry is
-    (idx_array, left, top), placed as a sub-rectangle on the logical
-    screen (the real animation layout _gif_bytes' n_frames repeat can't
-    exercise)."""
-    import math
-    pbits = max(1, math.ceil(math.log2(len(palette))))
-    mcs = max(2, pbits)
-    out = bytearray(b"GIF89a")
-    out += w.to_bytes(2, "little") + h.to_bytes(2, "little")
-    out += bytes([0x80 | (pbits - 1), 0, 0])
-    pad = (1 << pbits) - len(palette)
-    out += palette.astype(np.uint8).tobytes() + b"\x00" * (pad * 3)
-    for idx, left, top in frames:
-        fh, fw = idx.shape
-        out += b"\x2c" + left.to_bytes(2, "little") \
-            + top.to_bytes(2, "little") + fw.to_bytes(2, "little") \
-            + fh.to_bytes(2, "little") + bytes([0, mcs])
-        data = _gif_lzw_encode(idx.tobytes(), mcs)
-        for i in range(0, len(data), 255):
-            out += bytes([len(data[i:i + 255])]) + data[i:i + 255]
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def _avi_bytes(frames, w, h, total=None, codec=b"00dc"):
-    """Minimal RIFF/AVI builder: LIST hdrl (avih with dimensions + frame
-    count) + LIST movi with one chunk per frame payload."""
-    import struct
-
-    def chunk(cc, payload):
-        return (cc + struct.pack("<I", len(payload)) + payload
-                + (b"\x00" if len(payload) & 1 else b""))
-
-    avih = struct.pack("<14I", 33333, 0, 0, 0, total or len(frames),
-                       0, 1, 0, w, h, 0, 0, 0, 0)
-    hdrl = b"hdrl" + chunk(b"avih", avih)
-    movi = b"movi" + b"".join(chunk(codec, f) for f in frames)
-    body = b"AVI " + chunk(b"LIST", hdrl) + chunk(b"LIST", movi)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_gif_multiframe_decode():
-    """REAL multi-frame GIF decode: successive sub-rectangle frames
-    composite onto the logical screen (do-not-dispose semantics); the
-    canvases match an independent numpy compositing of the same index
-    arrays, and subset decode returns the same canvases as a full walk."""
-    rng = np.random.default_rng(16)
-    pal = rng.integers(0, 256, size=(8, 3), dtype=np.uint8)
-    w, h = 25, 19
-    base = (np.arange(h * w).reshape(h, w) % 7).astype(np.uint8)
-    f1 = (np.arange(6 * 9).reshape(6, 9) % 3 + 1).astype(np.uint8)
-    f2 = np.full((4, 5), 6, np.uint8)
-    f3 = (np.arange(3 * 25).reshape(3, 25) % 8).astype(np.uint8)
-    gif = _gif_multi_bytes(
-        [(base, 0, 0), (f1, 10, 7), (f2, 2, 13), (f3, 0, 16)], pal, w, h)
-    n, got = MM.decode_gif_frames(gif)
-    assert n == 4 and sorted(got) == [0, 1, 2, 3]
-    # independent compositing oracle
-    canvas = np.zeros((h, w, 3), np.uint8)
-    canvas[:, :] = pal[0]                   # bg index 0
-    expect = {}
-    for i, (idx, left, top) in enumerate(
-            [(base, 0, 0), (f1, 10, 7), (f2, 2, 13), (f3, 0, 16)]):
-        fh, fw = idx.shape
-        canvas[top:top + fh, left:left + fw] = pal[idx]
-        expect[i] = canvas.copy()
-    for i in range(4):
-        assert (got[i] == expect[i]).all(), i
-    # frame 0 equals the single-frame decoder
-    assert (got[0] == MM.decode_gif_pixels(gif)).all()
-    # subset decode (the frame_sample path) matches the full walk
-    n2, got2 = MM.decode_gif_frames(gif, [1, 3])
-    assert n2 == 4 and sorted(got2) == [1, 3]
-    assert (got2[1] == expect[1]).all() and (got2[3] == expect[3]).all()
-    # header path reports the real frame count
-    assert MM.raw_decoder(gif, "video") == (25, 19, 4, None)
-
-
-def test_avi_mjpeg_decode():
-    """REAL compressed-video decode: MJPEG frames inside a RIFF/AVI
-    container decode pixel-exactly via the pure-Python JPEG decoder,
-    with O(k) random access (only requested frames decode); non-JPEG
-    payloads raise honestly."""
-    rng = np.random.default_rng(17)
-    gy, gx = np.mgrid[0:24, 0:32]
-    jpegs, expected = [], []
-    for i in range(5):
-        img = np.clip(((gy * 2 + gx * 3 + 40 * i) % 256)[:, :, None]
-                      + rng.integers(-10, 10, size=(24, 32, 3)),
-                      0, 255).astype(np.uint8)
-        b, _ = _jpeg_bytes(img)
-        jpegs.append(b)
-        expected.append(MM.decode_jpeg_pixels(b))
-    avi = _avi_bytes(jpegs, 32, 24)
-    # header walk: real dimensions + frame count through raw_decoder
-    assert MM.raw_decoder(avi, "video") == (32, 24, 5, None)
-    assert MM.raw_decoder(avi, "image") == (32, 24, None, None)
-    n, got = MM.decode_avi_frames(avi)
-    assert n == 5 and sorted(got) == [0, 1, 2, 3, 4]
-    for i in range(5):
-        assert (got[i] == expected[i]).all(), i
-    # subset decode
-    n, got = MM.decode_avi_frames(avi, [0, 4])
-    assert sorted(got) == [0, 4]
-    assert (got[4] == expected[4]).all()
-    # a non-JPEG payload (raw DIB) is refused, never misdecoded
-    bad = _avi_bytes([b"\x00" * 100], 32, 24)
-    with pytest.raises(ValueError, match="codec-backed"):
-        MM.decode_avi_frames(bad)
-    # progressive MJPEG frames decode too (same T.81 decoder)
-    pimg = np.clip((gy * 5 + gx) % 256, 0, 255).astype(np.uint8)
-    pimg = np.repeat(pimg[:, :, None], 3, axis=2)
-    pb, _ = _jpeg_prog_bytes(pimg)
-    pavi = _avi_bytes([pb], 32, 24)
-    _, pg = MM.decode_avi_frames(pavi)
-    assert (pg[0] == MM.decode_jpeg_pixels(pb)).all()
-
-
-def test_frame_sample_raw_spark(spark):
-    """GIF and MJPEG-AVI video assets through the Arrow-batched Spark
-    frame_sample_raw path: the sampled frame hashes equal the local
-    per-frame decode, with the same floor(i*n/k) sampling plan as the
-    stub-keyed frame_sample."""
-    import hashlib as hl
-    rng = np.random.default_rng(18)
-    pal = rng.integers(0, 256, size=(4, 3), dtype=np.uint8)
-    gfr = [((np.arange(8 * 10).reshape(8, 10) % 4).astype(np.uint8), 0, 0)
-           for _ in range(6)]
-    gif = _gif_multi_bytes(gfr, pal, 10, 8)
-    gy, gx = np.mgrid[0:16, 0:16]
-    jpegs = []
-    for i in range(7):
-        img = np.repeat((((gy + gx) * (i + 1)) % 256)[:, :, None],
-                        3, axis=2).astype(np.uint8)
-        jpegs.append(_jpeg_bytes(img)[0])
-    avi = _avi_bytes(jpegs, 16, 16)
-    assets = spark.createDataFrame(
-        [("g", "video", bytearray(gif), "image/gif"),
-         ("a", "video", bytearray(avi), "video/avi"),
-         ("skip", "image", bytearray(jpegs[0]), "image/jpeg")],
-        MM.ASSET_SCHEMA)
-    rows = MM.frame_sample_raw(assets, k=3).collect()
-    by = {}
-    for r in rows:
-        by.setdefault(r["asset_id"], {})[r["frame_idx"]] = r
-    assert set(by) == {"g", "a"}            # image rows filtered out
-    for aid, blob, n, dec in (("g", gif, 6, MM.decode_gif_frames),
-                              ("a", avi, 7, MM.decode_avi_frames)):
-        idxs = sorted({i * n // 3 for i in range(3)})
-        assert sorted(by[aid]) == idxs
-        _, local = dec(blob, idxs)
-        for i in idxs:
-            assert by[aid][i]["n_frames"] == n
-            assert by[aid][i]["frame_sha256"] == \
-                hl.sha256(local[i].tobytes()).hexdigest()
-
-
-def test_gif_decode_roundtrip():
-    """REAL GIF decode (pure-Python LZW + numpy): pixel-exact roundtrip
-    through a real dictionary-growing LZW stream, interlaced rows,
-    sub-rectangle placement on the logical screen, and a multi-frame
-    count through the raw_decoder video path."""
-    rng = np.random.default_rng(15)
-    pal = rng.integers(0, 256, size=(8, 3), dtype=np.uint8)
-    # repetitive indices force dictionary growth past the width bump
-    idx = (np.arange(24 * 17).reshape(24, 17) % 5).astype(np.uint8)
-    b = _gif_bytes(idx, pal)
-    assert (MM.decode_gif_pixels(b) == pal[idx]).all()
-    assert (MM.decode_raw_pixels(b) == pal[idx]).all()
-    assert MM.raw_decoder(b, "image") == (17, 24, None, None)
-    # interlaced: decoder must un-shuffle the 4-pass row order exactly
-    bi = _gif_bytes(idx, pal, interlace=True)
-    assert (MM.decode_gif_pixels(bi) == pal[idx]).all()
-    # sub-rectangle frame on a larger screen: rest is background pal[0]
-    bs = _gif_bytes(idx, pal, w=30, h=40, left=6, top=9)
-    img = MM.decode_gif_pixels(bs)
-    assert img.shape == (40, 30, 3)
-    assert (img[9:33, 6:23] == pal[idx]).all()
-    assert (img[0, 0] == pal[0]).all()
-    # multi-frame GIF: the video path reports the REAL frame count
-    bm = _gif_bytes(idx, pal, n_frames=3)
-    assert MM.raw_decoder(bm, "video") == (17, 24, 3, None)
-    # truncation is rejected, never misdecoded
-    with pytest.raises(ValueError):
-        MM.decode_gif_pixels(b[:-1])
-
-
-def _jpeg_canon(counts, symbols):
-    """Canonical Huffman code assignment (T.81 Annex C) for the in-test
-    JPEG encoder: symbol -> (code, length)."""
-    enc, code, i = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            enc[symbols[i]] = (code, length)
-            i += 1
-            code += 1
-        code <<= 1
-    return enc
-
-
-# One DC table (all 12 size symbols at 4 bits; all-ones code unused, per
-# spec) and one AC table (EOB + ZRL + every (run,size) s=1..10 at 8 bits)
-# — the decoder reads whatever DHT declares, so simple tables are legal.
-_JT_DC_COUNTS = [0, 0, 0, 12] + [0] * 12
-_JT_DC_SYMS = list(range(12))
-_JT_AC_COUNTS = [0] * 7 + [162] + [0] * 8
-_JT_AC_SYMS = [0x00, 0xF0] + [(r << 4) | s for r in range(16)
-                              for s in range(1, 11)]
-# progressive AC table additionally needs the EOBn symbols (s=0, r=1..14
-# code an EOB run of 2^r + r extra bits) — all 176 symbols at 8 bits
-_JT_ACP_COUNTS = [0] * 7 + [176] + [0] * 8
-_JT_ACP_SYMS = [(r << 4) | s for r in range(16) for s in range(11)]
-
-
-class _JpegBitW:
-    """MSB-first bit writer with 0xFF00 stuffing and 1-fill alignment."""
-
-    def __init__(self):
-        self.out, self.acc, self.n = bytearray(), 0, 0
-
-    def put(self, val, nbits):
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((val >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)
-                self.acc, self.n = 0, 0
-
-    def align(self):
-        if self.n:
-            self.put((1 << (8 - self.n)) - 1, 8 - self.n)
-
-
-def _jpeg_mag(v):
-    """(size, magnitude-bits) encoding of a coefficient value."""
-    s = int(abs(v)).bit_length()
-    return s, (v if v >= 0 else v + (1 << s) - 1)
-
-
-def _jpeg_quantize(img, subsample=False, gray=False):
-    """Shared encoder prologue (baseline AND progressive in-test encoders
-    call this, so both streams carry IDENTICAL quantized coefficients):
-    RGB->YCbCr, optional 4:2:0 box-average subsampling, MCU-padded planes,
-    per-block forward DCT + quantization with non-constant tables (so a
-    zigzag-order bug cannot cancel out). Returns
-    (comps, qblocks, mcux, mcuy, hv) where comps is
-    [(plane, h_samp, v_samp, qtable), ...]."""
-    h, w, _ = img.shape
-    A = MM._dct_basis()
-    r, g, b = (img[:, :, i].astype(np.float64) for i in range(3))
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-    cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-    hv = 2 if subsample else 1
-    mcux, mcuy = -(-w // (8 * hv)), -(-h // (8 * hv))
-    qy = (8 + (np.arange(8)[:, None] + np.arange(8)[None, :])).astype(np.int64)
-    qc = qy + 4
-
-    def pad(pl, ph, pw):
-        return np.pad(pl, ((0, ph - pl.shape[0]), (0, pw - pl.shape[1])),
-                      mode="edge")
-
-    yp = pad(y, mcuy * 8 * hv, mcux * 8 * hv)
-    if subsample:
-        cbp = pad(cb, mcuy * 16, mcux * 16).reshape(mcuy * 8, 2,
-                                                    mcux * 8, 2).mean((1, 3))
-        crp = pad(cr, mcuy * 16, mcux * 16).reshape(mcuy * 8, 2,
-                                                    mcux * 8, 2).mean((1, 3))
-    else:
-        cbp, crp = pad(cb, mcuy * 8, mcux * 8), pad(cr, mcuy * 8, mcux * 8)
-    comps = [(yp, hv, hv, qy)] if gray else \
-        [(yp, hv, hv, qy), (cbp, 1, 1, qc), (crp, 1, 1, qc)]
-
-    # quantize every block once (also drives the expected reconstruction)
-    qblocks = []
-    for pl, ch, cv, q in comps:
-        nby, nbx = pl.shape[0] // 8, pl.shape[1] // 8
-        blks = np.zeros((nby, nbx, 8, 8), np.int64)
-        for iy in range(nby):
-            for ix in range(nbx):
-                f = A @ (pl[iy * 8:iy * 8 + 8, ix * 8:ix * 8 + 8] - 128.0) @ A.T
-                blks[iy, ix] = np.round(f / q).astype(np.int64)
-        qblocks.append(blks)
-    return comps, qblocks, mcux, mcuy, hv
-
-
-def _jpeg_expected(img, comps, qblocks, hv):
-    """Expected RGB reconstruction from the quantized blocks: the same
-    dequant/IDCT/upsample/color math the decoder must perform."""
-    h, w = img.shape[:2]
-    A = MM._dct_basis()
-    recon = []
-    for (pl, ch, cv, q), blks in zip(comps, qblocks):
-        nby, nbx = blks.shape[:2]
-        rp = np.zeros((nby * 8, nbx * 8))
-        for iy in range(nby):
-            for ix in range(nbx):
-                rp[iy * 8:iy * 8 + 8, ix * 8:ix * 8 + 8] = \
-                    A.T @ (blks[iy, ix] * q).astype(np.float64) @ A + 128.0
-        sy, sx = hv // cv, hv // ch
-        if sy > 1 or sx > 1:
-            rp = np.kron(rp, np.ones((sy, sx)))
-        recon.append(rp[:h, :w])
-    if len(recon) == 1:
-        yo = np.clip(np.round(recon[0]), 0, 255).astype(np.uint8)
-        return np.repeat(yo[:, :, None], 3, axis=2)
-    yo, cbo, cro = recon
-    rgb = np.stack([yo + 1.402 * (cro - 128.0),
-                    yo - 0.344136 * (cbo - 128.0)
-                    - 0.714136 * (cro - 128.0),
-                    yo + 1.772 * (cbo - 128.0)], axis=2)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def _jpeg_bytes(img, subsample=False, ri=0, gray=False):
-    """Independent in-test baseline JPEG encoder: canonical-Huffman entropy
-    coding of the `_jpeg_quantize` coefficients with byte stuffing and
-    optional DRI/RSTn restarts. Returns (jpeg_bytes, expected_rgb)."""
-    h, w, _ = img.shape
-    zz = MM._make_zigzag()
-    comps, qblocks, mcux, mcuy, hv = _jpeg_quantize(img, subsample, gray)
-    qy = comps[0][3]
-    qc = comps[1][3] if len(comps) > 1 else None
-
-    dc_enc = _jpeg_canon(_JT_DC_COUNTS, _JT_DC_SYMS)
-    ac_enc = _jpeg_canon(_JT_AC_COUNTS, _JT_AC_SYMS)
-    bw = _JpegBitW()
-    preds = [0] * len(comps)
-    mcu, rst = 0, 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if ri and mcu and mcu % ri == 0:
-                bw.align()
-                bw.out += bytes([0xFF, 0xD0 + (rst & 7)])
-                rst = (rst + 1) & 7
-                preds = [0] * len(comps)
-            for ci, (pl, ch, cv, q) in enumerate(comps):
-                for by in range(cv):
-                    for bx in range(ch):
-                        blk = qblocks[ci][my * cv + by, mx * ch + bx]
-                        zc = blk.reshape(64)[zz]
-                        s, mag = _jpeg_mag(int(zc[0]) - preds[ci])
-                        preds[ci] = int(zc[0])
-                        bw.put(*dc_enc[s])
-                        if s:
-                            bw.put(mag, s)
-                        run = 0
-                        nz = np.nonzero(zc[1:])[0]
-                        last = nz[-1] + 1 if nz.size else 0
-                        for k in range(1, last + 1):
-                            if zc[k] == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                bw.put(*ac_enc[0xF0])
-                                run -= 16
-                            s, mag = _jpeg_mag(int(zc[k]))
-                            bw.put(*ac_enc[(run << 4) | s])
-                            bw.put(mag, s)
-                            run = 0
-                        if last < 63:
-                            bw.put(*ac_enc[0x00])
-            mcu += 1
-    bw.align()
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker, payload):
-        out.extend(bytes([0xFF, marker])
-                   + (len(payload) + 2).to_bytes(2, "big") + payload)
-
-    seg(0xDB, bytes([0x00]) + bytes(qy.reshape(64)[zz].astype(np.uint8)))
-    if not gray:
-        seg(0xDB, bytes([0x01]) + bytes(qc.reshape(64)[zz].astype(np.uint8)))
-    ncomp = 1 if gray else 3
-    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
-        + bytes([ncomp])
-    for k, (_, ch, cv, _) in enumerate(comps):
-        sof += bytes([k + 1, (ch << 4) | cv, 0 if k == 0 else 1])
-    seg(0xC0, sof)
-    seg(0xC4, bytes([0x00] + _JT_DC_COUNTS) + bytes(_JT_DC_SYMS))
-    seg(0xC4, bytes([0x10] + _JT_AC_COUNTS) + bytes(_JT_AC_SYMS))
-    if ri:
-        seg(0xDD, ri.to_bytes(2, "big"))
-    sos = bytes([ncomp])
-    for k in range(ncomp):
-        sos += bytes([k + 1, 0x00])
-    seg(0xDA, sos + bytes([0, 63, 0]))
-    out += bw.out + b"\xff\xd9"
-    return bytes(out), _jpeg_expected(img, comps, qblocks, hv)
-
-
-def _enc_ac_first(bw, blocks, ss, se, al, ac_enc):
-    """Progressive AC first-pass scan body (T.81 G.1.2.2): run/size coding
-    of the point-transformed band with EOB-run (EOBn) accumulation across
-    blocks. `blocks` yields 64-long zigzag coefficient vectors."""
-    eobrun = 0
-
-    def emit_eobrun():
-        nonlocal eobrun
-        if eobrun:
-            nbits = eobrun.bit_length() - 1
-            bw.put(*ac_enc[nbits << 4])
-            if nbits:
-                bw.put(eobrun - (1 << nbits), nbits)
-            eobrun = 0
-
-    for zc in blocks:
-        r = 0
-        for k in range(ss, se + 1):
-            v = int(zc[k])
-            t = abs(v) >> al
-            if t == 0:
-                r += 1
-                continue
-            emit_eobrun()
-            while r > 15:
-                bw.put(*ac_enc[0xF0])
-                r -= 16
-            s, mag = _jpeg_mag(t if v > 0 else -t)
-            bw.put(*ac_enc[(r << 4) | s])
-            bw.put(mag, s)
-            r = 0
-        if r > 0:
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                emit_eobrun()
-    emit_eobrun()
-
-
-def _enc_ac_refine(bw, blocks, ss, se, al, ac_enc):
-    """Progressive AC refinement scan body (T.81 G.1.2.3, mirroring
-    libjpeg's encode_mcu_AC_refine): one correction bit per already-
-    nonzero coefficient, buffered and emitted after the next symbol;
-    newly-nonzero coefficients code as run/1 + sign; trailing zeros and
-    correction bits fold into the EOB run."""
-    eobrun, be = 0, []                  # pending EOB run + its buffered bits
-
-    def emit_eobrun():
-        nonlocal eobrun, be
-        if eobrun:
-            nbits = eobrun.bit_length() - 1
-            bw.put(*ac_enc[nbits << 4])
-            if nbits:
-                bw.put(eobrun - (1 << nbits), nbits)
-            eobrun = 0
-        for bit in be:
-            bw.put(bit, 1)
-        be = []
-
-    for zc in blocks:
-        absv = [abs(int(zc[k])) >> al for k in range(ss, se + 1)]
-        eob = -1                        # band-relative last newly-nonzero
-        for i, t in enumerate(absv):
-            if t == 1:
-                eob = i
-        r, br_bits = 0, []              # zero run + bits since last symbol
-        for i, t in enumerate(absv):
-            if t == 0:
-                r += 1
-                continue
-            while r > 15 and i <= eob:
-                emit_eobrun()
-                bw.put(*ac_enc[0xF0])
-                r -= 16
-                for bit in br_bits:
-                    bw.put(bit, 1)
-                br_bits = []
-            if t > 1:                   # already nonzero: buffer bit Al
-                br_bits.append(t & 1)
-                continue
-            emit_eobrun()               # newly nonzero here
-            bw.put(*ac_enc[(r << 4) | 1])
-            bw.put(1 if int(zc[ss + i]) > 0 else 0, 1)
-            for bit in br_bits:
-                bw.put(bit, 1)
-            br_bits = []
-            r = 0
-        if r > 0 or br_bits:
-            eobrun += 1
-            be.extend(br_bits)
-            if eobrun == 0x7FFF:
-                emit_eobrun()
-    emit_eobrun()
-
-
-def _jpeg_prog_bytes(img, subsample=False, gray=False, ri=0):
-    """Independent in-test PROGRESSIVE JPEG encoder (T.81 Annex G) built
-    on the SAME `_jpeg_quantize` coefficients as the baseline encoder:
-    an interleaved DC-first scan (Al=1), per-component AC-first scans
-    with spectral selection (Y split 1..5 / 6..63 at Al=2, chroma 1..63
-    at Al=1), then the successive-approximation refinement ladder down
-    to Al=0 for every band, and a final DC refinement. With ri > 0 every
-    scan carries RSTn restarts every ri MCUs (predictors, EOB run, and
-    buffered correction bits all flush at the boundary). Decoding it
-    must reproduce the baseline decode exactly."""
-    h, w, _ = img.shape
-    zz = MM._make_zigzag()
-    comps, qblocks, mcux, mcuy, hv = _jpeg_quantize(img, subsample, gray)
-    dc_enc = _jpeg_canon(_JT_DC_COUNTS, _JT_DC_SYMS)
-    ac_enc = _jpeg_canon(_JT_ACP_COUNTS, _JT_ACP_SYMS)
-    ncomp = len(comps)
-
-    # non-interleaved per-component block dims (ceil of comp dims / 8),
-    # smaller than the padded MCU grid when h or w needs padding
-    dims = []
-    for _, ch, cv, _ in comps:
-        cw, chh = -(-w * ch // hv), -(-h * cv // hv)
-        dims.append((-(-chh // 8), -(-cw // 8)))
-
-    def band_blocks(ci):
-        nby, nbx = dims[ci]
-        for by in range(nby):
-            for bx in range(nbx):
-                yield qblocks[ci][by, bx].reshape(64)[zz]
-
-    def chunks(seq, n):
-        """ri-sized restart intervals (one chunk = whole scan when ri=0)."""
-        seq = list(seq)
-        if not n:
-            return [seq]
-        return [seq[i:i + n] for i in range(0, len(seq), n)]
-
-    def restart(bw, rst):
-        bw.align()
-        bw.out += bytes([0xFF, 0xD0 + (rst & 7)])
-
-    def dc_scan(al, refine):
-        bw = _JpegBitW()
-        mcus = [(my, mx) for my in range(mcuy) for mx in range(mcux)]
-        for gi, group in enumerate(chunks(mcus, ri)):
-            if gi:
-                restart(bw, gi - 1)
-            preds = [0] * ncomp
-            for my, mx in group:
-                for ci, (_, ch, cv, _) in enumerate(comps):
-                    for by in range(cv):
-                        for bx in range(ch):
-                            zc0 = int(qblocks[ci][my * cv + by,
-                                                  mx * ch + bx][0, 0])
-                            if refine:
-                                bw.put((zc0 >> al) & 1, 1)
-                            else:
-                                v = zc0 >> al      # arithmetic shift
-                                s, mag = _jpeg_mag(v - preds[ci])
-                                preds[ci] = v
-                                bw.put(*dc_enc[s])
-                                if s:
-                                    bw.put(mag, s)
-        bw.align()
-        return bytes(bw.out)
-
-    def ac_scan(ci, ss, se, al, refine):
-        bw = _JpegBitW()
-        fn = _enc_ac_refine if refine else _enc_ac_first
-        for gi, group in enumerate(chunks(band_blocks(ci), ri)):
-            if gi:
-                restart(bw, gi - 1)
-            fn(bw, group, ss, se, al, ac_enc)
-            bw.align()
-        return bytes(bw.out)
-
-    # (scan components, Ss, Se, Ah, Al, entropy bytes); every band walks
-    # the successive-approximation ladder down to Al=0
-    all_c = list(range(ncomp))
-    scans = [(all_c, 0, 0, 0, 1, dc_scan(1, False))]
-    y_bands = [(1, 5), (6, 63)] if not gray else [(1, 63)]
-    for ss, se in y_bands:
-        scans.append(([0], ss, se, 0, 2, ac_scan(0, ss, se, 2, False)))
-    for ci in range(1, ncomp):
-        scans.append(([ci], 1, 63, 0, 1, ac_scan(ci, 1, 63, 1, False)))
-    for ss, se in y_bands:
-        scans.append(([0], ss, se, 2, 1, ac_scan(0, ss, se, 1, True)))
-    scans.append((all_c, 0, 0, 1, 0, dc_scan(0, True)))
-    for ss, se in y_bands:
-        scans.append(([0], ss, se, 1, 0, ac_scan(0, ss, se, 0, True)))
-    for ci in range(1, ncomp):
-        scans.append(([ci], 1, 63, 1, 0, ac_scan(ci, 1, 63, 0, True)))
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker, payload):
-        out.extend(bytes([0xFF, marker])
-                   + (len(payload) + 2).to_bytes(2, "big") + payload)
-
-    qy = comps[0][3]
-    seg(0xDB, bytes([0x00]) + bytes(qy.reshape(64)[zz].astype(np.uint8)))
-    if not gray:
-        qc = comps[1][3]
-        seg(0xDB, bytes([0x01]) + bytes(qc.reshape(64)[zz].astype(np.uint8)))
-    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
-        + bytes([ncomp])
-    for k, (_, ch, cv, _) in enumerate(comps):
-        sof += bytes([k + 1, (ch << 4) | cv, 0 if k == 0 else 1])
-    seg(0xC2, sof)                      # SOF2: progressive DCT
-    seg(0xC4, bytes([0x00] + _JT_DC_COUNTS) + bytes(_JT_DC_SYMS))
-    seg(0xC4, bytes([0x10] + _JT_ACP_COUNTS) + bytes(_JT_ACP_SYMS))
-    if ri:
-        seg(0xDD, ri.to_bytes(2, "big"))
-    for sel, ss, se, ah, al, data in scans:
-        sos = bytes([len(sel)])
-        for ci in sel:
-            sos += bytes([ci + 1, 0x00])
-        seg(0xDA, sos + bytes([ss, se, (ah << 4) | al]))
-        out += data
-    out += b"\xff\xd9"
-    return bytes(out), _jpeg_expected(img, comps, qblocks, hv)
-
-
-def test_jpeg_decode_roundtrip():
-    """REAL baseline JPEG decode vs an independent in-test T.81 encoder:
-    pixel-exact against the encoder's own dequantized reconstruction for
-    4:4:4, 4:2:0 (chroma box-subsampling + kron upsample), grayscale,
-    and restart-interval streams; header path; honest rejection of
-    truncation and progressive (SOF2) scans."""
-    rng = np.random.default_rng(21)
-    # smooth gradient + noise: exercises DC prediction AND long AC runs
-    gy, gx = np.mgrid[0:33, 0:46]
-    base = (gy * 3 + gx * 2) % 256
-    img = np.clip(base[:, :, None]
-                  + rng.integers(-25, 25, size=(33, 46, 3)), 0, 255) \
-        .astype(np.uint8)
-    b444, exp444 = _jpeg_bytes(img)
-    got = MM.decode_jpeg_pixels(b444)
-    assert got.shape == exp444.shape
-    assert int(np.abs(got.astype(int) - exp444.astype(int)).max()) <= 1
-    # the lossy encode stays recognizable (sanity vs the SOURCE image)
-    assert float(np.abs(got.astype(float) - img.astype(float)).mean()) < 12
-    assert MM.raw_decoder(b444, "image") == (46, 33, None, None)
-    assert MM.raw_decoder(b444, "video") == (46, 33, 1, None)
-    # dispatch through the generic pixel path
-    assert (MM.decode_raw_pixels(b444) == got).all()
-    # 4:2:0 subsampled (2x2 luma sampling, kron chroma upsample)
-    b420, exp420 = _jpeg_bytes(img, subsample=True)
-    got420 = MM.decode_jpeg_pixels(b420)
-    assert int(np.abs(got420.astype(int) - exp420.astype(int)).max()) <= 1
-    # grayscale single-component scan
-    bg, expg = _jpeg_bytes(img, gray=True)
-    gotg = MM.decode_jpeg_pixels(bg)
-    assert int(np.abs(gotg.astype(int) - expg.astype(int)).max()) <= 1
-    # restart markers: DRI + RSTn sync + DC predictor reset
-    br_, expr = _jpeg_bytes(img, ri=2)
-    gotr = MM.decode_jpeg_pixels(br_)
-    assert int(np.abs(gotr.astype(int) - expr.astype(int)).max()) <= 1
-    # truncation -> honest error, never a wrong image
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_pixels(b444[:len(b444) // 2])
-    # a baseline-bodied stream relabeled SOF2 is a MALFORMED progressive
-    # stream (its only scan says Ss=0, Se=63 — DC and AC may not mix in
-    # progressive mode) -> honest error
-    prog = b444.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_pixels(prog)
-
-
-def test_jpeg_progressive_decode():
-    """REAL progressive JPEG decode (T.81 Annex G) vs an independent
-    in-test progressive encoder built on the SAME quantized coefficients
-    as the baseline encoder: after the full successive-approximation
-    ladder, the decoded image must match the baseline decode of identical
-    coefficients pixel-for-pixel (within IDCT float rounding). Exercises
-    interleaved + non-interleaved DC scans, spectral-selection bands,
-    EOB-run coding, AC refinement correction bits, and truncation."""
-    rng = np.random.default_rng(33)
-    gy, gx = np.mgrid[0:33, 0:46]
-    base = (gy * 3 + gx * 2) % 256
-    img = np.clip(base[:, :, None]
-                  + rng.integers(-25, 25, size=(33, 46, 3)), 0, 255) \
-        .astype(np.uint8)
-    # 4:4:4 — expected comes from the shared quantized blocks
-    p444, exp444 = _jpeg_prog_bytes(img)
-    got = MM.decode_jpeg_pixels(p444)
-    assert got.shape == exp444.shape
-    assert int(np.abs(got.astype(int) - exp444.astype(int)).max()) <= 1
-    # progressive and baseline streams of the same image decode the same
-    b444, _ = _jpeg_bytes(img)
-    gotb = MM.decode_jpeg_pixels(b444)
-    assert int(np.abs(got.astype(int) - gotb.astype(int)).max()) <= 1
-    # header path reports dims for SOF2 too
-    assert MM.raw_decoder(p444, "image") == (46, 33, None, None)
-    assert (MM.decode_raw_pixels(p444) == got).all()
-    # 4:2:0 subsampled: non-interleaved Y AC grid (5 block rows) is
-    # smaller than the padded MCU grid (6) — exercises _comp_blocks
-    p420, exp420 = _jpeg_prog_bytes(img, subsample=True)
-    got420 = MM.decode_jpeg_pixels(p420)
-    assert int(np.abs(got420.astype(int) - exp420.astype(int)).max()) <= 1
-    # grayscale: single-component (non-interleaved) DC scan path
-    pg, expg = _jpeg_prog_bytes(img, gray=True)
-    gotg = MM.decode_jpeg_pixels(pg)
-    assert int(np.abs(gotg.astype(int) - expg.astype(int)).max()) <= 1
-    # a smooth image drives long EOB runs (every AC band mostly zero)
-    smooth = np.full((24, 24, 3), 130, np.uint8)
-    smooth[:, :, 1] = 90
-    ps, exps = _jpeg_prog_bytes(smooth)
-    assert int(np.abs(MM.decode_jpeg_pixels(ps).astype(int)
-                      - exps.astype(int)).max()) <= 1
-    # RSTn restarts inside every progressive scan: predictors, EOB run,
-    # and buffered refinement bits must all reset at the boundary
-    pr, expr = _jpeg_prog_bytes(img, ri=3)
-    gotr = MM.decode_jpeg_pixels(pr)
-    assert int(np.abs(gotr.astype(int) - expr.astype(int)).max()) <= 1
-    assert (gotr == got).all()          # identical coefficients either way
-    # truncation mid-ladder -> honest error, never a wrong image
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_pixels(p444[:len(p444) * 2 // 3])
-
-
-def test_jpeg_spark_resize_e2e(spark):
-    """Baseline AND progressive JPEG bytes through the Arrow-batched Spark
-    decode/resize path (mapInPandas): per-asset resized-buffer hashes must
-    equal the local decode + nearest-neighbor resize."""
-    import hashlib as hl
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, size=(19, 27, 3)).astype(np.uint8)
-    bb, _ = _jpeg_bytes(img)
-    pb, _ = _jpeg_prog_bytes(img)
-    assets = spark.createDataFrame(
-        [("jb", "image", bytearray(bb), "image/jpeg"),
-         ("jp", "image", bytearray(pb), "image/jpeg")], MM.ASSET_SCHEMA)
-    rows = {r["asset_id"]: r for r in
-            MM.resize_raw_assets(assets, target_w=8, target_h=8).collect()}
-    assert set(rows) == {"jb", "jp"}
-    for aid, content in (("jb", bb), ("jp", pb)):
-        ref = MM.resize_nearest(MM.decode_raw_pixels(content), 8, 8)
-        assert (rows[aid]["src_width"], rows[aid]["src_height"]) == (27, 19)
-        assert rows[aid]["resized_sha256"] == \
-            hl.sha256(ref.tobytes()).hexdigest()
-
-
-def test_jpeg_progressive_geometry_sweep():
-    """Randomized geometry sweep: for a grid of sizes (single partial
-    block, MCU-padding asymmetries, subsampled odd dims) the progressive
-    decode must agree with the baseline decode of the SAME quantized
-    coefficients."""
-    rng = np.random.default_rng(7)
-    for (h, w), sub in [((8, 8), False), ((7, 5), False), ((16, 24), True),
-                        ((17, 9), True), ((9, 17), True), ((40, 12), False),
-                        ((13, 31), True)]:
-        img = rng.integers(0, 256, size=(h, w, 3)).astype(np.uint8)
-        pb, expp = _jpeg_prog_bytes(img, subsample=sub)
-        bb, expb = _jpeg_bytes(img, subsample=sub)
-        assert (expp == expb).all()     # same coefficients by construction
-        gp = MM.decode_jpeg_pixels(pb)
-        gb = MM.decode_jpeg_pixels(bb)
-        assert gp.shape == (h, w, 3), (h, w, sub)
-        assert int(np.abs(gp.astype(int) - expp.astype(int)).max()) <= 1, \
-            (h, w, sub)
-        assert int(np.abs(gp.astype(int) - gb.astype(int)).max()) <= 1, \
-            (h, w, sub)
-
-
-def _box(btype, payload):
-    return (len(payload) + 8).to_bytes(4, "big") + btype + payload
-
-
-def _mp4_bytes(w=None, h=None, n_frames=None, audio_rate=None,
-               largesize=False, tkhd_v1=False):
-    """Minimal-but-real ISO BMFF container for the header-walk tests:
-    ftyp + moov(trak(tkhd + mdia(mdhd + hdlr + minf(stbl(stsz)))))."""
-    traks = b""
-    if w is not None:
-        tk = (bytes([1]) + b"\x00" * 3 + b"\x00" * 32 if tkhd_v1
-              else bytes([0]) + b"\x00" * 3 + b"\x00" * 20)
-        tk += b"\x00" * 52                          # reserved+matrix etc
-        tk += (w << 16).to_bytes(4, "big") + (h << 16).to_bytes(4, "big")
-        stsz = _box(b"stsz", b"\x00" * 8 + n_frames.to_bytes(4, "big"))
-        mdhd = _box(b"mdhd", b"\x00" * 12 + (600).to_bytes(4, "big")
-                    + b"\x00" * 4)
-        hdlr = _box(b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 12)
-        mdia = _box(b"mdia", mdhd + hdlr
-                    + _box(b"minf", _box(b"stbl", stsz)))
-        traks += _box(b"trak", _box(b"tkhd", tk) + mdia)
-    if audio_rate is not None:
-        tk = bytes([0]) + b"\x00" * 3 + b"\x00" * 20 + b"\x00" * 52 \
-            + b"\x00" * 8                           # zero width/height
-        mdhd = _box(b"mdhd", b"\x00" * 12 + audio_rate.to_bytes(4, "big")
-                    + b"\x00" * 4)
-        hdlr = _box(b"hdlr", b"\x00" * 8 + b"soun" + b"\x00" * 12)
-        stsz = _box(b"stsz", b"\x00" * 8 + (100).to_bytes(4, "big"))
-        mdia = mdhd + hdlr + _box(b"minf", _box(b"stbl", stsz))
-        traks += _box(b"trak", _box(b"tkhd", tk) + _box(b"mdia", mdia))
-    moov = _box(b"moov", traks)
-    if largesize:                                   # 64-bit box size path
-        moov = (1).to_bytes(4, "big") + b"moov" \
-            + (len(traks) + 16).to_bytes(8, "big") + traks
-    return _box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2") + moov
-
-
-def test_mp4_mp3_container_headers():
-    """REAL MP4/M4A box-walk metadata (round 6): tkhd 16.16 dimensions,
-    stsz sample count as the video frame count, audio-track mdhd
-    timescale as the sample rate (hdlr-gated so non-sound tracks never
-    leak a fake rate), 64-bit largesize boxes, and ID3v2-aware MP3 frame
-    sync. Payload decode stays behind the decoder= seam."""
-    v = _mp4_bytes(w=640, h=360, n_frames=240)
-    assert MM.raw_decoder(v, "video") == (640, 360, 240, None)
-    assert MM.raw_decoder(v, "image") == (640, 360, None, None)
-    v1 = _mp4_bytes(w=1920, h=1080, n_frames=48, tkhd_v1=True,
-                    largesize=True)
-    assert MM.raw_decoder(v1, "video") == (1920, 1080, 48, None)
-    a = _mp4_bytes(audio_rate=44100)
-    assert MM.raw_decoder(a, "audio") == (None, None, None, 44100)
-    # video track wins for video modality even with an audio track present
-    both = _mp4_bytes(w=320, h=240, n_frames=10, audio_rate=48000)
-    assert MM.raw_decoder(both, "video") == (320, 240, 10, None)
-    assert MM.raw_decoder(both, "audio") == (None, None, None, 48000)
-    # MP3: MPEG-1 Layer III 44.1 kHz behind a 17-byte ID3v2 tag
-    id3 = b"ID3\x04\x00\x00\x00\x00\x00\x07" + b"\x00" * 7
-    mp3 = id3 + bytes([0xFF, 0xFB, 0x90, 0x00]) + b"\x00" * 32
-    assert MM.raw_decoder(mp3, "audio") == (None, None, None, 44100)
-    # MPEG-2 (22.05 kHz) without a tag
-    mp3v2 = bytes([0xFF, 0xF3, 0x90, 0x00]) + b"\x00" * 32
-    assert MM.raw_decoder(mp3v2, "audio") == (None, None, None, 22050)
-    # honest rejection: truncated box sizes never return garbage
-    with pytest.raises(ValueError):
-        MM.raw_decoder(v[:30], "video")
-    with pytest.raises(ValueError):
-        MM.raw_decoder(b"\x00\x00\x00\x08ftypx", "video")
-
-
-def test_ppm_crlf_header_and_truncation():
-    """Round-5 advice: a netpbm header written with CRLF line endings must
-    not leave the '\\n' inside the pixel data (every pixel shifts by one
-    byte), and truncated pixel data must be rejected, not misdecoded."""
-    rng = np.random.default_rng(12)
-    px = rng.integers(0, 256, size=(4, 6, 3), dtype=np.uint8)
-    crlf = b"P6\r\n6 4\r\n255\r\n" + px.tobytes()
-    assert (MM.decode_raw_pixels(crlf) == px).all()
-    # plain LF still exact
-    lf = b"P6\n6 4\n255\n" + px.tobytes()
-    assert (MM.decode_raw_pixels(lf) == px).all()
-    # lone-\r separator with pixel data that BEGINS with 0x0A: the
-    # byte-count check proves the 0x0A is pixel data, not separator
-    px2 = px.copy()
-    px2[0, 0, 0] = 0x0A
-    cr = b"P6\r6 4\r255\r" + px2.tobytes()
-    assert (MM.decode_raw_pixels(cr) == px2).all()
-    # truncated pixel payload -> header parse rejects -> honest ValueError
-    with pytest.raises(ValueError):
-        MM.decode_raw_pixels(lf[:-5])
 
 
 def test_ops_cache_release(spark, docs):
