@@ -238,8 +238,12 @@ def main() -> None:
     # 14. BPE large-vocab path — broadcast table + ArrowEvalPython
     big_merges = [(a, b) for a in "abcdefghijklmnopqrst"
                   for b in "abcdefghijklmnopqrst"]
-    blk = BPE.bpe_encode(docs, merges=big_merges, codegen_max_merges=64)
-    plan14 = explain_str(blk, max_lines=30)
+    gate, BPE.CODEGEN_MAX_MERGES = BPE.CODEGEN_MAX_MERGES, 64
+    try:
+        plan14 = explain_str(BPE.bpe_encode(docs, merges=big_merges),
+                             max_lines=30)
+    finally:
+        BPE.CODEGEN_MAX_MERGES = gate
     assert "ArrowEvalPython" in plan14
     assert "Exchange" not in plan14
     sections.append((
@@ -262,8 +266,11 @@ def main() -> None:
         plan15))
 
     # 16. CCNet cutpoint path (round-5 de-skew) — NO per-language ntile sort
-    ccl = LMOD.ccnet_buckets(docs, use_cutpoints=True)
-    plan16 = explain_str(ccl, max_lines=70)
+    gate, enorm.EXACT_QUANTILE_MAX_ROWS = enorm.EXACT_QUANTILE_MAX_ROWS, 0
+    try:
+        plan16 = explain_str(LMOD.ccnet_buckets(docs), max_lines=70)
+    finally:
+        enorm.EXACT_QUANTILE_MAX_ROWS = gate
     assert not re.search(r"\bntile\(", plan16)
     sections.append((
         "CCNet perplexity terciles — LARGE path (broadcast cutpoints)",

@@ -184,6 +184,7 @@ def main() -> None:
                           "spark.sql.files.openCostInBytes": "65536"})
     import bench
     import __spark_entry__ as em
+    from forex_feature_generator_spark.engine import normalize as NORM
     from forex_feature_generator_spark.engine import skew as eskew
     from forex_feature_generator_spark.ops import lm as LM
 
@@ -244,15 +245,18 @@ def main() -> None:
     # q59 with the LARGE (cutpoint) path forced — the de-skew evidence:
     # no per-language sort stage, buckets from broadcast cutpoints
     docs = spark.read.parquet(os.path.join(sf1, "documents.parquet"))
+    gate, NORM.EXACT_QUANTILE_MAX_ROWS = NORM.EXACT_QUANTILE_MAX_ROWS, 0
+    try:
+        cc_rows = LM.ccnet_buckets(docs).count()
 
-    cc_rows = LM.ccnet_buckets(docs, use_cutpoints=True).count()
-
-    def ccnet_large():
-        (LM.ccnet_buckets(docs, use_cutpoints=True)
-         .write.format("noop").mode("overwrite").save())
-        return cc_rows
-    results["probes"].append(probe(spark, "q59_ccnet_cutpoint_path",
-                                   ccnet_large))
+        def ccnet_large():
+            (LM.ccnet_buckets(docs)
+             .write.format("noop").mode("overwrite").save())
+            return cc_rows
+        results["probes"].append(probe(spark, "q59_ccnet_cutpoint_path",
+                                       ccnet_large))
+    finally:
+        NORM.EXACT_QUANTILE_MAX_ROWS = gate
 
     # q38 connected components at 10x (round-6 task: the one top-5 query
     # the round-5 probe missed). Scale risk = iteration count x one-job

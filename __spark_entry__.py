@@ -397,45 +397,26 @@ def q13_feature_stats(spark, sf_dir):
     """FeatureStatisticsCollector shape: count/mean/stddev/min/max + exact
     interpolated quartiles per group.
 
-    r7: the quartiles come from a per-group row_number window + rank-pick
-    aggregates (F.percentile's exact interpolation formula mirrored, same
-    values — verified exact vs the oracle) instead of the single-buffer
-    percentile aggregate, whose per-map value->count hashmaps cost 10.5 s
-    at sf1 on this 583k-distinct column (same pathology the q10 cuts frame
-    fixed; guide §5 bounded per-task state). 9.7 s -> 4.3 s at sf1."""
+    One call of normalize.quantiles_frame with by=[l_returnflag] and the
+    five moments as its aggs: a per-group row_number window, then one
+    groupBy computes the moments and the rank-pick (F.percentile's
+    interpolation, same values). The single-buffer percentile aggregate's
+    per-map value->count hashmaps cost 10.5 s at sf1 on this 583k-distinct
+    column; the rank-pick took q13 from 9.7 s to 4.3 s there. Above the
+    size gate the quartiles come from approx_percentile instead."""
+    from forex_feature_generator_spark.engine.normalize import quantiles_frame
     li = _load(spark, sf_dir, "lineitem", floor=True)
-    grp, v = "l_returnflag", "l_extendedprice"
-    probs = [0.25, 0.5, 0.75]
-    names = ["q1", "median", "q3"]
-    base = li.select(grp, F.col(v).alias("__v")).filter(F.col(v).isNotNull())
-    wrn = Window.partitionBy(grp).orderBy("__v")
-    d = base.select(grp, "__v",
-                    F.row_number().over(wrn).alias("__rn"),
-                    F.count(F.lit(1)).over(
-                        Window.partitionBy(grp)).alias("__n"))
-    aggs = [F.count(F.lit(1)).alias("cnt"),
-            F.round(F.avg("__v"), 4).alias("mean"),
-            F.round(F.stddev_samp("__v"), 4).alias("stddev"),
-            F.min("__v").alias("min_v"),
-            F.max("__v").alias("max_v"),
-            F.max("__n").alias("__n")]
-    for i, p in enumerate(probs):
-        pos = F.lit(p) * (F.col("__n") - 1).cast("double")
-        lo, hi = F.floor(pos), F.ceil(pos)
-        aggs += [F.min(F.when(F.col("__rn") == lo + 1,
-                              F.col("__v"))).alias(f"__vl{i}"),
-                 F.min(F.when(F.col("__rn") == hi + 1,
-                              F.col("__v"))).alias(f"__vh{i}")]
-    g = d.groupBy(grp).agg(*aggs)
-    sel = [F.col(grp), "cnt", "mean", "stddev", "min_v", "max_v"]
-    for i, p in enumerate(probs):
-        pos = F.lit(p) * (F.col("__n") - 1).cast("double")
-        lo, hi = F.floor(pos), F.ceil(pos)
-        cut = F.when(lo == hi, F.col(f"__vl{i}")).otherwise(
-            (hi.cast("double") - pos) * F.col(f"__vl{i}")
-            + (pos - lo.cast("double")) * F.col(f"__vh{i}"))
-        sel.append(F.round(cut, 4).alias(names[i]))
-    return g.select(*sel)
+    v = "l_extendedprice"
+    g = quantiles_frame(
+        li, v, [0.25, 0.5, 0.75], _parquet_num_rows(sf_dir, "lineitem"),
+        by=["l_returnflag"],
+        aggs=[F.count(F.lit(1)).alias("cnt"),
+              F.round(F.avg(v), 4).alias("mean"),
+              F.round(F.stddev_samp(v), 4).alias("stddev"),
+              F.min(v).alias("min_v"), F.max(v).alias("max_v")])
+    return g.select("l_returnflag", "cnt", "mean", "stddev", "min_v", "max_v",
+                    *[F.round(F.col("cuts")[i], 4).alias(name)
+                      for i, name in enumerate(["q1", "median", "q3"])])
 
 
 SQL_Q13 = """
@@ -1372,8 +1353,10 @@ def q38_dedup_clusters(spark, sf_dir):
 
 def _sql_q38() -> str:
     pairs_sql = _sql_q16().strip().rstrip()
+    # MATERIALIZED: without it DuckDB re-runs the MinHash pair SQL inside
+    # every recursion step (this oracle, and q44's, took ~35 s, now ~9 s)
     return f"""
-WITH RECURSIVE pairs AS ({pairs_sql}),
+WITH RECURSIVE pairs AS MATERIALIZED ({pairs_sql}),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
   UNION
@@ -2325,9 +2308,10 @@ def q10_norm_binning(spark, sf_dir):
       * the three separate stat jobs (avg/std, min/max, percentile — each
         a full lineitem scan) merge into ONE combined agg plus a separate
         cuts frame;
-      * the decile cutpoints come from normalize.exact_quantiles_frame —
-        a single-partition SORT + rank-pick with F.percentile's exact
-        interpolation — instead of the single-buffer percentile agg whose
+      * the decile cutpoints come from normalize.quantiles_frame with
+        by=() — one global row_number window + rank-pick with
+        F.percentile's exact interpolation (approx_percentile above the
+        size gate) — instead of the single-buffer percentile agg whose
         per-map value->count hashmaps degrade superlinearly on this
         583k-distinct column (2.03 s -> cuts frame 1.63 s at sf0.1; the
         sf1 driver run spent ~45 s of q10's 60 s there);
@@ -2337,8 +2321,7 @@ def q10_norm_binning(spark, sf_dir):
         3.0 s), but each join side is now a narrow projection of ONE
         shared scan+broadcast frame instead of an independent scan+agg
         pipeline (guide §2.3: project before the exchange)."""
-    from forex_feature_generator_spark.engine.normalize import \
-        gated_quantiles_frame
+    from forex_feature_generator_spark.engine.normalize import quantiles_frame
     li = _load(spark, sf_dir, "lineitem")
     qs = [i / 10 for i in range(1, 10)]
     n = _parquet_num_rows(sf_dir, "lineitem")   # footer metadata, no job
@@ -2350,7 +2333,7 @@ def q10_norm_binning(spark, sf_dir):
         F.stddev_samp("l_quantity").alias("sq"),
         F.min("l_extendedprice").alias("mn"),
         F.max("l_extendedprice").alias("mx"))
-    cutsf = (gated_quantiles_frame(li, "l_extendedprice", qs, n)
+    cutsf = (quantiles_frame(li, "l_extendedprice", qs, n)
              .select(F.transform("cuts",
                                  lambda c: F.round(c, 4)).alias("cuts")))
     j = li.crossJoin(F.broadcast(stats)).crossJoin(F.broadcast(cutsf))

@@ -1,9 +1,25 @@
 """Per-feature statistics + normalization — Spark re-expression of
 FeatureStatisticsCollector + DataNormalizer (SURVEY §2.3, §3.3).
 
-Stats: one single-pass aggregation (count/avg/stddev_samp/min/max + exact
-`percentile` — the reference's nondeterministic 10k reservoir is replaced by
-exact quantiles with the same interpolation formula; documented deviation).
+Stats run in long form: one `stack` turns the 148 feature columns into
+(feature, v) rows, NaN/±inf become NULL (the reference skips them), and one
+grouped pass by `feature` computes count/avg/stddev_samp/min/max and the
+quartiles — 148 small groups in parallel instead of one 888-aggregate row.
+The reference's nondeterministic 10k reservoir is replaced by exact
+quantiles with the same interpolation formula (documented deviation).
+
+Two quantile functions, both behind THE size gate EXACT_QUANTILE_MAX_ROWS
+(exact at or below it, the mergeable `approx_percentile` sketch above):
+
+  * quantiles_frame — a frame of (by…, aggs…, cuts). Its exact branch is a
+    row_number rank-pick that equals `F.percentile` bit for bit without the
+    percentile aggregate's single buffer per group. Used where a group can
+    be large or high-cardinality: the stats (per feature), q10 (one global
+    group) and q13 (three groups).
+  * gated_quantile_agg — a plain aggregate column that rides along in a
+    caller's own groupBy. Used only for many small, low-cardinality groups
+    (q61's length profile, the ccnet cutpoints), where one partial hash
+    aggregate beats a window's sort.
 
 Normalization: the 150-column select folds the 148 per-feature scalers into
 literal expressions (a broadcast of a 148-row stats table collapsed by
@@ -11,8 +27,10 @@ constant folding) — a single narrow stage, no shuffle, full codegen."""
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..oracle.pipeline import FEATURE_NAMES
@@ -22,128 +40,107 @@ from ..oracle.stats import normalization_type
 EXACT_QUANTILE_MAX_ROWS = 20_000_000
 APPROX_PERCENTILE_ACCURACY = 10_000   # max rank error = count/accuracy
 
+STATS_COLUMNS = ["feature", "count", "mean", "stddev", "min", "max",
+                 "q1", "median", "q3", "iqr"]
+
 
 def gated_quantile_agg(col, probabilities, n_rows: int):
-    """THE size gate for every quantile computation in the engine: exact
-    `percentile` below EXACT_QUANTILE_MAX_ROWS (one aggregation buffer holds
-    every value of the group — fine at test scale, a driver/executor OOM at
-    100 TB), `approx_percentile` above (t-digest-style mergeable sketch,
-    rank error <= count/APPROX_PERCENTILE_ACCURACY)."""
+    """Quantile aggregate column for a caller's own groupBy: exact
+    `percentile` at or below EXACT_QUANTILE_MAX_ROWS, `approx_percentile`
+    above (t-digest-style mergeable sketch, rank error <=
+    count/APPROX_PERCENTILE_ACCURACY).
+
+    Only for low-cardinality group profiles (q61's length_profile, the
+    ccnet cutpoints): there the percentile buffer per group is small and the
+    aggregate partial-aggregates map-side in the caller's one groupBy —
+    routing q61 through quantiles_frame's window measured slower (median
+    0.71 s -> 1.00 s at sf0.01). For one large or high-cardinality group
+    use quantiles_frame: the percentile buffer holds every value of the
+    group and merges all of them in one task."""
     if n_rows <= EXACT_QUANTILE_MAX_ROWS:
         return F.percentile(col, F.lit(probabilities))
     return F.approx_percentile(col, F.lit(probabilities),
                                F.lit(APPROX_PERCENTILE_ACCURACY))
 
 
-def exact_quantiles_frame(df: DataFrame, col: str,
-                          probabilities: list[float]) -> DataFrame:
-    """1-row frame [cuts: array<double>] with EXACTLY `F.percentile`'s
-    values (same interpolation: position = p * (n-1), result =
-    (ceil-pos)*v[floor] + (pos-floor)*v[ceil]), computed without the
-    single-buffer percentile aggregate. The single-buffer agg builds a
-    value->count hashmap per map task, serializes every map through the
-    shuffle and merges + sorts them in ONE final task — on a high-
-    cardinality column that is O(n) single-threaded hashmap work (q10 at
-    sf1: ~45 s of its 60 s). Here the unavoidable exact step is a plain
-    single-partition SORT of the (narrow, nulls-dropped) column + one pass
-    of rank-picking aggregates — r7 profile: 2.03 s -> 0.26 s at sf0.1,
-    and sort scales n·log n where the hashmap path degraded superlinearly.
-    Gated like everything exact: callers switch to approx_percentile above
-    EXACT_QUANTILE_MAX_ROWS (guide §5 — bounded per-task state)."""
-    from pyspark.sql import Window
-    n1 = df.agg(F.count(F.col(col)).alias("__n"))
-    ranked = (df.select(F.col(col).alias("__v"))
-              .filter(F.col("__v").isNotNull())
-              .select("__v", F.row_number().over(
-                  Window.orderBy("__v")).alias("__rn"))
-              .crossJoin(F.broadcast(n1)))
+def quantiles_frame(df: DataFrame, col: str, probabilities: list[float],
+                    n_rows: int, by=(), aggs=()) -> DataFrame:
+    """(*by, *aggs, cuts: array<double>) — one row per group of `by` (one
+    row in all when `by` is empty). `aggs` are aggregate columns over `df`
+    computed in the same grouped pass; `cuts` are the `probabilities`
+    quantiles of `col`, NULLs ignored (NULL cuts for an all-NULL group).
 
-    def _pos(p):
-        return F.lit(float(p)) * (F.col("__n") - 1).cast("double")
-
-    aggs = []
-    for i, p in enumerate(probabilities):
-        lo, hi = F.floor(_pos(p)), F.ceil(_pos(p))
-        aggs += [F.min(F.when(F.col("__rn") == lo + 1,
-                              F.col("__v"))).alias(f"__vl{i}"),
-                 F.min(F.when(F.col("__rn") == hi + 1,
-                              F.col("__v"))).alias(f"__vh{i}")]
-    g = ranked.groupBy().agg(F.max("__n").alias("__n"), *aggs)
+    At or below EXACT_QUANTILE_MAX_ROWS (the rows per group are at most
+    `n_rows`) the cuts equal `F.percentile`'s bit for bit: a row_number and
+    a count over Window.partitionBy(*by), then the groupBy picks the values
+    at ranks floor(pos)+1 and ceil(pos)+1, pos = p·(n−1), and interpolates
+    as Spark's Percentile does (no interpolation when the two are equal).
+    The percentile aggregate itself builds a value->count hashmap per map
+    task and merges and sorts them in ONE task per group — O(n)
+    single-threaded on a high-cardinality column (q10 at sf1: ~45 s of its
+    60 s; the wide stats row paid it 148 times in one task). Above the gate:
+    one groupBy with `approx_percentile` (bounded per-task state)."""
+    if n_rows > EXACT_QUANTILE_MAX_ROWS:
+        return df.groupBy(*by).agg(*aggs, F.approx_percentile(
+            F.col(col), F.lit(probabilities),
+            F.lit(APPROX_PERCENTILE_ACCURACY)).alias("cuts"))
+    v = F.col(col)
+    w = Window.partitionBy(*by)
+    ranked = df.select("*",
+                       F.row_number().over(w.orderBy(v.asc_nulls_last()))
+                       .alias("__rn"),
+                       F.count(v).over(w).alias("__n"))
+    positions = [F.lit(float(p)) * (F.col("__n") - 1).cast("double")
+                 for p in probabilities]
+    picks = []
+    for i, pos in enumerate(positions):
+        picks += [F.min(F.when(F.col("__rn") == F.floor(pos) + 1, v))
+                  .alias(f"__vl{i}"),
+                  F.min(F.when(F.col("__rn") == F.ceil(pos) + 1, v))
+                  .alias(f"__vh{i}")]
+    g = ranked.groupBy(*by).agg(*aggs, F.max("__n").alias("__n"), *picks)
     cuts = []
-    for i, p in enumerate(probabilities):
-        pos = _pos(p)
+    for i, pos in enumerate(positions):
         lo, hi = F.floor(pos), F.ceil(pos)
-        cuts.append(F.when(lo == hi, F.col(f"__vl{i}")).otherwise(
-            (hi.cast("double") - pos) * F.col(f"__vl{i}")
-            + (pos - lo.cast("double")) * F.col(f"__vh{i}")))
-    return g.select(F.array(*cuts).alias("cuts"))
+        vl, vh = F.col(f"__vl{i}"), F.col(f"__vh{i}")
+        cuts.append(F.when((lo == hi) | (vl == vh), vl).otherwise(
+            (hi.cast("double") - pos) * vl + (pos - lo.cast("double")) * vh))
+    return g.select(*[c for c in g.columns if not c.startswith("__")],
+                    F.when(F.col("__n") > 0, F.array(*cuts)).alias("cuts"))
 
 
-def gated_quantiles_frame(df: DataFrame, col: str,
-                          probabilities: list[float],
-                          n_rows: int) -> DataFrame:
-    """Frame-shaped twin of gated_quantile_agg: 1-row [cuts] via the
-    distributed exact sort below the gate, the mergeable sketch above."""
-    if n_rows <= EXACT_QUANTILE_MAX_ROWS:
-        return exact_quantiles_frame(df, col, probabilities)
-    return df.agg(F.approx_percentile(
-        F.col(col), F.lit(probabilities),
-        F.lit(APPROX_PERCENTILE_ACCURACY)).alias("cuts"))
-
-
-def compute_stats(df: DataFrame, feature_cols: list[str] | None = None,
-                  exact_quantiles: bool | None = None,
-                  n_rows: int | None = None) -> pd.DataFrame:
-    """Returns the stats table (feature,count,mean,stddev,min,max,q1,median,q3,iqr).
-
-    Quantiles: exact `percentile` by default at test scale (deterministic —
-    the reference's 10k reservoir is nondeterministic, documented deviation),
-    but exact percentiles sort every feature column; above
-    EXACT_QUANTILE_MAX_ROWS the size gate switches to `approx_percentile`
-    (t-digest-style sketch, mergeable map-side, rank error <=
-    count/APPROX_PERCENTILE_ACCURACY). Pass exact_quantiles explicitly to
-    override the gate, or n_rows when the caller already knows the row count
-    (avoids the dedicated count() scan — costliest exactly at the scale the
-    gate exists for)."""
-    cols = feature_cols or FEATURE_NAMES
-    if exact_quantiles is None:
-        if n_rows is None:
-            n_rows = df.count()
-        exact_quantiles = n_rows <= EXACT_QUANTILE_MAX_ROWS
-    if exact_quantiles:
-        def q_agg(finite):
-            return F.percentile(finite, F.lit([0.25, 0.5, 0.75]))
-    else:
-        def q_agg(finite):
-            return F.approx_percentile(finite, F.lit([0.25, 0.5, 0.75]),
-                                       F.lit(APPROX_PERCENTILE_ACCURACY))
-    aggs = []
-    for c in cols:
-        col = F.col(f"`{c}`")
-        finite = F.when(~F.isnan(col) & ~col.isin(float("inf"), float("-inf")), col)
-        aggs += [
-            F.count(finite).alias(f"{c}__count"),
-            F.avg(finite).alias(f"{c}__mean"),
-            F.stddev_samp(finite).alias(f"{c}__stddev"),
-            F.min(finite).alias(f"{c}__min"),
-            F.max(finite).alias(f"{c}__max"),
-            q_agg(finite).alias(f"{c}__q"),
-        ]
-    row = df.agg(*aggs).collect()[0].asDict()
+def compute_stats(df: DataFrame, n_rows: int | None = None) -> pd.DataFrame:
+    """The stats table (STATS_COLUMNS, one row per FEATURE_NAMES entry, in
+    that order) over the finite values of each feature column. Pass `n_rows`
+    when the caller already knows the row count: it decides the quantile
+    gate and saves a count() scan. A feature with no finite value gets
+    oracle/stats.collect_stats' row: count 0, mean/stddev/quantiles 0.0,
+    min +inf, max -inf."""
+    if n_rows is None:
+        n_rows = df.count()
+    pairs = ", ".join(f"'{c}', `{c}`" for c in FEATURE_NAMES)
+    # NaN sorts above +inf in Spark, so `abs(x) < inf` keeps exactly the
+    # finite values (NULL otherwise)
+    long = df.selectExpr(
+        f"stack({len(FEATURE_NAMES)}, {pairs}) AS (feature, x)").selectExpr(
+        "feature", "IF(abs(x) < double('Infinity'), x, NULL) AS v")
+    rows = {r["feature"]: r for r in quantiles_frame(
+        long, "v", [0.25, 0.5, 0.75], n_rows, by=["feature"],
+        aggs=[F.count("v").alias("count"), F.avg("v").alias("mean"),
+              F.stddev_samp("v").alias("stddev"), F.min("v").alias("min"),
+              F.max("v").alias("max")]).collect()}
     out = []
-    for c in cols:
-        q = row[f"{c}__q"] or [0.0, 0.0, 0.0]
-        std = row[f"{c}__stddev"]
-        out.append((c, row[f"{c}__count"], row[f"{c}__mean"],
-                    0.0 if std is None else std,
-                    row[f"{c}__min"], row[f"{c}__max"],
-                    q[0], q[1], q[2], q[2] - q[0]))
-    return pd.DataFrame(out, columns=["feature", "count", "mean", "stddev",
-                                      "min", "max", "q1", "median", "q3", "iqr"])
-
-
-STATS_COLUMNS = ["feature", "count", "mean", "stddev", "min", "max",
-                 "q1", "median", "q3", "iqr"]
+    for c in FEATURE_NAMES:
+        r = rows[c]
+        if not r["count"]:
+            out.append((c, 0, 0.0, 0.0, math.inf, -math.inf, 0.0, 0.0, 0.0,
+                        0.0))
+            continue
+        q1, med, q3 = r["cuts"]
+        out.append((c, r["count"], r["mean"],
+                    0.0 if r["stddev"] is None else r["stddev"],
+                    r["min"], r["max"], q1, med, q3, q3 - q1))
+    return pd.DataFrame(out, columns=STATS_COLUMNS)
 
 
 def load_stats(path: str) -> pd.DataFrame:
@@ -151,15 +148,13 @@ def load_stats(path: str) -> pd.DataFrame:
     return pd.read_csv(path)[STATS_COLUMNS]
 
 
-def normalize(df: DataFrame, stats: pd.DataFrame,
-              feature_cols: list[str] | None = None) -> DataFrame:
+def normalize(df: DataFrame, stats: pd.DataFrame) -> DataFrame:
     """Applies the per-feature scaler (DataNormalizer.cs:156-194) as literal
-    column expressions; non-feature columns pass through unchanged."""
-    cols = feature_cols or FEATURE_NAMES
+    column expressions; columns without a stats row pass through unchanged."""
     st = stats.set_index("feature")
     exprs = []
     for name in df.columns:
-        if name not in st.index or name not in cols:
+        if name not in st.index:
             exprs.append(F.col(f"`{name}`"))
             continue
         s = st.loc[name]

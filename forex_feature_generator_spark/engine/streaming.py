@@ -76,6 +76,29 @@ _STATE_SCHEMA = StructType([
 _OUT_COLS = [f.name for f in STREAM_BAR_SCHEMA.fields]
 
 
+def _tick_batch(pdfs):
+    """One source's micro-batch as (us, bid, ask) arrays in event order, or
+    None when it has no ticks. The sort is stable: within-batch arrival
+    order must break ts ties, matching the batch path's file-order seq
+    (quicksort would permute them)."""
+    chunks = [p for p in pdfs if len(p)]
+    if not chunks:
+        return None
+    pdf = pd.concat(chunks).sort_values("ts", kind="stable")
+    return (pdf["ts"].to_numpy("datetime64[us]").astype("int64"),
+            pdf["bid"].to_numpy("float64"), pdf["ask"].to_numpy("float64"))
+
+
+def _tick_direction(bid, last_bid):
+    """(up, down) int64 flags of each tick against the previous tick's bid,
+    across bar and micro-batch boundaries (BarAggregator.cs:21-23, 41-47);
+    last_bid NaN = no previous tick yet."""
+    prev = np.concatenate([[last_bid], bid[:-1]])
+    finite_prev = ~np.isnan(prev)
+    return ((finite_prev & (bid > prev)).astype("int64"),
+            (finite_prev & (bid < prev)).astype("int64"))
+
+
 def streaming_bars_stateful(ticks: DataFrame, tf_minutes: int) -> DataFrame:
     """Per-source incremental bar aggregation with custom state
     (applyInPandasWithState): a bar is emitted the moment a later tick
@@ -89,57 +112,25 @@ def streaming_bars_stateful(ticks: DataFrame, tf_minutes: int) -> DataFrame:
     tf_us = tf_minutes * US_PER_MIN
 
     def fn(key, pdfs, state: GroupState):
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
+        batch = _tick_batch(pdfs)
+        if batch is None:
             return
-        # stable: within-batch arrival order must break ts ties, matching
-        # the batch path's file-order seq (quicksort would permute them)
-        pdf = pd.concat(chunks).sort_values("ts", kind="stable")
-        us = pdf["ts"].to_numpy("datetime64[us]").astype("int64")
-        bid = pdf["bid"].to_numpy("float64")
-        ask = pdf["ask"].to_numpy("float64")
-        bar_ts = us - us % tf_us
+        us, bid, ask = batch
         if state.exists:
             st = state.get
             last_bid = st[0]
-            carry = None if st[1] < 0 else list(st[1:])
+            # _accumulate_tf's 12th carry field (first_seq) is not kept:
+            # these bars carry no completion seq
+            carry = None if st[1] < 0 else list(st[1:]) + [0]
         else:
             last_bid, carry = float("nan"), None
-
-        prev = np.concatenate([[last_bid], bid[:-1]])
-        finite_prev = ~np.isnan(prev)
-        up = (finite_prev & (bid > prev)).astype("int64")
-        down = (finite_prev & (bid < prev)).astype("int64")
-        spread = ask - bid
-
-        starts = np.flatnonzero(
-            np.concatenate([[True], bar_ts[1:] != bar_ts[:-1]]))
-        ends = np.append(starts[1:], len(bid))
-        groups = []
-        for s, e in zip(starts, ends):
-            groups.append([int(bar_ts[s]), float(bid[s]),
-                           float(bid[s:e].max()), float(bid[s:e].min()),
-                           float(bid[e - 1]), int(e - s),
-                           int(up[s:e].sum()), int(down[s:e].sum()),
-                           float(spread[s:e].sum()), float(spread[s:e].max()),
-                           float(spread[s:e].min())])
-        if carry is not None:
-            if groups and groups[0][0] == carry[0]:
-                g = groups[0]
-                groups[0] = [carry[0], carry[1], max(g[2], carry[2]),
-                             min(g[3], carry[3]), g[4], g[5] + carry[5],
-                             g[6] + carry[6], g[7] + carry[7],
-                             g[8] + carry[8], max(g[9], carry[9]),
-                             min(g[10], carry[10])]
-            else:
-                groups.insert(0, carry)
-        done, new_carry = groups[:-1], groups[-1]
-        state.update(tuple([float(bid[-1])] + new_carry))
+        up, down = _tick_direction(bid, last_bid)
+        done, new_carry = _accumulate_tf(us - us % tf_us, bid, ask - bid,
+                                         up, down, 0, carry)
+        state.update(tuple([float(bid[-1])] + new_carry[:11]))
         if done:
-            src = key[0]
             yield pd.DataFrame(
-                [[src, g[0], g[1], g[2], g[3], g[4], g[5], g[6], g[7],
-                  g[8] / g[5], g[9], g[10]] for g in done],
+                [[key[0], *g[:8], g[8] / g[5], g[9], g[10]] for g in done],
                 columns=_OUT_COLS)
 
     return (ticks.groupBy("source")
@@ -210,7 +201,6 @@ def streaming_labels_stateful(ticks: DataFrame, tf_minutes: int = 1,
     stay pending (a bounded stream's tail is finished by the batch path; the
     batch computes those with a truncated window, which a stream cannot know
     is final). Use outputMode('append')."""
-    import numpy as np
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from ..oracle.labels import LabelConfig
     from .labels import compute_labels
@@ -220,15 +210,10 @@ def streaming_labels_stateful(ticks: DataFrame, tf_minutes: int = 1,
     need = cfg.max_future_ticks
 
     def fn(key, pdfs, state: GroupState):
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
+        batch = _tick_batch(pdfs)
+        if batch is None:
             return
-        # stable: within-batch arrival order must break ts ties, matching
-        # the batch path's file-order seq (quicksort would permute them)
-        pdf = pd.concat(chunks).sort_values("ts", kind="stable")
-        us = pdf["ts"].to_numpy("datetime64[us]").astype("int64")
-        bid = pdf["bid"].to_numpy("float64")
-        ask = pdf["ask"].to_numpy("float64")
+        us, bid, ask = batch
         bar_ts = us - us % tf_us
         n = len(bid)
 
@@ -385,15 +370,10 @@ def streaming_features_stateful(ticks: DataFrame,
                 for c in FEATURES_SCHEMA.split(", ")]
 
     def fn(key, pdfs, state: GroupState):
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
+        batch = _tick_batch(pdfs)
+        if batch is None:
             return
-        # stable: within-batch arrival order must break ts ties, matching
-        # the batch path's file-order seq (quicksort would permute them)
-        pdf = pd.concat(chunks).sort_values("ts", kind="stable")
-        us = pdf["ts"].to_numpy("datetime64[us]").astype("int64")
-        bid = pdf["bid"].to_numpy("float64")
-        ask = pdf["ask"].to_numpy("float64")
+        us, bid, ask = batch
         spread = ask - bid
 
         if state.exists:
@@ -413,10 +393,7 @@ def streaming_features_stateful(ticks: DataFrame,
                            [pl[0], pd_[0], pd_[1], pd_[2], pd_[3], pl[1],
                             pl[2], pl[3], pd_[4], pd_[5], pd_[6], pl[4]])
 
-        prev = np.concatenate([[last_bid], bid[:-1]])
-        finite_prev = ~np.isnan(prev)
-        up_t = (finite_prev & (bid > prev)).astype("int64")
-        down_t = (finite_prev & (bid < prev)).astype("int64")
+        up_t, down_t = _tick_direction(bid, last_bid)
 
         new_done = []
         for k, tf_us in enumerate((tf1_us, tf5_us)):

@@ -12,7 +12,7 @@ independent classic-algorithm implementation).
 
 TWO execution paths, gated on merge-table size (bpe_encode picks):
 
-* <= CODEGEN_MAX_MERGES (default 256): the symbol stream is a delimited
+* <= CODEGEN_MAX_MERGES (256): the symbol stream is a delimited
   string (each symbol wrapped in its own commas, so one literal `replace`
   per merge is exhaustive and boundary-safe), the merge table is
   constant-folded into a chain of JVM `replace` expressions and ids come
@@ -216,13 +216,12 @@ def _bpe_encode_udf(docs: DataFrame, text_col: str, id_col: str,
 def bpe_encode(docs: DataFrame, text_col: str = "text",
                id_col: str = "doc_id",
                merges: list[tuple[str, str]] | None = None,
-               codegen_max_merges: int = CODEGEN_MAX_MERGES,
                keep_cols: tuple = ()) -> DataFrame:
     """(doc_id[, *keep_cols], n_bpe_tokens: long, token_ids: array<int>) —
     real BPE token count + ids per document.
 
     merges: rank-ordered merge table (e.g. load_merges(path)); defaults to
-    the frozen demo table. Tables up to `codegen_max_merges` run as the
+    the frozen demo table. Tables up to CODEGEN_MAX_MERGES run as the
     zero-Python constant-folded replace chain; larger tables switch to the
     broadcast + pandas-UDF classic encoder (identical output).
 
@@ -240,7 +239,7 @@ def bpe_encode(docs: DataFrame, text_col: str = "text",
     # -1 non-ANSI, NULL ids) while the UDF path mapped None -> '' -> (0, []),
     # so crossing the size gate silently changed NULL-row semantics.
     docs = docs.withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
-    if len(merges) <= codegen_max_merges:
+    if len(merges) <= CODEGEN_MAX_MERGES:
         return _bpe_encode_codegen(docs, text_col, id_col, merges, vocab,
                                    keep_cols)
     return _bpe_encode_udf(docs, text_col, id_col, merges, vocab, keep_cols)

@@ -117,7 +117,6 @@ def bigram_lm_scores(docs: DataFrame, text_col: str = "text",
 def ccnet_buckets(docs: DataFrame, lang_col: str = "lang",
                   text_col: str = "text", id_col: str = "doc_id",
                   vocab_size: int = 24, alpha: float = 0.5,
-                  use_cutpoints: bool | None = None,
                   n_rows: int | None = None) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020, "CCNet:
     Extracting high quality monolingual datasets from web crawl data"):
@@ -127,37 +126,36 @@ def ccnet_buckets(docs: DataFrame, lang_col: str = "lang",
     perplexity and are excluded (CCNet discards them too).
     Returns (doc_id, lang, perplexity, bucket).
 
-    TWO bucketing paths behind the engine's standard size gate (round-4
-    review: the per-language ntile sort was the one skew-exposed window in
-    the corpus ops — a real crawl is ~45% English, so one sort task took
-    ~half the corpus):
+    TWO bucketing paths behind the engine's size gate
+    (engine.normalize.EXACT_QUANTILE_MAX_ROWS, read at call time; the
+    per-language ntile sort is skew-exposed — a real crawl is ~45% English,
+    so one sort task takes ~half the corpus):
 
-    * small (<= EXACT_QUANTILE_MAX_ROWS): exact equal-frequency ntile(3)
-      per language, id-asc tiebreak — deterministic, oracle-exact.
-    * large: per-language tercile CUTPOINTS via the shared
-      gated_quantile_agg (one partial-aggregated groupBy(lang) — no
-      per-language sort anywhere in the plan), broadcast as a G x 2 table
-      into a `when` chain. Equal-frequency up to quantile-sketch error and
-      boundary ties; identical to ntile when per-language counts are
-      divisible by 3 and perplexities are distinct (tests assert this).
-      This path scores twice (cutpoint pass + bucketing pass) — the same
-      stats-then-apply shape as engine.normalize.
+    * n_rows <= the gate: exact equal-frequency ntile(3) per language,
+      id-asc tiebreak — deterministic, oracle-exact.
+    * above it: per-language tercile CUTPOINTS from gated_quantile_agg
+      (which is then the approx_percentile sketch) in one partial-aggregated
+      groupBy(lang) — no per-language sort anywhere in the plan — broadcast
+      as a G x 2 table into a `when` chain. Equal-frequency up to
+      quantile-sketch error and boundary ties; identical to ntile when
+      per-language counts are divisible by 3 and perplexities are distinct
+      (tests assert this). This path scores twice (cutpoint pass +
+      bucketing pass) — the same stats-then-apply shape as
+      engine.normalize.
 
-    Gate inputs: pass `n_rows` (corpus row count) if known, else one cheap
-    docs.count() (parquet metadata) decides; `use_cutpoints` overrides."""
+    Pass `n_rows` (corpus row count) if known, else one cheap docs.count()
+    (parquet metadata) decides."""
     from pyspark.sql import Window
 
-    from ..engine.normalize import EXACT_QUANTILE_MAX_ROWS, gated_quantile_agg
+    from ..engine import normalize as N
 
     scores = bigram_lm_scores(docs, text_col=text_col, id_col=id_col,
                               vocab_size=vocab_size, alpha=alpha)
     j = (scores.filter(F.col("n_bigrams") > 0)
          .join(docs.select(id_col, lang_col), id_col))
-    if use_cutpoints is None:
-        if n_rows is None:
-            n_rows = docs.count()
-        use_cutpoints = n_rows > EXACT_QUANTILE_MAX_ROWS
-    if not use_cutpoints:
+    if n_rows is None:
+        n_rows = docs.count()
+    if n_rows <= N.EXACT_QUANTILE_MAX_ROWS:
         w = (Window.partitionBy(lang_col)
              .orderBy(F.col("perplexity").asc(), F.col(id_col).asc()))
         t = F.ntile(3).over(w)
@@ -165,16 +163,9 @@ def ccnet_buckets(docs: DataFrame, lang_col: str = "lang",
                   .otherwise("tail"))
         return j.select(id_col, lang_col, "perplexity",
                         bucket.alias("bucket"))
-    # forced cutpoints mode with an UNKNOWN row count must gate to the
-    # sketch: the whole point of this path is avoiding the exact
-    # `percentile` aggregate that buffers every per-language perplexity
-    # (passing 0 here selected exact — the OOM-at-scale path, round-5
-    # advice)
-    gate_rows = n_rows if n_rows is not None else EXACT_QUANTILE_MAX_ROWS + 1
     cuts = (j.groupBy(lang_col)
-            .agg(gated_quantile_agg(F.col("perplexity"),
-                                    [1.0 / 3.0, 2.0 / 3.0],
-                                    gate_rows)
+            .agg(N.gated_quantile_agg(F.col("perplexity"),
+                                      [1.0 / 3.0, 2.0 / 3.0], n_rows)
                  .alias("__q")))
     cuts = cuts.select(lang_col, F.col("__q")[0].alias("__c1"),
                        F.col("__q")[1].alias("__c2"))

@@ -412,10 +412,13 @@ def length_profile(docs: DataFrame, group_col: str = "source",
     whose length distribution collapses (truncation bug) or explodes
     (concatenation bug) shows up here before it skews packing and budgets.
 
-    Quantiles go through the engine's shared size gate
-    (engine.normalize.gated_quantile_agg): exact `percentile` below
-    EXACT_QUANTILE_MAX_ROWS, mergeable approx_percentile sketch above —
-    same partial-aggregated one-pass groupBy either way, no per-group sort.
+    Quantiles go through engine.normalize.gated_quantile_agg: exact
+    `percentile` at or below EXACT_QUANTILE_MAX_ROWS, mergeable
+    approx_percentile sketch above — the same partial-aggregated one-pass
+    groupBy either way, no per-group sort. Token counts are few distinct
+    small integers per source, so the percentile buffers stay small; the
+    windowed rank-pick (normalize.quantiles_frame) gave the same rows but
+    was slower here (q61 median 0.71 s -> 1.00 s at sf0.01).
     Pass `n_rows` when the corpus size is known to skip the count job."""
     from ..engine.normalize import gated_quantile_agg
 

@@ -141,16 +141,18 @@ def test_large_vocab_udf_path(spark):
         assert got[i]["n_bpe_tokens"] == len(syms), t
 
 
-def test_codegen_and_udf_paths_agree(spark):
+def test_codegen_and_udf_paths_agree(spark, monkeypatch):
     """The SAME mid-size table pushed through both paths (gate forced each
     way) produces identical rows."""
     merges = synth_merges(120)
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TEXTS)], "doc_id int, text string")
+    monkeypatch.setattr(B, "CODEGEN_MAX_MERGES", 1000)
     a = {r["doc_id"]: (r["n_bpe_tokens"], r["token_ids"]) for r in
-         B.bpe_encode(docs, merges=merges, codegen_max_merges=1000).collect()}
+         B.bpe_encode(docs, merges=merges).collect()}
+    monkeypatch.setattr(B, "CODEGEN_MAX_MERGES", 1)
     b = {r["doc_id"]: (r["n_bpe_tokens"], r["token_ids"]) for r in
-         B.bpe_encode(docs, merges=merges, codegen_max_merges=1).collect()}
+         B.bpe_encode(docs, merges=merges).collect()}
     assert a == b
 
 

@@ -852,10 +852,11 @@ def test_semantic_dedup_autosize(spark):
         S.SEMDEDUP_MAX_EXPECTED_PAIRS = old
 
 
-def test_ccnet_cutpoint_path_agrees(spark):
+def test_ccnet_cutpoint_path_agrees(spark, monkeypatch):
     """The de-skewed cutpoint path (no per-language sort) must agree with
     the exact ntile path when per-language counts divide by 3 and
     perplexities are distinct — the regime the size gate hands over in."""
+    from forex_feature_generator_spark.engine import normalize as N
     from forex_feature_generator_spark.ops.lm import ccnet_buckets
     rng = np.random.default_rng(5)
     vocab = [f"t{i}" for i in range(30)]
@@ -868,9 +869,11 @@ def test_ccnet_cutpoint_path_agrees(spark):
         rows.append((100 + i, " ".join(words), "de"))
     df = spark.createDataFrame(rows, "doc_id int, text string, lang string")
     exact = {(r["doc_id"]): (r["lang"], r["perplexity"], r["bucket"])
-             for r in ccnet_buckets(df, use_cutpoints=False).collect()}
+             for r in ccnet_buckets(df).collect()}
+    # a gate below the corpus size sends it down the cutpoint path
+    monkeypatch.setattr(N, "EXACT_QUANTILE_MAX_ROWS", len(rows) - 1)
     cut = {(r["doc_id"]): (r["lang"], r["perplexity"], r["bucket"])
-           for r in ccnet_buckets(df, use_cutpoints=True).collect()}
+           for r in ccnet_buckets(df).collect()}
     # fixture sanity: distinct perplexities per language
     for lang in ("en", "de"):
         ppls = [v[1] for v in exact.values() if v[0] == lang]
@@ -879,7 +882,7 @@ def test_ccnet_cutpoint_path_agrees(spark):
     # the large path's plan must not contain a per-language sort (ntile
     # window); its only window-free bucketing is a broadcast join + CASE
     import re
-    plan = ccnet_buckets(df, use_cutpoints=True)._jdf.queryExecution() \
+    plan = ccnet_buckets(df)._jdf.queryExecution() \
         .optimizedPlan().toString()
     assert not re.search(r"\bntile\(", plan)   # \b: don't match percentile(
 
@@ -906,17 +909,18 @@ def test_mixture_weights_validation(spark):
     assert out["a"]["weight"] > 0
 
 
-def test_bpe_null_text_both_paths(spark):
+def test_bpe_null_text_both_paths(spark, monkeypatch):
     """NULL text encodes as (0, []) on BOTH the codegen and the UDF path —
     crossing the size gate must not change NULL-row semantics (round-4
     review: codegen propagated NULL -> size(NULL) = -1)."""
-    from forex_feature_generator_spark.ops.bpe import MERGES, bpe_encode
+    from forex_feature_generator_spark.ops import bpe
     df = spark.createDataFrame(
         [(1, "low lower"), (2, None), (3, "")],
         "doc_id int, text string")
-    for gate in (len(MERGES), 0):        # codegen path, then UDF path
+    for gate in (len(bpe.MERGES), 0):    # codegen path, then UDF path
+        monkeypatch.setattr(bpe, "CODEGEN_MAX_MERGES", gate)
         got = {r["doc_id"]: (r["n_bpe_tokens"], r["token_ids"]) for r in
-               bpe_encode(df, codegen_max_merges=gate).collect()}
+               bpe.bpe_encode(df).collect()}
         assert got[2] == (0, []), f"gate={gate}"
         assert got[3] == (0, []), f"gate={gate}"
         assert got[1][0] > 0
